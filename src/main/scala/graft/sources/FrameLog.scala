@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   *
   *   [lsn: int64 BE][len: int32 BE][payload: len bytes]
   *
-  * The live pgcdc source shares every downstream stage; only the frame
-  * producer differs (PGReplicationStream vs this file). */
+  * The live pgcdc producers share every downstream stage; only the frame
+  * producer differs (a walsender via [[PgWireConduit]] vs this file). */
 object FrameLog {
 
   final case class Entry(lsn: Long, payload: Array[Byte])

@@ -1,87 +1,10 @@
 package graft.sources
 
-import java.util.{Map => JMap}
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.decode.{ChangeEventBuilder, PgOutputDecoder, SchemaRegistry}
-
-/** Replayable pgoutput frame source — DataSource V2, batch + micro-batch
-  * streaming (`spark.readStream.format("pgcdc-replay").option("path", …)`).
-  *
-  * This is the Spark realization of the reference's WAL tail (SURVEY.md
-  * §2.1 S1) with the walsender socket swapped for a durable frame log, so
-  * every downstream stage — offsets, decode, envelope, typed views,
-  * compaction — is exercised deterministically without Postgres (§7 step
-  * 3). A live source only replaces the frame producer.
-  *
-  * Design notes:
-  *  - Offsets are frame indexes (the file-log LSN analog); checkpointing
-  *    stores them durably; `commit(end)` is where a live source would send
-  *    WAL flush feedback — strictly AFTER the checkpoint commit, preserving
-  *    the reference's at-least-once contract (K2, stores.py:79-86).
-  *  - The replication protocol is a single totally-ordered cursor, so each
-  *    micro-batch plans ONE input partition (same as the reference's one
-  *    callback thread; reader.py:116-123). Parallelism comes from the
-  *    downstream shuffle (compaction, typed views), not the tail.
-  *  - Decode state (schema registry, open transaction) is rebuilt by
-  *    replaying the log prefix [0, start): frames are skipped cheaply
-  *    without emitting. A live source keeps the registry in the checkpoint
-  *    instead (K3).
-  *  - Options: `path` (frame log file), `maxFramesPerTrigger` (admission
-  *    control), `txn.markers` (emit 'B'/'C' sentinel rows for txn-atomic
-  *    assembly downstream), `messages` (surface 'M' logical decoding
-  *    messages as op="M" rows — the WAL audit channel).
-  */
-class FrameReplayProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "pgcdc-replay"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = Envelope.schema
-  override def getTable(
-      schema: StructType, partitioning: Array[Transform], properties: JMap[String, String]): Table =
-    new FrameReplayTable(properties.asScala.toMap)
-}
-
-final class FrameReplayTable(properties: Map[String, String]) extends Table with SupportsRead {
-  private val path = properties.getOrElse("path",
-    throw new IllegalArgumentException("pgcdc-replay requires option 'path'"))
-
-  override def name(): String = s"pgcdc-replay($path)"
-  override def schema(): StructType = Envelope.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val opts = properties ++ options.asScala
-    () => new FrameReplayScan(path, opts)
-  }
-}
-
-final class FrameReplayScan(path: String, options: Map[String, String]) extends Scan {
-  private val txnMarkers = options.get("txn.markers").exists(_.toBoolean)
-  private val messages = options.get("messages").exists(_.toBoolean)
-  private val maxPerTrigger = options.get("maxFramesPerTrigger").map(_.toLong)
-
-  override def readSchema(): StructType = Envelope.schema
-  override def description(): String = s"FrameReplayScan($path)"
-
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] =
-      Array(FrameRange(path, 0L, FrameLog.count(path), txnMarkers, messages))
-    override def createReaderFactory(): PartitionReaderFactory = new FrameReaderFactory
-  }
-
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new FrameReplayMicroBatch(path, maxPerTrigger, txnMarkers, messages)
-}
+import graft.decode.{ChangeEventBuilder, SchemaRegistry}
 
 final case class FrameOffset(idx: Long) extends Offset {
   override def json(): String = idx.toString
@@ -91,6 +14,35 @@ final case class FrameRange(path: String, from: Long, until: Long,
     txnMarkers: Boolean, messages: Boolean = false)
   extends InputPartition
 
+/** The `producer=framelog` stream of the `pgcdc` source: a durable
+  * [[FrameLog]] replayed through the same decode and envelope stages as a
+  * live slot, so offsets, typed views and compaction run deterministically
+  * without Postgres (SURVEY.md §7 step 3).
+  *
+  * Design notes:
+  *  - Offsets are frame indexes, not LSNs. A recorded log carries raw wire
+  *    positions: Relation frames at 0, and Begin/Commit markers sharing the
+  *    LSN of a neighbouring change. An LSN offset would have to renumber
+  *    those frames (as [[PgCdcMicroBatch]] does for a live walsender), which
+  *    changes the `lsn` of marker rows; with frame indexes every emitted row
+  *    keeps its raw commit LSN, and a log with non-monotone positions
+  *    replays as recorded.
+  *  - `commit(end)` is where a live source sends WAL flush feedback —
+  *    strictly after the checkpoint commit, preserving the reference's
+  *    at-least-once contract (K2, stores.py:79-86). A log needs none.
+  *  - The replication protocol is a single totally-ordered cursor, so each
+  *    micro-batch plans ONE input partition (the reference's one callback
+  *    thread; reader.py:116-123). Parallelism comes from the downstream
+  *    shuffle (compaction, typed views), not the tail.
+  *  - Decode state (schema registry, open transaction) is rebuilt by
+  *    replaying the log prefix [0, start): frames are skipped cheaply
+  *    without emitting. A live source keeps the registry in the checkpoint
+  *    instead (K3).
+  *  - Options: `path` (frame log file), `maxFramesPerTrigger` (admission
+  *    control), `txn.markers` (emit 'B'/'C' sentinel rows for txn-atomic
+  *    assembly downstream), `messages` (surface 'M' logical decoding
+  *    messages as op="M" rows — the WAL audit channel).
+  */
 final class FrameReplayMicroBatch(
     path: String, maxPerTrigger: Option[Long], txnMarkers: Boolean,
     messages: Boolean = false)

@@ -60,6 +60,18 @@ object PgCatalog {
     * inject SQL. */
   def sqlLiteral(s: String): String = "'" + s.replace("'", "''") + "'"
 
+  /** Double-quoted Postgres identifier (embedded quotes doubled) — names
+    * from config/options must not break or inject into generated SQL or
+    * replication commands. */
+  def quoteIdent(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
+
+  /** Possibly schema-qualified name, quoted per dot-separated segment
+    * ("public"."t") — the one convention for every SQL-emitting surface
+    * (snapshot readers, the write-back sink). An identifier containing a
+    * literal dot is not expressible: it always splits. */
+  def quoteQualified(name: String): String =
+    name.split('.').map(quoteIdent).mkString(".")
+
   /** The two catalog queries the reference issues (utils.py:79-94). */
   def formatTypeSql(typeOid: Int, typeMod: Int): String =
     s"SELECT format_type($typeOid, $typeMod)"

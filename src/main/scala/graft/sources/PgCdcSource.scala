@@ -7,41 +7,38 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Live Postgres CDC source (`format("pgcdc")`) — the production face of
-  * the engine (SURVEY.md §2.1 S1/S2/K2). The streaming machinery (offsets,
-  * decode, envelope) is shared with the replay source; only the frame
-  * producer differs:
+/** The Postgres CDC source (`format("pgcdc")`) — the production face of
+  * the engine (SURVEY.md §2.1 S1/S2/K2). Offsets, decode and envelope are
+  * shared; only the frame producer differs:
   *
-  *  - `producer=framelog` (default here): frames come from a [[FrameLog]]
-  *    file — full wire fidelity without a database. This is also the
-  *    recorded-WAL replay path for disaster recovery drills.
-  *  - `producer=pgjdbc`: frames come from a live replication slot via the
-  *    PostgreSQL JDBC driver's replication API (`START_REPLICATION SLOT …
-  *    LOGICAL`, proto_version 1, publication_names). The driver is loaded
-  *    reflectively: this build environment ships no PostgreSQL driver jar,
-  *    so the path fails fast with a clear message instead of linking
-  *    against an unavailable dependency. The decode/envelope/commit path it
-  *    would feed is byte-identical to the replay source's (same pgoutput
-  *    frames), which is what the golden-frame suite pins down.
+  *  - `producer=framelog` (default): frames come from a [[FrameLog]] file
+  *    — full wire fidelity without a database, and the recorded-WAL replay
+  *    path for disaster-recovery drills. The only producer that also
+  *    supports batch reads (`spark.read`); see [[FrameReplayMicroBatch]].
+  *  - `producer=pgwire`: frames come from a live replication slot over the
+  *    in-repo protocol-v3 client ([[PgWireConduit]]: `START_REPLICATION
+  *    SLOT … LOGICAL`, publication_names, standby-status feedback).
+  *  - `producer=conduit`: frames come from a [[ReplicationConduit]]
+  *    registered under `conduit.name` ([[PgCdcConduits]]) — scripted
+  *    walsenders in tests and benchmarks.
   *
-  * Offset/fault-tolerance contract (the reference's K2, stores.py:79-86):
-  * offsets are LSNs; Spark's checkpoint is the source of truth;
-  * `commit(end)` → `setFlushedLSN(end)` so Postgres only discards WAL the
-  * engine has durably processed — at-least-once delivery with replay on
-  * crash, never data loss.
+  * Offset/fault-tolerance contract for the live producers (the reference's
+  * K2, stores.py:79-86): offsets are LSNs; Spark's checkpoint is the source
+  * of truth; `commit(end)` → `setFlushedLSN(end)` so Postgres only discards
+  * WAL the engine has durably processed — at-least-once delivery with
+  * replay on crash, never data loss.
   *
-  * Initial sync (S2, reader.py:165-176 + stores.py:88-101): on first start
-  * with no checkpoint, [[PgSnapshotSync]] creates the slot, captures the
-  * exported consistent snapshot name, batch-reads each published table
-  * pinned to that snapshot over plain JDBC, and the stream then begins at
-  * the slot's `consistent_point` — snapshot ∪ stream = exact table state
-  * with no gap or overlap.
+  * Initial sync (S2, reader.py:165-176 + stores.py:88-101):
+  * [[PgWireSnapshot]] creates the slot, captures the exported consistent
+  * snapshot name and reads each table pinned to that snapshot; the stream
+  * then begins at the slot's `consistent_point` — snapshot ∪ stream = exact
+  * table state with no gap or overlap.
   */
 class PgCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pgcdc"
@@ -57,7 +54,7 @@ class PgCdcProvider extends TableProvider with DataSourceRegister {
 
 /** Parsed + validated options for the pgcdc source. */
 object PgCdcOptions {
-  val Producers = Set("framelog", "pgjdbc", "conduit", "pgwire")
+  val Producers = Set("framelog", "conduit", "pgwire")
 
   def validate(opts: Map[String, String]): Unit = {
     val producer = opts.getOrElse("producer", "framelog")
@@ -68,12 +65,6 @@ object PgCdcOptions {
       case "framelog" =>
         if (!opts.contains("path"))
           throw new IllegalArgumentException("pgcdc: producer=framelog requires option 'path'")
-      case "pgjdbc" =>
-        Seq("dsn", "slot", "publication").filterNot(opts.contains) match {
-          case Nil => ()
-          case missing => throw new IllegalArgumentException(
-            s"pgcdc: producer=pgjdbc requires options ${missing.mkString(", ")}")
-        }
       case "conduit" =>
         if (!opts.contains("conduit.name"))
           throw new IllegalArgumentException(
@@ -94,7 +85,7 @@ final class PgCdcTable(opts: Map[String, String]) extends Table with SupportsRea
   override def name(): String = s"pgcdc(${opts.getOrElse("slot", opts.getOrElse("path", "?"))})"
   override def schema(): StructType = Envelope.schema
   override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
+    Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     val merged = opts ++ options.asScala
@@ -118,74 +109,64 @@ object PgLsn {
 }
 
 final class PgCdcScan(opts: Map[String, String]) extends Scan {
+  private val producer = opts.getOrElse("producer", "framelog")
+  private val maxFramesPerTrigger = opts.get("maxFramesPerTrigger").map(_.toLong)
+  private val txnMarkers = opts.get("txn.markers").exists(_.toBoolean)
+  private val messages = opts.get("messages").exists(_.toBoolean)
+
   override def readSchema(): StructType = Envelope.schema
-  override def description(): String = s"PgCdcScan(${opts.getOrElse("producer", "framelog")})"
+  override def description(): String = s"PgCdcScan($producer)"
+
+  /** A batch read decodes the whole log as one partition; a live slot has
+    * no end to read up to, so only the frame log supports it. */
+  override def toBatch: Batch = {
+    if (producer != "framelog")
+      throw new UnsupportedOperationException(
+        s"pgcdc: batch reads need producer=framelog (got producer=$producer); " +
+          "read a live producer with spark.readStream")
+    val path = opts("path")
+    new Batch {
+      override def planInputPartitions(): Array[InputPartition] =
+        Array(FrameRange(path, 0L, FrameLog.count(path), txnMarkers, messages))
+      override def createReaderFactory(): PartitionReaderFactory = new FrameReaderFactory
+    }
+  }
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    opts.getOrElse("producer", "framelog") match {
+    producer match {
       case "framelog" =>
-        new FrameReplayMicroBatch(opts("path"),
-          opts.get("maxFramesPerTrigger").map(_.toLong),
-          opts.get("txn.markers").exists(_.toBoolean),
-          opts.get("messages").exists(_.toBoolean))
-      case "pgjdbc" =>
-        PgJdbcReplication.requireDriver()
-        new PgCdcMicroBatch(
-          PgJdbcConduit.open(opts("dsn"), opts("slot"), opts("publication")),
-          opts.get("startLsn").map(PgLsn.parse).getOrElse(0L),
-          opts.get("maxFramesPerTrigger").map(_.toLong),
-          opts.get("txn.markers").exists(_.toBoolean),
-          checkpointLocation,
-          opts.get("messages").exists(_.toBoolean),
-          maxBytesPerTrigger = opts.get("maxBytesPerTrigger").map(_.toLong),
-          minPartitions = opts.get("minPartitions").map(_.toInt).getOrElse(1),
-          conduitFactory = Some(() =>
-            PgJdbcConduit.open(opts("dsn"), opts("slot"), opts("publication"))),
-          reconnectRetries = opts.get("reconnectRetries").map(_.toInt).getOrElse(0),
-          reconnectBackoffMs =
-            opts.get("reconnectBackoffMs").map(_.toLong).getOrElse(1000L))
+        new FrameReplayMicroBatch(opts("path"), maxFramesPerTrigger, txnMarkers, messages)
+      // re-acquire under the same name: tests register a conduit whose
+      // start() re-arms it after an injected failure
       case "conduit" =>
-        new PgCdcMicroBatch(
-          PgCdcConduits.acquire(opts("conduit.name")),
-          opts.get("startLsn").map(PgLsn.parse).getOrElse(0L),
-          opts.get("maxFramesPerTrigger").map(_.toLong),
-          opts.get("txn.markers").exists(_.toBoolean),
-          checkpointLocation,
-          opts.get("messages").exists(_.toBoolean),
-          maxBytesPerTrigger = opts.get("maxBytesPerTrigger").map(_.toLong),
-          minPartitions = opts.get("minPartitions").map(_.toInt).getOrElse(1),
-          // re-acquire under the same name: tests register a conduit whose
-          // start() re-arms it after an injected failure
-          conduitFactory = Some(() => PgCdcConduits.acquire(opts("conduit.name"))),
-          reconnectRetries = opts.get("reconnectRetries").map(_.toInt).getOrElse(0),
-          reconnectBackoffMs =
-            opts.get("reconnectBackoffMs").map(_.toLong).getOrElse(1000L))
-      case "pgwire" =>
-        // Driverless live path: the in-repo protocol-v3 client (PgWire).
-        // Same micro-batch machinery as pgjdbc — only the socket layer
-        // differs, and this one ships with the library.
-        new PgCdcMicroBatch(
-          PgWireConduit.fromOptions(opts),
-          opts.get("startLsn").map(PgLsn.parse).getOrElse(0L),
-          opts.get("maxFramesPerTrigger").map(_.toLong),
-          opts.get("txn.markers").exists(_.toBoolean),
-          checkpointLocation,
-          opts.get("messages").exists(_.toBoolean),
-          maxBytesPerTrigger = opts.get("maxBytesPerTrigger").map(_.toLong),
-          minPartitions = opts.get("minPartitions").map(_.toInt).getOrElse(1),
-          conduitFactory = Some(() => PgWireConduit.fromOptions(opts)),
-          reconnectRetries = opts.get("reconnectRetries").map(_.toInt).getOrElse(0),
-          reconnectBackoffMs =
-            opts.get("reconnectBackoffMs").map(_.toLong).getOrElse(1000L))
+        liveStream(() => PgCdcConduits.acquire(opts("conduit.name")), checkpointLocation)
+      case "pgwire" => liveStream(() => PgWireConduit.fromOptions(opts), checkpointLocation)
     }
+
+  /** The one stream every live producer shares; a producer supplies only
+    * how to open its conduit, at start and again on each reconnect. */
+  private def liveStream(conduitFactory: () => ReplicationConduit,
+      checkpointLocation: String): PgCdcMicroBatch =
+    new PgCdcMicroBatch(
+      conduitFactory(),
+      opts.get("startLsn").map(PgLsn.parse).getOrElse(0L),
+      maxFramesPerTrigger,
+      txnMarkers,
+      checkpointLocation,
+      messages,
+      maxBytesPerTrigger = opts.get("maxBytesPerTrigger").map(_.toLong),
+      minPartitions = opts.get("minPartitions").map(_.toInt).getOrElse(1),
+      conduitFactory = Some(conduitFactory),
+      reconnectRetries = opts.get("reconnectRetries").map(_.toInt).getOrElse(0),
+      reconnectBackoffMs =
+        opts.get("reconnectBackoffMs").map(_.toLong).getOrElse(1000L))
 }
 
 /** The narrow waist between the live micro-batch machinery and a walsender
-  * socket — exactly the surface pgjdbc's `PGReplicationStream` provides.
-  * [[PgJdbcConduit]] implements it over a real replication connection; tests
-  * and disaster-recovery drills implement it over scripted frames
-  * ([[PgCdcConduits]]), so the FULL offset / decode / commit / feedback
-  * machinery above it is exercised without a server (the reference's
+  * socket. [[PgWireConduit]] implements it over a real replication
+  * connection; tests and disaster-recovery drills implement it over
+  * scripted frames ([[PgCdcConduits]]), so the FULL offset / decode /
+  * commit / feedback machinery above it is exercised without a server (the reference's
   * integration floor, test_reader.py:130-139, minus the database). */
 trait ReplicationConduit extends AutoCloseable {
   /** Begin streaming frames with LSN strictly greater than `afterLsn`
@@ -739,223 +720,4 @@ final class PgCdcMicroBatch(
   }
 
   override def stop(): Unit = activeConduit.close()
-}
-
-/** Reflection shim for the PostgreSQL JDBC replication API, so this module
-  * compiles with zero external dependencies. */
-object PgJdbcReplication {
-  val DriverClass = "org.postgresql.Driver"
-
-  def driverAvailable: Boolean =
-    try { Class.forName(DriverClass); true } catch { case _: ClassNotFoundException => false }
-
-  def requireDriver(): Unit =
-    if (!driverAvailable)
-      throw new UnsupportedOperationException(
-        s"pgcdc: $DriverClass not on the classpath (offline build environment). " +
-          "The live path opens a replication connection and issues START_REPLICATION " +
-          "SLOT <slot> LOGICAL <lsn> (proto_version '1', publication_names '<pub>'), " +
-          "feeding the same PgOutputDecoder as the replay source.")
-}
-
-/** [[ReplicationConduit]] over the PostgreSQL JDBC driver's replication API,
-  * loaded reflectively (this offline build ships no driver jar; with
-  * org.postgresql:postgresql on the classpath this is the production path —
-  * `PgJdbcReplication.requireDriver()` gates construction). Mirrors the
-  * reference's psycopg2 wiring (reader.py:125-150): a `replication=database`
-  * connection, `START_REPLICATION SLOT … LOGICAL` with proto_version 1 +
-  * publication_names, non-blocking `readPending`, and
-  * `setFlushedLSN`/`setAppliedLSN` + `forceUpdateStatus` feedback. The
-  * machinery above this class ([[PgCdcMicroBatch]]) is conformance-tested
-  * against a scripted conduit; only these ~60 reflective lines require a
-  * live server to exercise. */
-object PgJdbcConduit {
-  def open(dsn: String, slot: String, publication: String): ReplicationConduit =
-    new PgJdbcConduit(dsn, slot, publication)
-}
-
-final class PgJdbcConduit(dsn: String, slot: String, publication: String)
-    extends ReplicationConduit {
-
-  private var conn: java.sql.Connection = _
-  private var stream: AnyRef = _ // org.postgresql.replication.PGReplicationStream
-  // PGReplicationStream is not thread-safe; the idle-keepalive thread and
-  // the poll loop both touch it, so every stream call holds this.
-  private val streamLock = new Object
-  @volatile private var running = false
-  private var keepalive: Thread = _
-
-  private def call(obj: AnyRef, name: String, args: (Class[_], AnyRef)*): AnyRef = {
-    val m = obj.getClass.getMethod(name, args.map(_._1): _*)
-    m.setAccessible(true)
-    m.invoke(obj, args.map(_._2): _*)
-  }
-
-  private def lsnOf(v: Long): (Class[_], AnyRef) = {
-    val c = Class.forName("org.postgresql.replication.LogSequenceNumber")
-    (c, c.getMethod("valueOf", classOf[Long]).invoke(null, java.lang.Long.valueOf(v)))
-  }
-
-  override def start(afterLsn: Long): Unit = {
-    val props = new java.util.Properties
-    props.setProperty("replication", "database")
-    props.setProperty("assumeMinServerVersion", "10")
-    props.setProperty("preferQueryMode", "simple")
-    conn = java.sql.DriverManager.getConnection(dsn, props)
-    val pgConn: AnyRef = conn.unwrap(
-      Class.forName("org.postgresql.PGConnection").asInstanceOf[Class[AnyRef]])
-    val api = call(pgConn, "getReplicationAPI")
-    var b = call(call(api, "replicationStream"), "logical")
-    b = call(b, "withSlotName", (classOf[String], slot))
-    if (afterLsn > 0L) b = call(b, "withStartPosition", lsnOf(afterLsn))
-    b = call(b, "withSlotOption",
-      (classOf[String], "proto_version"), (classOf[Object], "1"))
-    b = call(b, "withSlotOption",
-      (classOf[String], "publication_names"), (classOf[Object], publication))
-    // Status updates at most every 10s while read()s are flowing — pgjdbc
-    // only sends them from inside read calls, so this alone is not enough…
-    b = call(b, "withStatusInterval",
-      (java.lang.Integer.TYPE, java.lang.Integer.valueOf(10)),
-      (classOf[java.util.concurrent.TimeUnit], java.util.concurrent.TimeUnit.SECONDS))
-    stream = call(b, "start")
-    // …so an idle daemon forces one between micro-batches too: with no
-    // read()/feedback traffic, a default wal_sender_timeout=60s server
-    // would otherwise drop the connection (psycopg2's C consume loop did
-    // this implicitly for the reference, reader.py:116-123).
-    running = true
-    keepalive = new Thread(() => {
-      while (running) {
-        try Thread.sleep(10000L) catch { case _: InterruptedException => () }
-        if (running) streamLock.synchronized {
-          try call(stream, "forceUpdateStatus") catch { case _: Throwable => () }
-        }
-      }
-    }, "pgjdbc-keepalive")
-    keepalive.setDaemon(true)
-    keepalive.start()
-  }
-
-  override def read(): Option[(Long, Array[Byte])] = streamLock.synchronized {
-    Option(call(stream, "readPending")).map { buf0 =>
-      val buf = buf0.asInstanceOf[java.nio.ByteBuffer]
-      val bytes = new Array[Byte](buf.remaining())
-      buf.get(bytes)
-      val lsn = call(call(stream, "getLastReceiveLSN"), "asLong")
-        .asInstanceOf[java.lang.Long].longValue()
-      lastReceived = math.max(lastReceived, lsn)
-      (lsn, bytes)
-    }
-  }
-
-  override def setFlushedLSN(lsn: Long): Unit = streamLock.synchronized {
-    call(stream, "setFlushedLSN", lsnOf(lsn))
-    call(stream, "setAppliedLSN", lsnOf(lsn))
-    call(stream, "forceUpdateStatus")
-    lastFlushed = math.max(lastFlushed, lsn)
-  }
-
-  @volatile private var lastReceived = 0L
-  @volatile private var lastFlushed = 0L
-  override def walPositions: Option[(Long, Long)] = Some((lastReceived, lastFlushed))
-
-  override def close(): Unit = {
-    running = false
-    if (keepalive != null) keepalive.interrupt()
-    streamLock.synchronized {
-      if (stream != null) call(stream, "close")
-    }
-    if (conn != null) conn.close()
-  }
-}
-
-/** Consistent-snapshot initial sync over plain JDBC (S2). Works with any
-  * JDBC driver on the classpath; the SQL is standard Postgres catalog
-  * access (public docs: logicaldecoding-snapshot). */
-object PgSnapshotSync {
-
-  /** Double-quoted Postgres identifier (embedded quotes doubled) — names
-    * from config/options must not break or inject into bootstrap SQL. */
-  def quoteIdent(s: String): String = "\"" + s.replace("\"", "\"\"") + "\""
-
-  /** Possibly schema-qualified name, quoted per dot-separated segment
-    * ("public"."t") — the ONE shared convention for every SQL-emitting
-    * surface (snapshot readers, catalog bootstrap, the write-back sink).
-    * Limitation, by convention: an identifier containing a LITERAL dot is
-    * not expressible (it always splits) — true of every call site since
-    * round 4, now in one place. */
-  def quoteQualified(name: String): String =
-    name.split('.').map(quoteIdent).mkString(".")
-
-  /** Postgres wire-text LSN ("16/B3748F2C") ↔ the 64-bit integer offsets
-    * the engine uses (models.py keeps int LSNs; the server speaks text). */
-  def lsnFromText(s: String): Long = s.split('/') match {
-    case Array(hi, lo) => (java.lang.Long.parseLong(hi, 16) << 32) |
-      java.lang.Long.parseLong(lo, 16)
-    case _ => throw new IllegalArgumentException(s"not an LSN: '$s'")
-  }
-  def lsnToText(lsn: Long): String =
-    f"${lsn >>> 32}%X/${lsn & 0xffffffffL}%X"
-
-  /** What `CREATE_REPLICATION_SLOT … EXPORT_SNAPSHOT` returns (reference
-    * `SlotInitInfo`, models.py:55-61): the stream must start at
-    * `consistentPoint` and the base reads must pin `snapshotName`. */
-  final case class SlotInit(
-      slotName: String, consistentPoint: Long, snapshotName: String, plugin: String)
-
-  /** The statements a first start issues, in order. Exposed as data so the
-    * sequence is unit-testable without a live database. */
-  def bootstrapStatements(slot: String, publication: String): Seq[String] = Seq(
-    s"CREATE_REPLICATION_SLOT ${quoteIdent(slot)} LOGICAL pgoutput EXPORT_SNAPSHOT",
-    "BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ",
-    "SET TRANSACTION SNAPSHOT '<snapshot-name-from-create>'",
-    s"SELECT schemaname, tablename FROM pg_publication_tables WHERE pubname = ${PgCatalog.sqlLiteral(publication)}",
-    "-- per table: SELECT * (batch JDBC read pinned to the snapshot)",
-    "COMMIT")
-
-  /** Execute the S2 bootstrap against an injected statement runner (live =
-    * a JDBC session; tests = a scripted runner, the same seam PgCatalog
-    * uses). Creates the slot, pins the session to the exported snapshot,
-    * and enumerates the published tables. Returns the slot info (stream
-    * start = `consistentPoint`) and one escape-safe `SELECT *` per table
-    * for the caller to run IN THE SAME pinned session, after which the
-    * caller invokes the returned `commit`. snapshot ∪ stream-from-
-    * consistentPoint = exact table state, no gap or overlap
-    * (reader.py:165-176 + stores.py:88-101). */
-  def bootstrap(run: String => Seq[Seq[Any]], slot: String, publication: String)
-      : (SlotInit, Seq[(String, String)], () => Unit) = {
-    val created = run(
-      s"CREATE_REPLICATION_SLOT ${quoteIdent(slot)} LOGICAL pgoutput EXPORT_SNAPSHOT")
-    require(created.nonEmpty && created.head.size >= 4,
-      "CREATE_REPLICATION_SLOT returned no (slot_name, consistent_point, snapshot_name, output_plugin) row")
-    val r = created.head
-    val info = SlotInit(r(0).toString, lsnFromText(r(1).toString),
-      r(2).toString, r(3).toString)
-    run("BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ")
-    run(s"SET TRANSACTION SNAPSHOT ${PgCatalog.sqlLiteral(info.snapshotName)}")
-    val tables = run(
-      "SELECT schemaname, tablename FROM pg_publication_tables " +
-        s"WHERE pubname = ${PgCatalog.sqlLiteral(publication)}")
-    val reads = tables.map { row =>
-      val (ns, t) = (row(0).toString, row(1).toString)
-      s"$ns.$t" -> s"SELECT * FROM ${quoteIdent(ns)}.${quoteIdent(t)}"
-    }
-    (info, reads, () => { run("COMMIT"); () })
-  }
-
-  /** Batch-read one published table pinned to an exported snapshot. The
-    * returned DataFrame is written as the base table; the stream then starts
-    * at the slot's consistent point, so base ∪ stream has no gap/overlap. */
-  def snapshotRead(
-      spark: org.apache.spark.sql.SparkSession,
-      jdbcUrl: String, table: String, snapshotName: String): org.apache.spark.sql.DataFrame = {
-    PgJdbcReplication.requireDriver()
-    spark.read.format("jdbc")
-      .option("url", jdbcUrl)
-      .option("dbtable",
-        s"(SELECT * FROM ${quoteQualified(table)}) AS snap")
-      .option("sessionInitStatement",
-        s"BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ; " +
-          s"SET TRANSACTION SNAPSHOT ${PgCatalog.sqlLiteral(snapshotName)}")
-      .load()
-  }
 }

@@ -12,9 +12,8 @@ import java.nio.charset.StandardCharsets.UTF_8
   * CopyBoth stream that carries pgoutput frames. Implemented from the
   * public protocol documentation (postgresql.org/docs/current/protocol.html
   * — message formats, and protocol-replication for XLogData / keepalive /
-  * standby-status-update); no driver jar involved, so the LIVE replication
-  * path is exercisable in this offline build where pgjdbc
-  * ([[PgJdbcConduit]]) cannot even load.
+  * standby-status-update); no driver jar involved, so the live replication
+  * path needs nothing beyond the JDK.
   *
   * Scope is deliberately narrow: trust, cleartext-password, or
   * SCRAM-SHA-256 auth (RFC 5802/7677 — the PG ≥ 14 `password_encryption`
@@ -499,8 +498,7 @@ private[sources] final class ScramClient(password: String,
   * Keepalive discipline: a status update goes out (1) immediately on flush
   * feedback, (2) whenever the server sets reply-requested, and (3) from an
   * idle daemon at `statusIntervalMs` so a quiet stream between micro-batches
-  * never trips `wal_sender_timeout` — the gap VERDICT r3 flagged in the
-  * pgjdbc path, closed structurally here. */
+  * never trips `wal_sender_timeout`. */
 final class PgWireConduit(
     host: String, port: Int, db: String, user: String,
     password: Option[String], slot: String, publication: String,
@@ -553,6 +551,20 @@ final class PgWireConduit(
     }
   }
 
+  /** `START_REPLICATION` resuming after `afterLsn`. The publication travels
+    * as a string literal (pgoutput parses it as its publication_names
+    * list), the slot as a quoted identifier. */
+  private[sources] def startReplicationCommand(afterLsn: Long): String = {
+    val opts = Seq(
+      Some(s"proto_version '$protoVersion'"),
+      Some(s"publication_names ${PgCatalog.sqlLiteral(publication)}"),
+      if (streaming) Some("streaming 'on'") else None,
+      if (twoPhase) Some("two_phase 'true'") else None,
+      if (messages) Some("messages 'true'") else None,
+      if (binary) Some("binary 'true'") else None).flatten.mkString(", ")
+    s"START_REPLICATION SLOT ${PgCatalog.quoteIdent(slot)} LOGICAL ${PgLsn.format(afterLsn)} ($opts)"
+  }
+
   override def start(afterLsn: Long): Unit = {
     conn = new PgWireConnection(host, port, db, user, password,
       replication = true, ssl = ssl,
@@ -573,22 +585,12 @@ final class PgWireConduit(
     try conn.simpleQuery("SET timezone = 'UTC'")
     catch { case _: java.sql.SQLException => () }
     if (createSlot) {
-      val kind = if (temporarySlot) "TEMPORARY LOGICAL" else "LOGICAL"
-      val slotOpts = if (twoPhase) " (TWO_PHASE)" else ""
-      try conn.simpleQuery(s"""CREATE_REPLICATION_SLOT "$slot" $kind pgoutput$slotOpts""")
+      try conn.simpleQuery(PgWireConduit.createSlotCommand(slot, temporarySlot, twoPhase))
       catch {
         case e: java.sql.SQLException if e.getMessage.contains("42710") => () // already exists
       }
     }
-    val opts = Seq(
-      Some(s"proto_version '$protoVersion'"),
-      Some(s"publication_names '$publication'"),
-      if (streaming) Some("streaming 'on'") else None,
-      if (twoPhase) Some("two_phase 'true'") else None,
-      if (messages) Some("messages 'true'") else None,
-      if (binary) Some("binary 'true'") else None).flatten.mkString(", ")
-    conn.enterCopyBoth(
-      s"""START_REPLICATION SLOT "$slot" LOGICAL ${PgLsn.format(afterLsn)} ($opts)""")
+    conn.enterCopyBoth(startReplicationCommand(afterLsn))
     // The resume point is consumer ground truth by definition: the caller
     // restarts from its durable checkpoint.
     ack.onConsumerFlush(afterLsn)
@@ -738,10 +740,10 @@ final class AckLedger {
   def reported: Long = math.max(consumerFlushed, autoConfirmed)
 }
 
-/** Driverless consistent-snapshot initial sync (the S2 backfill half,
-  * without the JDBC driver [[PgSnapshotSync]] needs): CREATE_REPLICATION_SLOT
-  * exports a snapshot name alongside the slot's consistent point; any number
-  * of OTHER connections can pin transactions to that snapshot (`SET
+/** Driverless consistent-snapshot initial sync (the S2 backfill half):
+  * CREATE_REPLICATION_SLOT exports a snapshot name alongside the slot's
+  * consistent point; any number of OTHER connections can pin transactions
+  * to that snapshot (`SET
   * TRANSACTION SNAPSHOT`) — the mechanism parallel pg_dump uses — so the
   * base-table read distributes across executors in pk-range chunks while
   * the slot guarantees the tail starts exactly where every chunk's view
@@ -758,9 +760,8 @@ object PgWireSnapshot {
     * chunk transaction has begun — closing it invalidates the export. */
   def createSlotWithSnapshot(conn: PgWireConnection, slot: String,
       twoPhase: Boolean = false): (Long, String) = {
-    val slotOpts = if (twoPhase) " (TWO_PHASE)" else ""
     val row = conn.simpleQuery(
-      s"""CREATE_REPLICATION_SLOT "$slot" LOGICAL pgoutput$slotOpts""").head
+      PgWireConduit.createSlotCommand(slot, temporary = false, twoPhase)).head
     // columns: slot_name, consistent_point, snapshot_name, output_plugin
     (PgLsn.parse(row(1)), row(2))
   }
@@ -776,8 +777,8 @@ object PgWireSnapshot {
     import spark.implicits._
     def connect() = new PgWireConnection(host, port, db, user, password,
       ssl = ssl, sslRootCert = sslRootCert, sslVerifyFull = sslVerifyFull)
-    val qTable = PgSnapshotSync.quoteQualified(table)
-    val qPk = PgSnapshotSync.quoteIdent(pkCol)
+    val qTable = PgCatalog.quoteQualified(table)
+    val qPk = PgCatalog.quoteIdent(pkCol)
     val snapLit = PgCatalog.sqlLiteral(snapshotName)
     // pin the same output-format GUCs as the walsender session (hex bytea,
     // UTC timestamptz text) so backfill rows and tail rows render
@@ -858,8 +859,8 @@ object PgWireSnapshot {
       c.simpleQuery("SET bytea_output = hex; SET timezone = 'UTC'")
       c
     }
-    val qTable = PgSnapshotSync.quoteQualified(table)
-    val qPk = PgSnapshotSync.quoteIdent(pkCol)
+    val qTable = PgCatalog.quoteQualified(table)
+    val qPk = PgCatalog.quoteIdent(pkCol)
     def walLsn(c: PgWireConnection): Long =
       PgLsn.parse(c.simpleQuery("SELECT pg_current_wal_lsn()").head.head)
     val bounds = {
@@ -896,6 +897,13 @@ object PgWireSnapshot {
 }
 
 object PgWireConduit {
+  /** `CREATE_REPLICATION_SLOT` for a pgoutput slot, the name quoted. */
+  def createSlotCommand(slot: String, temporary: Boolean, twoPhase: Boolean): String = {
+    val kind = if (temporary) "TEMPORARY LOGICAL" else "LOGICAL"
+    val slotOpts = if (twoPhase) " (TWO_PHASE)" else ""
+    s"CREATE_REPLICATION_SLOT ${PgCatalog.quoteIdent(slot)} $kind pgoutput$slotOpts"
+  }
+
   /** Options-driven constructor for the DSv2 source (`producer=pgwire`). */
   def fromOptions(opts: Map[String, String]): PgWireConduit = {
     // libpq sslmode parity: disable (default) | require | verify-ca |

@@ -8,7 +8,7 @@ import graft.cdc.Cdc
 import graft.decode.Relation
 
 /** Structured-streaming surface (SURVEY.md §2.2 Streaming): envelope
-  * streams from the pgcdc sources, event-time windows + watermarks,
+  * streams from the pgcdc source, event-time windows + watermarks,
   * stateful dedup, txn-atomic assembly, and the foreachBatch CDC upsert
   * sink (K1/K2's Spark realization). */
 object Streams {
@@ -17,7 +17,7 @@ object Streams {
   def envelopeStream(spark: SparkSession, frameLogPath: String,
       maxFramesPerTrigger: Option[Long] = None,
       txnMarkers: Boolean = false): DataFrame = {
-    val r = spark.readStream.format("graft.sources.FrameReplayProvider")
+    val r = spark.readStream.format("pgcdc")
       .option("path", frameLogPath)
       .option("txn.markers", txnMarkers.toString)
     maxFramesPerTrigger.foreach(n => r.option("maxFramesPerTrigger", n.toString))
@@ -1766,7 +1766,7 @@ object Streams {
       nudge: Boolean = true,
       timeoutMs: Long = 10L * 60 * 1000,
       pollMs: Long = 250L): SlotLossRecovery = {
-    import graft.sources.{PgCatalog, PgSnapshotSync, PgWireConnection, PgWireSnapshot}
+    import graft.sources.{PgCatalog, PgWireConnection, PgWireSnapshot}
     val host = sourceOptions.getOrElse("host", "127.0.0.1")
     val port = sourceOptions.get("port").map(_.toInt).getOrElse(5432)
     val db = sourceOptions.getOrElse("database",
@@ -1857,10 +1857,10 @@ object Streams {
       s"$workDir/ckpt-backfill")
     // 4. await finalization of every chunk, nudging a quiet WAL forward
     val nudgeSql = {
-      val qt = PgSnapshotSync.quoteQualified(table)
-      val qc = PgSnapshotSync.quoteIdent(
+      val qt = PgCatalog.quoteQualified(table)
+      val qc = PgCatalog.quoteIdent(
         rel.columns.find(!_.partOfKey).map(_.name).getOrElse(pkCol))
-      val qpk = PgSnapshotSync.quoteIdent(pkCol)
+      val qpk = PgCatalog.quoteIdent(pkCol)
       s"UPDATE $qt SET $qc = $qc WHERE $qpk = (SELECT min($qpk) FROM $qt)"
     }
     def applied(): Int = appliedChunks(StateStore.load(stateDir)).size
@@ -2915,7 +2915,7 @@ object Streams {
       .withColumn("key", col("e_.key_"))
       .drop("e_")
     // barrier = (lsn, seq, statement): TRUNCATE, or the toast-carrying move
-    val truncStmt = s"TRUNCATE ${graft.sources.PgSnapshotSync.quoteQualified(tbl)}"
+    val truncStmt = s"TRUNCATE ${graft.sources.PgCatalog.quoteQualified(tbl)}"
     val barriers: Array[(Long, Long, String)] =
       (batch.filter(col("op") === "T")
         .select(col("lsn"), col("seq")).collect()
@@ -2991,10 +2991,10 @@ object Streams {
     * current value instead of being overwritten with NULL. */
   // Shared SQL-rendering helpers for the write-back statement builders —
   // ONE definition each so an escaping fix can never apply to one builder
-  // and miss another (identifiers: `""` doubling via PgSnapshotSync;
+  // and miss another (identifiers: `""` doubling via PgCatalog;
   // literals: `''` doubling under the pinned standard_conforming_strings).
-  private def pgQ(id: String) = graft.sources.PgSnapshotSync.quoteIdent(id)
-  private def pgQt(t: String) = graft.sources.PgSnapshotSync.quoteQualified(t)
+  private def pgQ(id: String) = graft.sources.PgCatalog.quoteIdent(id)
+  private def pgQt(t: String) = graft.sources.PgCatalog.quoteQualified(t)
   private def pgLit(v: String) =
     if (v == null) "NULL" else "'" + v.replace("'", "''") + "'"
 

@@ -60,7 +60,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
   test("batch read decodes the full log into envelope rows") {
     val p = Files.createTempDirectory("flog").resolve("log.bin").toString
     writeLog(p, 10)
-    val df = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val df = spark.read.format("pgcdc").option("path", p).load()
     val rows = df.collect()
     assert(rows.length === 10) // only I events emit
     assert(df.filter(col("op") === "I").count() === 10)
@@ -73,7 +73,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
   test("observed metrics accumulate inside the pass and sum to the batch ground truth") {
     val p = Files.createTempDirectory("flog").resolve("log.bin").toString
     writeLog(p, 20) // 61 frames
-    val stream = spark.readStream.format("graft.sources.FrameReplayProvider")
+    val stream = spark.readStream.format("pgcdc")
       .option("path", p).option("maxFramesPerTrigger", "7").load()
     val q = graft.streaming.Streams.observedEnvelope(stream)
       .writeStream.format("memory").queryName("observed_out")
@@ -96,7 +96,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
   test("streaming with maxFramesPerTrigger: multiple batches, no loss, no dupes") {
     val p = Files.createTempDirectory("flog").resolve("log.bin").toString
     writeLog(p, 20) // 61 frames
-    val stream = spark.readStream.format("graft.sources.FrameReplayProvider")
+    val stream = spark.readStream.format("pgcdc")
       .option("path", p).option("maxFramesPerTrigger", "7").load()
     val q = stream.writeStream.format("memory").queryName("replay_out")
       .trigger(Trigger.AvailableNow()).start()
@@ -115,7 +115,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
     writeLog(p, 5)
     def run(): Long = {
       FrameReplaySourceSpec.runCount.set(0L)
-      val q = spark.readStream.format("graft.sources.FrameReplayProvider")
+      val q = spark.readStream.format("pgcdc")
         .option("path", p).load()
         .writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -170,7 +170,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
       FrameLog.Entry(22L, PgOutputEncoder.encode(Commit(0, 22L, 22L, 6000L))))
     FrameLog.write(p, frames)
 
-    val stream = spark.readStream.format("graft.sources.FrameReplayProvider")
+    val stream = spark.readStream.format("pgcdc")
       .option("path", p).option("maxFramesPerTrigger", "5").load()
     val q = stream.writeStream.format("memory").queryName("replay_streamed")
       .trigger(Trigger.AvailableNow()).start()
@@ -194,7 +194,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
       FrameLog.Entry(13L, PgOutputEncoder.encode(Commit(0, 13L, 13L, 1000L))))
     FrameLog.write(p, frames)
     def read(messages: Boolean) =
-      spark.read.format("graft.sources.FrameReplayProvider")
+      spark.read.format("pgcdc")
         .option("path", p).option("messages", messages.toString).load()
     assert(read(messages = false).count() === 1) // just the insert
     val rows = read(messages = true).orderBy("lsn", "seq")
@@ -207,7 +207,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
   test("txn.markers option emits B/C sentinel rows") {
     val p = Files.createTempDirectory("flog").resolve("log.bin").toString
     writeLog(p, 3)
-    val df = spark.read.format("graft.sources.FrameReplayProvider")
+    val df = spark.read.format("pgcdc")
       .option("path", p).option("txn.markers", "true").load()
     val ops = df.orderBy("lsn", "seq").select("op").collect().map(_.getString(0)).toSeq
     assert(ops === Seq("B", "I", "C", "B", "I", "C", "B", "I", "C"))

@@ -1625,6 +1625,10 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
       val d1 = System.nanoTime() + 60L * 1000 * 1000 * 1000
       while ((count("tms1") < 120 || count("tms2") < 80) &&
         System.nanoTime() < d1) Thread.sleep(100)
+      // the counts fill inside foreachBatch, BEFORE Spark writes that batch's
+      // commit: stopping right away can leave it uncommitted, and the
+      // restart then replays it (at-least-once) — let it commit first
+      q1.processAllAvailable()
       q1.stop()
       assert(count("tms1") === 120 && count("tms2") === 80,
         s"both slots must deliver: tms1=${count("tms1")} tms2=${count("tms2")}")
@@ -1918,7 +1922,7 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false").getOrCreate()
       sparkStarted = spark
-      val q = spark.readStream.format("graft.sources.FrameReplayProvider")
+      val q = spark.readStream.format("pgcdc")
         .option("path", logPath).load()
         .writeStream.format("memory").queryName("rec_replay")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
@@ -2513,6 +2517,34 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
       catch { case _: Throwable => () }
       sql.close()
     }
+  }
+
+  test("quoted publication live: a publication named pu'b streams — the " +
+      "replication commands render it as a literal, not a splice") {
+    live()
+    val sql = sqlConn()
+    try {
+      sql.simpleQuery("CREATE TABLE tquote (id bigint primary key, v text)")
+      sql.simpleQuery("""CREATE PUBLICATION "pu'b" FOR TABLE tquote""")
+      val conduit = new PgWireConduit("127.0.0.1", port, "postgres", "postgres",
+        None, "graft_slot_quote", "pu'b", createSlot = true,
+        temporarySlot = true, statusIntervalMs = 500L)
+      try {
+        conduit.start(0L)
+        sql.simpleQuery("INSERT INTO tquote VALUES (1, 'a'), (2, 'it''s')")
+        val builder = new ChangeEventBuilder(new SchemaRegistry)
+        val events = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (events.count(_.op == "I") < 2 && System.nanoTime() < deadline) {
+          conduit.read() match {
+            case Some((lsn, payload)) => events ++= builder.processRaw(lsn, payload)
+            case None => Thread.sleep(20)
+          }
+        }
+        assert(events.filter(_.op == "I").map(e => e.after("id") -> e.after("v")).toSeq
+          === Seq("1" -> "a", "2" -> "it's"))
+      } finally conduit.close()
+    } finally sql.close()
   }
 
   test("replication loop live: source PG → pgcdc source → pgWriteBack sink " +

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.decode._
 
 /** The live-source face: option validation, the framelog producer running
-  * through the `pgcdc` format end-to-end, and the pgjdbc path failing fast
-  * with a actionable message in this offline environment. */
+  * through the `pgcdc` format end-to-end, and the conduit machinery every
+  * live producer shares. */
 class PgCdcSourceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder().master("local[4]")
@@ -28,13 +28,11 @@ class PgCdcSourceSpec extends AnyFunSuite {
       PgCdcOptions.validate(Map("producer" -> "framelog"))
     }
     val e = intercept[IllegalArgumentException] {
-      PgCdcOptions.validate(Map("producer" -> "pgjdbc", "dsn" -> "jdbc:postgresql://x/y"))
+      PgCdcOptions.validate(Map("producer" -> "pgwire", "host" -> "x"))
     }
     assert(e.getMessage.contains("slot") && e.getMessage.contains("publication"))
     PgCdcOptions.validate(Map("producer" -> "framelog", "path" -> "/tmp/x"))
-    PgCdcOptions.validate(Map(
-      "producer" -> "pgjdbc", "dsn" -> "jdbc:postgresql://x/y",
-      "slot" -> "s", "publication" -> "p"))
+    PgCdcOptions.validate(Map("producer" -> "pgwire", "slot" -> "s", "publication" -> "p"))
   }
 
   test("CdcDemo.parseDsn: first-colon password split, percent-decoding, defaults") {
@@ -68,6 +66,16 @@ class PgCdcSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("LSN text codec round-trips the Postgres X/Y wire format") {
+    assert(PgLsn.parse("0/0") === 0L)
+    assert(PgLsn.parse("16/B3748F2C") === ((0x16L << 32) | 0xB3748F2CL))
+    assert(PgLsn.format(PgLsn.parse("FFFFFFFF/FFFFFFFF")) === "FFFFFFFF/FFFFFFFF")
+    (Seq(0L, 1L, 0x100000000L, 0x16B3748F2CL, Long.MaxValue)).foreach { l =>
+      assert(PgLsn.parse(PgLsn.format(l)) === l)
+    }
+    intercept[IllegalArgumentException](PgLsn.parse("nope"))
+  }
+
   test("pgcdc format with framelog producer streams envelope rows end-to-end") {
     val rel = Relation(3, "public", "t", 'd', Vector(
       RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1)))
@@ -90,22 +98,33 @@ class PgCdcSourceSpec extends AnyFunSuite {
     assert(rows.head.getString(2) === "42")
   }
 
-  test("pgjdbc producer fails fast with an actionable offline message") {
-    assert(!PgJdbcReplication.driverAvailable)
-    val p = Files.createTempDirectory("pgcdc").resolve("nolog.bin").toString
+  test("the pgcdc short name resolves for spark.read and spark.readStream; " +
+      "a batch read of a live producer names producer=framelog") {
+    val rel = Relation(3, "public", "t", 'd', Vector(
+      RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1)))
+    val p = Files.createTempDirectory("pgcdc").resolve("log.bin").toString
+    FrameLog.write(p, Iterator(
+      FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
+      FrameLog.Entry(10, PgOutputEncoder.encode(Begin(12, 1000, 1))),
+      FrameLog.Entry(11, PgOutputEncoder.encode(
+        Insert(3, TupleData(Vector(ColumnData('t', Some("42"))))))),
+      FrameLog.Entry(12, PgOutputEncoder.encode(Commit(0, 12, 12, 1000)))))
+    assert(spark.read.format("pgcdc").option("path", p).load().count() === 1)
+    val q = spark.readStream.format("pgcdc").option("path", p).load()
+      .writeStream.format("memory").queryName("pgcdc_short_name")
+      .trigger(Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(60000))
+    assert(spark.sql("SELECT after['id'] FROM pgcdc_short_name").collect()
+      .map(_.getString(0)).toSeq === Seq("42"))
+
+    PgCdcConduits.register("mc_batch", new MockConduit)
     val e = intercept[Exception] {
-      spark.readStream.format("graft.sources.PgCdcProvider")
-        .option("producer", "pgjdbc")
-        .option("dsn", "jdbc:postgresql://localhost/db")
-        .option("slot", "s").option("publication", "p")
-        .load()
-        .writeStream.format("memory").queryName("pgjdbc_out")
-        .trigger(Trigger.AvailableNow()).start()
-        .awaitTermination(30000)
+      spark.read.format("pgcdc").option("producer", "conduit")
+        .option("conduit.name", "mc_batch").load().collect()
     }
-    val msg = Option(e.getMessage).getOrElse("") +
-      Option(e.getCause).map(_.getMessage).getOrElse("")
-    assert(msg.contains("pgcdc") || msg.contains("postgresql"), msg)
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("producer=framelog")), messages)
   }
 
   /** Scripted walsender stand-in: frames appended by the test; every
@@ -277,7 +296,7 @@ class PgCdcSourceSpec extends AnyFunSuite {
     // replays to the same envelope rows the live stream produced
     val live = spark.sql("SELECT op, after['id'] AS id, lsn FROM rec_live ORDER BY lsn")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val replayed = spark.read.format("graft.sources.FrameReplayProvider")
+    val replayed = spark.read.format("pgcdc")
       .option("path", logPath).load()
       .select(col("op"), col("after")("id").as("id"), col("lsn")).orderBy("lsn")
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -897,15 +916,6 @@ class PgCdcSourceSpec extends AnyFunSuite {
     mb.stop()
   }
 
-  test("bootstrap statement sequence covers slot + snapshot + publication enumeration (S2)") {
-    val stmts = PgSnapshotSync.bootstrapStatements("my_slot", "my_pub")
-    assert(stmts.head.contains("CREATE_REPLICATION_SLOT \"my_slot\" LOGICAL pgoutput"))
-    assert(stmts.exists(_.contains("EXPORT_SNAPSHOT")))
-    assert(stmts.exists(_.contains("REPEATABLE READ")))
-    assert(stmts.exists(_.contains("SET TRANSACTION SNAPSHOT")))
-    assert(stmts.exists(_.contains("pg_publication_tables")))
-  }
-
   test("conduit machinery: Trigger.AvailableNow drains the pinned backlog in rate-limited batches and terminates") {
     def t(v: String) = ColumnData('t', Some(v))
     val mc = new MockConduit
@@ -930,53 +940,20 @@ class PgCdcSourceSpec extends AnyFunSuite {
     assert(ids.toSeq === (1 to 6).map(_.toString).sorted)
   }
 
-  test("executed S2 bootstrap: slot create → snapshot pin → enumerate → per-table reads → commit") {
-    val issued = scala.collection.mutable.ArrayBuffer.empty[String]
-    val runner: String => Seq[Seq[Any]] = { sql =>
-      issued += sql
-      if (sql.startsWith("CREATE_REPLICATION_SLOT"))
-        Seq(Seq("my_slot", "16/B3748F2C", "00000003-00000002-1", "pgoutput"))
-      else if (sql.contains("pg_publication_tables"))
-        Seq(Seq("public", "orders"), Seq("public", "line item"))
-      else Nil
-    }
-    val (info, reads, commit) =
-      PgSnapshotSync.bootstrap(runner, "my_slot", "my_pub")
-    assert(info.slotName === "my_slot")
-    assert(info.consistentPoint === ((0x16L << 32) | 0xB3748F2CL))
-    assert(info.snapshotName === "00000003-00000002-1")
-    assert(info.plugin === "pgoutput")
-    // exactly the reference's ordering: create → BEGIN RR → SET SNAPSHOT →
-    // enumerate; the snapshot pin quotes the server-minted name
-    assert(issued(0).startsWith("CREATE_REPLICATION_SLOT \"my_slot\""))
-    assert(issued(1) === "BEGIN TRANSACTION ISOLATION LEVEL REPEATABLE READ")
-    assert(issued(2) === "SET TRANSACTION SNAPSHOT '00000003-00000002-1'")
-    assert(issued(3).contains("pg_publication_tables"))
-    assert(issued.length === 4, issued)
-    // per-table reads are escape-safe and cover every published table
-    assert(reads === Seq(
-      "public.orders" -> "SELECT * FROM \"public\".\"orders\"",
-      "public.line item" -> "SELECT * FROM \"public\".\"line item\""))
-    commit()
-    assert(issued.last === "COMMIT")
-  }
-
-  test("LSN text codec round-trips the Postgres X/Y wire format") {
-    import PgSnapshotSync._
-    assert(lsnFromText("0/0") === 0L)
-    assert(lsnFromText("16/B3748F2C") === ((0x16L << 32) | 0xB3748F2CL))
-    assert(lsnToText(lsnFromText("FFFFFFFF/FFFFFFFF")) === "FFFFFFFF/FFFFFFFF")
-    (Seq(0L, 1L, 0x100000000L, 0x16B3748F2CL, Long.MaxValue)).foreach { l =>
-      assert(lsnFromText(lsnToText(l)) === l)
-    }
-    intercept[IllegalArgumentException](lsnFromText("nope"))
-  }
-
   test("identifiers and literals in bootstrap SQL are escape-safe (no injection)") {
-    val stmts = PgSnapshotSync.bootstrapStatements("""sl"ot""", "pu'b")
-    assert(stmts.head.contains("\"sl\"\"ot\""))
-    assert(stmts.exists(_.contains("pubname = 'pu''b'")))
+    assert(PgCatalog.quoteIdent("""sl"ot""") === "\"sl\"\"ot\"")
+    assert(PgCatalog.quoteQualified("""pub"lic.t x""") === "\"pub\"\"lic\".\"t x\"")
+    assert(PgCatalog.sqlLiteral("pu'b") === "'pu''b'")
     assert(PgCatalog.attNotNullSql("n's", "t'bl").contains("'n''s'"))
     assert(PgCatalog.attNotNullSql("n's", "t'bl").contains("'t''bl'"))
+    // replication commands: slot as a quoted identifier, publication as a
+    // string literal — a quote in either can neither break nor extend them
+    assert(PgWireConduit.createSlotCommand("""sl"ot""", temporary = false, twoPhase = true) ===
+      "CREATE_REPLICATION_SLOT \"sl\"\"ot\" LOGICAL pgoutput (TWO_PHASE)")
+    val conduit = new PgWireConduit("127.0.0.1", 5432, "postgres", "postgres", None,
+      """sl"ot""", "pu'b', binary 'true", createSlot = false, temporarySlot = false)
+    assert(conduit.startReplicationCommand(0x16B3748L) ===
+      "START_REPLICATION SLOT \"sl\"\"ot\" LOGICAL 0/16B3748 " +
+        "(proto_version '1', publication_names 'pu''b'', binary ''true')")
   }
 }

@@ -54,7 +54,7 @@ class OnlineDedupPropertySpec extends AnyFunSuite {
         val p = dir.resolve(s"log$bi.bin").toString
         FrameLog.write(p,
           Iterator(FrameLog.Entry(0, PgOutputEncoder.encode(rel))) ++ batchFrames.iterator)
-        val b = spark.read.format("graft.sources.FrameReplayProvider")
+        val b = spark.read.format("pgcdc")
           .option("path", p).load()
         Streams.mergeDedupBatch(b, rel, "body", stateDir, 4)
         if (rnd.nextInt(3) == 0) // at-least-once: occasional full batch replay

@@ -76,7 +76,7 @@ class OnlineDedupSpec extends AnyFunSuite {
     assert(dupOf.nonEmpty, "corpus should contain near-dup candidates")
     assert(got === expected)
     // replaying the whole log through the merge is a no-op (high-water)
-    val whole = spark.read.format("graft.sources.FrameReplayProvider")
+    val whole = spark.read.format("pgcdc")
       .option("path", p).load()
     Streams.mergeNearDupBatch(whole, graft.cdc.CdcPipeline.documentsRelation,
       "text", stateDir, 8)
@@ -135,7 +135,7 @@ class OnlineDedupSpec extends AnyFunSuite {
       val p = dir.resolve(n).toString
       FrameLog.write(p, Iterator(FrameLog.Entry(0, PgOutputEncoder.encode(rel))) ++
         entries.iterator.map { case (l, m) => FrameLog.Entry(l, PgOutputEncoder.encode(m)) })
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+      spark.read.format("pgcdc").option("path", p).load()
     }
     def decisions(): Seq[(Long, Boolean, Long)] =
       Streams.onlineDedupDecisions(spark, stateDir)
@@ -211,7 +211,7 @@ class OnlineDedupSpec extends AnyFunSuite {
     assert(dupOf.nonEmpty, "corpus should contain phash near-dup candidates")
     assert(got === expected)
     // whole-log redelivery through the merge is a no-op (high-water)
-    val whole = spark.read.format("graft.sources.FrameReplayProvider")
+    val whole = spark.read.format("pgcdc")
       .option("path", p).load()
     Streams.mergePhashBatch(whole, graft.cdc.CdcPipeline.documentsRelation,
       "text", stateDir, 8)
@@ -234,7 +234,7 @@ class OnlineDedupSpec extends AnyFunSuite {
       val p = dir.resolve(n).toString
       FrameLog.write(p, Iterator(FrameLog.Entry(0, PgOutputEncoder.encode(rel))) ++
         entries.iterator.map { case (l, m) => FrameLog.Entry(l, PgOutputEncoder.encode(m)) })
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+      spark.read.format("pgcdc").option("path", p).load()
     }
     def decisions(): Seq[(Long, Boolean, Long)] =
       Streams.onlineDedupDecisions(spark, stateDir)

@@ -466,7 +466,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(12, PgOutputEncoder.encode(Update(6, None, None, TupleData(Vector(t("1"), t("b")))))),
       FrameLog.Entry(13, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("x")))))),
       FrameLog.Entry(14, PgOutputEncoder.encode(Commit(0, 14, 14, 1000)))))
-    val batch = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val batch = spark.read.format("pgcdc").option("path", p).load()
     val stateDir = dir.resolve("state").toString
     Streams.mergeBatch(batch, rel, Seq("id"), stateDir)
     val once = Streams.materializedState(spark, rel, stateDir)
@@ -499,7 +499,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(13, PgOutputEncoder.encode(Insert(8, TupleData(Vector(t("98")))))),
       FrameLog.Entry(14, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("b")))))),
       FrameLog.Entry(15, PgOutputEncoder.encode(Commit(0, 15, 15, 1000)))))
-    val batch = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val batch = spark.read.format("pgcdc").option("path", p).load()
     val stateDir = dir.resolve("state").toString
     Streams.mergeBatch(batch, relA, Seq("id"), stateDir)
     val got = Streams.materializedState(spark, relA, stateDir)
@@ -585,7 +585,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a")))))),
       FrameLog.Entry(12, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("b")))))),
       FrameLog.Entry(13, PgOutputEncoder.encode(Commit(0, 13, 13, 1000)))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeBatch(b1, rel, Seq("id"), stateDir)
     // batch 2: truncate, then one insert → only the post-truncate row remains.
     // Prior state re-enters the merge as low-water events (lsn < truncate's),
@@ -597,7 +597,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(21, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(22, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("3"), t("c")))))),
       FrameLog.Entry(23, PgOutputEncoder.encode(Commit(0, 23, 23, 2000)))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeBatch(b2, rel, Seq("id"), stateDir)
     val got = Streams.materializedState(spark, rel, stateDir)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
@@ -615,7 +615,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(10, PgOutputEncoder.encode(Begin(12, 1000, 3))),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(5, TupleData(Vector(t("7")))))),
       FrameLog.Entry(12, PgOutputEncoder.encode(Commit(0, 12, 12, 1000)))))
-    val env = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val env = spark.read.format("pgcdc").option("path", p).load()
     val json = Streams.jsonEnvelope(env).collect().map(_.getString(0))
     assert(json.length === 1)
     val parsed = spark.read.json(spark.createDataset(json.toSeq)(org.apache.spark.sql.Encoders.STRING))
@@ -830,7 +830,7 @@ class StreamingSpec extends AnyFunSuite {
       (1 to 32).iterator.map(i =>
         FrameLog.Entry(10 + i, PgOutputEncoder.encode(
           Insert(6, TupleData(Vector(t(i.toString), t(s"v$i"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeBatchBucketed(b1, rel, Seq("id"), stateDir, n)
     // manifest maps bucket → version dir; an untouched bucket must keep the
     // SAME committed version directory (not merely equal contents)
@@ -846,7 +846,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(100, PgOutputEncoder.encode(
         Update(6, None, None, TupleData(Vector(t("1"), t("patched"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeBatchBucketed(b2, rel, Seq("id"), stateDir, n)
     val after = bucketVersions()
     before.keySet.filterNot(_ == s"b$touchedBucket").foreach { b =>
@@ -873,7 +873,7 @@ class StreamingSpec extends AnyFunSuite {
       (1 to 32).iterator.map(i =>
         FrameLog.Entry(10 + i, PgOutputEncoder.encode(
           Insert(6, TupleData(Vector(t(i.toString), t(s"v$i"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeBatchBucketed(b1, rel, Seq("id"), stateDir, nBuckets = 8)
     def materialized(): Map[Long, String] =
       Streams.materializedState(spark, rel, stateDir)
@@ -892,7 +892,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(100, PgOutputEncoder.encode(
         Update(6, None, None, TupleData(Vector(t("1"), t("patched"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeBatchBucketed(b2, rel, Seq("id"), stateDir, nBuckets = 8)
     val after = materialized()
     assert(after(1L) === "patched")
@@ -917,7 +917,7 @@ class StreamingSpec extends AnyFunSuite {
     def log(path: String, entries: (Long, PgOutputMessage)*): org.apache.spark.sql.DataFrame = {
       FrameLog.write(path, entries.iterator.map { case (lsn, m) =>
         FrameLog.Entry(lsn, PgOutputEncoder.encode(m)) })
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", path).load()
+      spark.read.format("pgcdc").option("path", path).load()
     }
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
       df.collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -977,7 +977,7 @@ class StreamingSpec extends AnyFunSuite {
     def log(path: String, entries: (Long, PgOutputMessage)*): org.apache.spark.sql.DataFrame = {
       FrameLog.write(path, entries.iterator.map { case (lsn, m) =>
         FrameLog.Entry(lsn, PgOutputEncoder.encode(m)) })
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", path).load()
+      spark.read.format("pgcdc").option("path", path).load()
     }
     val b1 = log(dir.resolve("log1.bin").toString,
       0L -> rel,
@@ -1136,7 +1136,7 @@ class StreamingSpec extends AnyFunSuite {
     def log(path: String, entries: (Long, PgOutputMessage)*): org.apache.spark.sql.DataFrame = {
       FrameLog.write(path, entries.iterator.map { case (lsn, m) =>
         FrameLog.Entry(lsn, PgOutputEncoder.encode(m)) })
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", path).load()
+      spark.read.format("pgcdc").option("path", path).load()
     }
     def view(): Seq[(Long, Long, String, String)] =
       Streams.joinViewState(spark, stateDir).collect().map { r =>
@@ -1181,13 +1181,13 @@ class StreamingSpec extends AnyFunSuite {
     FrameLog.write(p1, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a"), t("10.0"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeAggBatch(b1, rel, "grp", "val", stateDir)
     val p2 = dir.resolve("log2.bin").toString
     FrameLog.write(p2, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("a"), t("5.0"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     StateStore.failBeforeCommit = true
     try intercept[IllegalStateException] {
       Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir)
@@ -1305,7 +1305,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     assert(got.toSeq === expected.toSeq)
     // replaying the whole log on top of the final state changes nothing
-    val whole = spark.read.format("graft.sources.FrameReplayProvider")
+    val whole = spark.read.format("pgcdc")
       .option("path", p).load()
     Streams.mergeTermDfBatch(whole, graft.cdc.CdcPipeline.documentsRelation,
       "text", dir.resolve("state").toString)
@@ -1335,7 +1335,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(21, PgOutputEncoder.encode(Delete(relId, 'K', TupleData(Vector(
         t("1"), n, n, n, n))))),
       FrameLog.Entry(22, PgOutputEncoder.encode(Commit(0, 22, 22, 2000)))))
-    val whole = spark.read.format("graft.sources.FrameReplayProvider")
+    val whole = spark.read.format("pgcdc")
       .option("path", p).load()
     val e = intercept[IllegalArgumentException] {
       Streams.mergeTermDfBatch(whole, rel, "text", dir.resolve("state").toString)
@@ -1370,7 +1370,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.nonEmpty)
     assert(got.toSeq === expected.toSeq)
     // full-log replay on top of the final state changes nothing
-    val whole = spark.read.format("graft.sources.FrameReplayProvider")
+    val whole = spark.read.format("pgcdc")
       .option("path", p).load()
     Streams.mergeChunkIndexBatch(whole, graft.cdc.CdcPipeline.documentsRelation,
       "text", dir.resolve("state").toString)
@@ -1422,7 +1422,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(13, PgOutputEncoder.encode(Update(6, Some('O'),
         Some(TupleData(Vector(t("2"), t("a"), t("2.0")))),
         TupleData(Vector(t("2"), t("b"), t("3.0"))))))))  // group move a→b
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeStatsBatch(b1, rel, "grp", "val", 2, stateDir)
     def state(): Seq[(String, String, String, Long)] =
       Streams.incrementalAggState(spark, stateDir)
@@ -1442,7 +1442,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(20, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("9"), t("c"), t("1.25"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeStatsBatch(b2, rel, "grp", "val", 2, stateDir)
     assert(state() === Seq(("c", "125", "15625", 1L)))
   }
@@ -1459,13 +1459,13 @@ class StreamingSpec extends AnyFunSuite {
     FrameLog.write(p1, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a"), t("10.0"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeStatsBatch(b1, rel, "grp", "val", 2, stateDir)
     val p2 = dir.resolve("log2.bin").toString
     FrameLog.write(p2, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("a"), t("4.0"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     StateStore.failBeforeCommit = true
     try intercept[IllegalStateException] {
       Streams.mergeStatsBatch(b2, rel, "grp", "val", 2, stateDir)
@@ -1496,13 +1496,13 @@ class StreamingSpec extends AnyFunSuite {
     FrameLog.write(p1, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a"), t("10.0"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeTopKBatch(b1, rel, "grp", "val", stateDir, None)
     val p2 = dir.resolve("log2.bin").toString
     FrameLog.write(p2, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("a"), t("5.0"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     StateStore.failBeforeCommit = true
     try intercept[IllegalStateException] {
       Streams.mergeTopKBatch(b2, rel, "grp", "val", stateDir, None)
@@ -1987,7 +1987,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(14, PgOutputEncoder.encode(Update(6, Some('O'),
         Some(TupleData(Vector(t("2"), t("a"), t("2.0")))),
         TupleData(Vector(t("2"), t("b"), t("3.0"))))))))  // group move a→b
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeAggBatch(b1, rel, "grp", "val", stateDir)
     def state(): Seq[(String, String, Long)] =
       Streams.incrementalAggState(spark, stateDir).orderBy("g").collect()
@@ -2003,7 +2003,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(20, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("9"), t("c"), t("1.25"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir)
     assert(state() === Seq(("c", "1.250000", 1L)))
   }
@@ -2053,7 +2053,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a")))))),
       FrameLog.Entry(12, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("x"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeScd2Batch(b1, rel, stateDir)
     def state(): Seq[(String, String, Long, Long, Boolean)] =
       Streams.scd2State(spark, stateDir).collect().map { r =>
@@ -2077,7 +2077,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(20, PgOutputEncoder.encode(Update(6, None, None, TupleData(Vector(t("1"), t("b")))))),
       FrameLog.Entry(30, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(40, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("post"))))))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeScd2Batch(b2, rel, stateDir)
     val after2 = state()
     assert(after2 === Seq(
@@ -2100,7 +2100,7 @@ class StreamingSpec extends AnyFunSuite {
     def log(n: String, entries: FrameLog.Entry*): org.apache.spark.sql.DataFrame = {
       val p = dir.resolve(n).toString
       FrameLog.write(p, (Iterator(FrameLog.Entry(0, PgOutputEncoder.encode(rel))) ++ entries.iterator))
-      spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+      spark.read.format("pgcdc").option("path", p).load()
     }
     // batch 1: key 1 insert + update → one closed version (seg-0) + one open
     Streams.mergeScd2Batch(log("l1.bin",
@@ -2157,7 +2157,7 @@ class StreamingSpec extends AnyFunSuite {
         TupleData(Vector(t("1"), t("a"), t("4.5"), t("40")))))),
       FrameLog.Entry(14, PgOutputEncoder.encode(Delete(6, 'O',
         TupleData(Vector(t("2"), t("a"), t("2.0"), t("20"))))))))
-    val b = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val b = spark.read.format("pgcdc").option("path", p).load()
     Streams.mergeAggBatch(b, rel, "grp", Seq("v1", "v2"), stateDir)
     val row = Streams.incrementalAggState(spark, stateDir).collect().toSeq
     assert(row.map(r => (r.getString(0), r.getDecimal(1).toPlainString,
@@ -2178,7 +2178,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a"), t("1.0")))))),
       FrameLog.Entry(12, PgOutputEncoder.encode(Update(6, None, None,
         TupleData(Vector(t("1"), t("a"), t("2.0"))))))))
-    val b = spark.read.format("graft.sources.FrameReplayProvider").option("path", p).load()
+    val b = spark.read.format("pgcdc").option("path", p).load()
     val e = intercept[IllegalArgumentException] {
       Streams.mergeAggBatch(b, rel, "grp", "val", dir.resolve("state").toString)
     }
@@ -2197,7 +2197,7 @@ class StreamingSpec extends AnyFunSuite {
       (1 to 16).iterator.map(i =>
         FrameLog.Entry(10 + i, PgOutputEncoder.encode(
           Insert(6, TupleData(Vector(t(i.toString), t(s"v$i"))))))))
-    val b1 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p1).load()
+    val b1 = spark.read.format("pgcdc").option("path", p1).load()
     Streams.mergeBatchBucketed(b1, rel, Seq("id"), stateDir, 8)
     // truncate + one post-truncate insert, in a later batch: the truncate has
     // no key, so the merge must fan out to ALL buckets, not just the insert's
@@ -2208,7 +2208,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(101, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(102, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("99"), t("fresh")))))),
       FrameLog.Entry(103, PgOutputEncoder.encode(Commit(0, 103, 103, 2000)))))
-    val b2 = spark.read.format("graft.sources.FrameReplayProvider").option("path", p2).load()
+    val b2 = spark.read.format("pgcdc").option("path", p2).load()
     Streams.mergeBatchBucketed(b2, rel, Seq("id"), stateDir, 8)
     val got = Streams.materializedState(spark, rel, stateDir)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
@@ -2239,7 +2239,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(state().nonEmpty)
     assert(state() === expected)
     // at-least-once redelivery of the whole log: counters must not move
-    val replay = spark.read.format("graft.sources.FrameReplayProvider")
+    val replay = spark.read.format("pgcdc")
       .option("path", p).load()
     Streams.mergeWireStatsBatch(replay, stateDir)
     assert(state() === expected)
