@@ -2,8 +2,12 @@
 SF_CORRECTNESS ?= /root/testdata/sf0.01
 SF_BENCH ?= /root/testdata/sf0.1
 OUT ?= /tmp/graft_verify
+# one benchmark run: workload, seed, per-layer trace (0|1)
+W ?= cdc_stream_open
+SEED ?= 1
+TRACE ?= 0
 
-.PHONY: compile test verify bench smoke demo livetest all
+.PHONY: compile test verify bench smoke demo livetest perfbench-test perfbench all
 
 compile:
 	sbt compile
@@ -26,6 +30,13 @@ smoke:
 # (self-cancels where initdb/pg_ctl or the postgres user are absent)
 livetest:
 	sbt "testOnly graft.sources.LivePgSpec"
+
+# the benchmark's own tests, and one benchmark run (15 s window)
+perfbench-test:
+	cd perfbench && sbt perfbench/test
+
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 15 --trace $(TRACE)
 
 demo:
 	sbt "runMain graft.CdcDemo /root/testdata/sf0.001 1000"

@@ -10,12 +10,20 @@ import org.apache.spark.sql.functions._
   * first-class distributed operator.
   *
   * Scale design: one shuffle, keyed by primary key — the minimum possible
-  * for global last-wins semantics. The ranking uses `row_number` over
-  * (lsn, seq) descending, which AQE can skew-split; no driver-side state.
-  * Truncate events are folded in as a per-table high-water mark (a tiny
-  * aggregate, broadcast by Catalyst) rather than a second shuffle of data.
+  * for global last-wins semantics; no driver-side state. [[compact]] ranks
+  * with `row_number` over (lsn, seq) descending, which AQE can skew-split,
+  * and folds Truncate events in as a per-table high-water mark: a global
+  * aggregate broadcast into a cross join (its own job). The TOAST-repairing
+  * [[compactFillingToast]] needs no side job: its shuffle copies each 'T'
+  * row into every partition, and one sorted scan reads the mark first.
   */
 object Cdc {
+
+  /** One event as [[compactFillingToast]]'s fold reads it. Images travel as
+    * key and value arrays, so their entry order survives the typed pass. */
+  private[cdc] final case class FoldEvent(op: String, lsn: Long, seq: Long,
+      k: Seq[String], ak: Seq[String], av: Seq[String], toasted: Seq[String])
+  private[cdc] final case class FoldRow(lsn: Long, seq: Long, ak: Seq[String], av: Seq[String])
 
   /** Envelope events of ONE relation → surviving latest `after` images.
     *
@@ -56,56 +64,71 @@ object Cdc {
     * an Update whose `after` image omits a TOASTed column takes that
     * column's value from the latest earlier event of the same key.
     *
-    * Implemented as one aggregation over per-key event lists ordered by
-    * (lsn, seq): a fold applying each image over the accumulated row — the
-    * relational form of Postgres's own heap-update semantics. Per-key lists
-    * are bounded by update frequency per key within the batch, not by table
-    * size, so this holds at scale; the shuffle key is the pk, same as
-    * [[compact]].
+    * One shuffle and one sorted scan, reading only `op, lsn, seq, key,
+    * after, afterToasted`. Each I/U/D row goes to partition
+    * `pmod(hash(key), n)` (n = `spark.sql.shuffle.partitions`), each 'T'
+    * row to all n; a partition sorts its T rows first, then by (key, lsn,
+    * seq), and [[foldRuns]] folds each key's run in one compiled pass — the
+    * relational form of Postgres's own heap-update semantics. Memory is one
+    * key's accumulated row, whatever the batch or table size.
     */
   def compactFillingToast(events: DataFrame, keyColumns: Seq[String]): DataFrame = {
-    val keyExprs = keyColumns.map(k => element_at(col("key"), k).as(s"__k_$k"))
-    // Events at or before the latest 'T' are dropped BEFORE the fold: the
-    // truncated rows no longer exist, so their images must not survive —
-    // and must not fill TOAST columns of post-truncate events either (a
-    // post-truncate INSERT is a fresh row; Postgres can't send 'u'
-    // referring to it).
-    val withKeys = survivingEvents(events).select(col("*") +: keyExprs: _*)
+    val spark = events.sparkSession
+    import spark.implicits._
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val keys = keyColumns.map(k => element_at(col("key"), lit(k)))
+    val isT = col("op") === "T"
+    // Explicit I/U/D/T: marker ('B'/'C') and message ('M') rows have no
+    // table key and must never enter key-wise folds.
+    events.filter(col("op").isin("I", "U", "D", "T"))
+      .select(col("op"), col("lsn"), col("seq"), array(keys: _*).as("k"),
+        map_keys(col("after")).as("ak"), map_values(col("after")).as("av"),
+        col("afterToasted").as("toasted"),
+        explode(when(isT, sequence(lit(0), lit(n - 1)))
+          .otherwise(array(pmod(hash(keys: _*), lit(n))))).as("pid"))
+      .repartitionById(n, col("pid"))
+      .sortWithinPartitions(
+        (!isT +: keyColumns.indices.map(col("k")(_))) :+ col("lsn") :+ col("seq"): _*)
+      .as[FoldEvent].mapPartitions(foldRuns)
+      .select(col("lsn"), col("seq"), map_from_arrays(col("ak"), col("av")).as("after"))
+  }
 
-    // Per key: sort events by (lsn, seq), fold images left-to-right.
-    //   I/U: new state = after ∪ (previous state restricted to TOASTed cols)
-    //   D:   state cleared (a later re-insert starts fresh)
-    val folded = withKeys
-      .groupBy(keyColumns.map(k => col(s"__k_$k")): _*)
-      .agg(
-        collect_list(struct(
-          col("lsn"), col("seq"), col("op"), col("after"), col("afterToasted")
-        )).as("evs0"),
-        max(struct(col("lsn"), col("seq"))).as("last"))
-      // sort_array can't order structs containing maps; compare (lsn, seq)
-      // explicitly instead.
-      .withColumn("evs", array_sort(col("evs0"), (l, r) =>
-        when(l("lsn") < r("lsn"), -1).when(l("lsn") > r("lsn"), 1)
-          .when(l("seq") < r("seq"), -1).when(l("seq") > r("seq"), 1)
-          .otherwise(0)))
-      .withColumn("state",
-        aggregate(
-          col("evs"),
-          lit(null).cast(org.apache.spark.sql.types.MapType(
-            org.apache.spark.sql.types.StringType,
-            org.apache.spark.sql.types.StringType)),
-          (acc, ev) =>
-            when(ev("op") === "D", lit(null))
-              .when(size(ev("afterToasted")) > 0 && acc.isNotNull,
-                map_concat(
-                  map_filter(acc, (k, _) => array_contains(ev("afterToasted"), k)),
-                  ev("after")))
-              .otherwise(ev("after"))))
-      .filter(col("state").isNotNull)
-
-    folded.select(
-      col("last.lsn").as("lsn"), col("last.seq").as("seq"),
-      col("state").as("after"))
+  /** Folds one sorted partition of [[compactFillingToast]]: T rows first,
+    * then each key's events in (lsn, seq) order. Events at or before the
+    * latest 'T' are dropped: the truncated rows no longer exist, so their
+    * images must not survive — nor fill TOAST columns of later events (a
+    * post-truncate INSERT is a fresh row; Postgres can't send 'u' referring
+    * to it). Per event:
+    *   D:             the row is cleared (a later re-insert starts fresh);
+    *   TOAST update:  the row's entries for the toasted columns, then `after`
+    *                  (`map_concat(map_filter(row, …), after)` order);
+    *   anything else: `after`.
+    * A key whose row is set when its run ends yields (last lsn, seq, row). */
+  private def foldRuns(events: Iterator[FoldEvent]): Iterator[FoldRow] = {
+    val in = events.buffered
+    var (markLsn, markSeq) = (Long.MinValue, Long.MinValue)
+    while (in.hasNext && in.head.op == "T") {
+      val t = in.next()
+      if (t.lsn > markLsn || t.lsn == markLsn && t.seq > markSeq) {
+        markLsn = t.lsn; markSeq = t.seq
+      }
+    }
+    def run(): Option[FoldRow] = {
+      val k = in.head.k
+      var row: FoldRow = null
+      while (in.hasNext && in.head.k == k) {
+        val e = in.next()
+        if (e.lsn > markLsn || e.lsn == markLsn && e.seq > markSeq)
+          row =
+            if (e.op == "D" || e.ak == null) null
+            else if (row != null && e.toasted != null && e.toasted.nonEmpty) {
+              val kept = row.ak.indices.filter(i => e.toasted.contains(row.ak(i)))
+              FoldRow(e.lsn, e.seq, kept.map(row.ak) ++ e.ak, kept.map(row.av) ++ e.av)
+            } else FoldRow(e.lsn, e.seq, e.ak, e.av)
+      }
+      Option(row)
+    }
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap(_ => run())
   }
 
   /** Per-group (±value, ±1) contributions of a change-event batch toward an
@@ -120,7 +143,8 @@ object Cdc {
     * and order-independent, so incremental and from-scratch aggregation
     * agree bit-for-bit in any execution order. */
   /** Events strictly after the batch's latest Truncate (the shared
-    * high-water filter of compact/compactFillingToast/aggDeltas). */
+    * high-water filter of the delta views: aggDeltas, statsDeltas,
+    * netCounts). */
   private[graft] def survivingEvents(events: DataFrame): DataFrame = {
     val truncLsn = events.filter(col("op") === "T")
       .agg(max(struct(col("lsn"), col("seq"))).as("t"))

@@ -99,46 +99,38 @@ object Streams {
     // directory — distinct paths, so no tmp double-write is needed; the
     // manifest flip makes the swap atomic.
     val existing = StateStore.load(stateDir).get("data")
-      .map(v => spark.read.parquet(s"$stateDir/$v"))
-    val compacted = mergeCompact(batch, existing, rel, keys)
+      .map(v => readState(spark, Seq(s"$stateDir/$v")))
+    val compacted = mergeCompact(batch, existing, keys)
     val next = StateStore.newVersion("data")
     compacted.write.mode("overwrite").parquet(s"$stateDir/$next")
     StateStore.commit(stateDir, Map("data" -> next), retain)
   }
 
+  /** The columns of every upsert state version ([[mergeCompact]]'s
+    * output, [[seedState]]'s rows). Merges read state with it, so no job
+    * infers it from parquet footers. */
+  private val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "__lsn BIGINT, __seq BIGINT, __after MAP<STRING, STRING>, __key MAP<STRING, STRING>")
+
+  private def readState(spark: SparkSession, dirs: Seq[String]): DataFrame =
+    spark.read.schema(stateSchema).parquet(dirs: _*)
+
   /** (state rows ∪ batch events) → compacted state rows. Previous state rows
     * re-enter the merge as synthetic low-water events so deletes/updates in
-    * this batch win, and TOAST repair sees them. */
+    * this batch win, and TOAST repair sees them. Both sides are cut to the
+    * six columns [[Cdc.compactFillingToast]] reads. */
   private def mergeCompact(batch: DataFrame, existing: Option[DataFrame],
-      rel: Relation, keys: Seq[String]): DataFrame = {
-    val stateAsEvents = existing.map { st =>
-      st.select(
-        lit("I").as("op"),
-        concat_ws("-", col("__lsn"), col("__seq")).as("message_id"),
-        col("__lsn").as("lsn"), col("__seq").as("seq"),
-        lit(-1).as("tx_id"), lit(-1L).as("begin_lsn"), lit(-1L).as("commit_ts_us"),
-        lit(rel.namespace).as("namespace"), lit(rel.name).as("table"),
-        lit(rel.relationId).as("relation_id"),
-        col("__key").as("key"), lit(null).cast(batch.schema("before").dataType).as("before"),
-        col("__after").as("after"),
-        lit(null).cast(batch.schema("before_toasted").dataType).as("before_toasted"),
-        lit(null).cast(batch.schema("after_toasted").dataType).as("after_toasted"),
-        lit(null).cast("string").as("origin"))
-    }
-    val all = stateAsEvents.map(_.unionByName(batch)).getOrElse(batch)
-    val renamed = all
-      .withColumnRenamed("tx_id", "txId").withColumnRenamed("begin_lsn", "beginLsn")
-      .withColumnRenamed("commit_ts_us", "commitTsUs")
-      .withColumnRenamed("relation_id", "relationId")
-      .withColumnRenamed("before_toasted", "beforeToasted")
-      .withColumnRenamed("after_toasted", "afterToasted")
-    Cdc.compactFillingToast(renamed, keys)
-      .select(
-        col("lsn").as("__lsn"), col("seq").as("__seq"), col("after").as("__after"),
-        map_from_arrays(
-          expr("array(" + keys.map(k => s"'$k'").mkString(",") + ")"),
-          expr("array(" + keys.map(k => s"element_at(after, '$k')").mkString(",") + ")")
-        ).as("__key"))
+      keys: Seq[String]): DataFrame = {
+    val events = batch.select(col("op"), col("lsn"), col("seq"), col("key"),
+      col("after"), col("after_toasted").as("afterToasted"))
+    val all = existing.fold(events)(st => st.select(lit("I").as("op"),
+      col("__lsn").as("lsn"), col("__seq").as("seq"), col("__key").as("key"),
+      col("__after").as("after"), lit(null).cast("array<string>").as("afterToasted"))
+      .unionByName(events))
+    Cdc.compactFillingToast(all, keys).select(
+      col("lsn").as("__lsn"), col("seq").as("__seq"), col("after").as("__after"),
+      map_from_arrays(array(keys.map(lit): _*),
+        array(keys.map(k => element_at(col("after"), lit(k))): _*)).as("__key"))
   }
 
   /** ACTIVE-ACTIVE upsert sink: [[cdcUpsertSink]] with conflicts resolved
@@ -178,7 +170,7 @@ object Streams {
     val spark = batch.sparkSession
     val existing = StateStore.load(stateDir).get("data")
       .map(v => spark.read.parquet(s"$stateDir/$v"))
-    val won = mergeLwwCompact(batch, existing, rel, keys)
+    val won = mergeLwwCompact(batch, existing, keys)
     val next = StateStore.newVersion("data")
     won.write.mode("overwrite").parquet(s"$stateDir/$next")
     StateStore.commit(stateDir, Map("data" -> next), retainSnapshots)
@@ -195,38 +187,16 @@ object Streams {
     * property test). Tombstone GC belongs to ops policy: safe to reclaim
     * once older than the deployment's maximum cross-site replication lag. */
   private def mergeLwwCompact(batch: DataFrame, existing: Option[DataFrame],
-      rel: Relation, keys: Seq[String]): DataFrame = {
-    val stateAsEvents = existing.map { st =>
-      st.select(
-        col("__op").as("op"),
-        concat_ws("-", col("__lsn"), col("__seq")).as("message_id"),
-        col("__lsn").as("lsn"), col("__seq").as("seq"),
-        lit(-1).as("tx_id"), lit(-1L).as("begin_lsn"),
-        col("__ts").as("commit_ts_us"),
-        lit(rel.namespace).as("namespace"), lit(rel.name).as("table"),
-        lit(rel.relationId).as("relation_id"),
-        col("__key").as("key"),
-        lit(null).cast(batch.schema("before").dataType).as("before"),
-        col("__after").as("after"),
-        lit(null).cast(batch.schema("before_toasted").dataType).as("before_toasted"),
-        lit(null).cast(batch.schema("after_toasted").dataType).as("after_toasted"),
-        col("__origin").as("origin"))
-    }
-    val all = stateAsEvents.map(_.unionByName(batch)).getOrElse(batch)
-    val renamed = all
-      .withColumnRenamed("tx_id", "txId").withColumnRenamed("begin_lsn", "beginLsn")
-      .withColumnRenamed("commit_ts_us", "commitTsUs")
-      .withColumnRenamed("relation_id", "relationId")
-      .withColumnRenamed("before_toasted", "beforeToasted")
-      .withColumnRenamed("after_toasted", "afterToasted")
+      keys: Seq[String]): DataFrame = {
+    val events = batch.select(col("op"), col("commit_ts_us").as("commitTsUs"),
+      col("origin"), col("lsn"), col("seq"), col("after"), col("key"))
+    val all = existing.fold(events)(st => st.select(col("__op"), col("__ts"),
+      col("__origin"), col("__lsn"), col("__seq"), col("__after"), col("__key"))
+      .toDF(events.columns.toIndexedSeq: _*).union(events))
     // __key comes from the envelope's key column (present on D events too —
     // an after-image projection would lose tombstone keys)
-    Cdc.lwwCompact(renamed, keys, keepTombstones = true)
-      .select(
-        col("op").as("__op"),
-        col("commitTsUs").as("__ts"), col("origin").as("__origin"),
-        col("lsn").as("__lsn"), col("seq").as("__seq"), col("after").as("__after"),
-        col("key").as("__key"))
+    Cdc.lwwCompact(all, keys, keepTombstones = true)
+      .toDF("__op", "__ts", "__origin", "__lsn", "__seq", "__after", "__key")
   }
 
   /** Version directories holding a state's data: the flat layout's single
@@ -306,7 +276,7 @@ object Streams {
     val existing =
       if (existingDirs.nonEmpty) Some(spark.read.parquet(existingDirs: _*))
       else None
-    val won = mergeLwwCompact(batch, existing, rel, keys)
+    val won = mergeLwwCompact(batch, existing, keys)
       .withColumn("__bucket", bucketOf(col("__key"), keys, n))
     val stage = StateStore.newVersion("stage")
     won.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
@@ -375,9 +345,8 @@ object Streams {
     val existingDirs = touched.toSeq
       .flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
     val existing =
-      if (existingDirs.nonEmpty) Some(spark.read.parquet(existingDirs: _*))
-      else None
-    val compacted = mergeCompact(batch, existing, rel, keys)
+      if (existingDirs.nonEmpty) Some(readState(spark, existingDirs)) else None
+    val compacted = mergeCompact(batch, existing, keys)
       .withColumn("__bucket", bucketOf(col("__key"), keys, n))
     // Stage all recompacted buckets in one partitioned write, then promote
     // each produced bucket to its own uncommitted version directory.
@@ -1403,20 +1372,20 @@ object Streams {
     def readFamily(prefix: String): Option[DataFrame] = {
       val dirs = touched.toSeq.flatMap(b => manifest.get(s"$prefix$b"))
         .map(v => s"$stateDir/$v")
-      if (dirs.nonEmpty) Some(spark.read.parquet(dirs: _*)) else None
+      if (dirs.nonEmpty) Some(readState(spark, dirs)) else None
     }
     val existingA = readFamily("a")
     val existingB = readFamily("bb")
     // Re-compact a side only if the batch carries its events; an untouched
     // side still feeds the view rebuild read-only.
     val newA =
-      if (nA > 0) mergeCompact(batchA, existingA, relA, relA.keyColumnNames)
+      if (nA > 0) mergeCompact(batchA, existingA, relA.keyColumnNames)
       else existingA.getOrElse(
-        mergeCompact(batchA, None, relA, relA.keyColumnNames)) // typed empty
+        mergeCompact(batchA, None, relA.keyColumnNames)) // typed empty
     val newB =
-      if (nB > 0) mergeCompact(batchB, existingB, relB, relB.keyColumnNames)
+      if (nB > 0) mergeCompact(batchB, existingB, relB.keyColumnNames)
       else existingB.getOrElse(
-        mergeCompact(batchB, None, relB, relB.keyColumnNames))
+        mergeCompact(batchB, None, relB.keyColumnNames))
     val viewT = newB.as("b").join(newA.as("a"),
         element_at(col("b.__key"), joinColB) ===
           element_at(col("a.__key"), joinColA))
@@ -1568,24 +1537,15 @@ object Streams {
         val survivors = eligible.join(
           coll.withColumnRenamed("chunk_id", "x_id"),
           col("chunk_id") === col("x_id") && keyEq, "left_anti")
-        Some(survivors.select(
-          lit("I").as("op"),
-          concat_ws("-", col("hi_lsn"), lit(0)).as("message_id"),
-          col("hi_lsn").as("lsn"), lit(0L).as("seq"),
-          lit(-1).as("tx_id"), lit(-1L).as("begin_lsn"), lit(-1L).as("commit_ts_us"),
-          lit(rel.namespace).as("namespace"), lit(rel.name).as("table"),
-          lit(rel.relationId).as("relation_id"),
-          col("key"),
-          lit(null).cast(batch.schema("before").dataType).as("before"),
-          col("after"),
-          lit(null).cast(batch.schema("before_toasted").dataType).as("before_toasted"),
-          lit(null).cast(batch.schema("after_toasted").dataType).as("after_toasted"),
-          lit(null).cast("string").as("origin")))
+        Some(survivors.select(lit("I").as("op"), col("hi_lsn").as("lsn"),
+          lit(0L).as("seq"), col("key"), col("after")))
       }
-    val events = chunkEvents.map(batch.unionByName(_)).getOrElse(batch)
+    // the merge reads only op, lsn, seq, key, after, after_toasted
+    val events = chunkEvents
+      .map(batch.unionByName(_, allowMissingColumns = true)).getOrElse(batch)
     val existing = manifest.get("data")
-      .map(v => spark.read.parquet(s"$stateDir/$v"))
-    val compacted = mergeCompact(events, existing, rel, keys)
+      .map(v => readState(spark, Seq(s"$stateDir/$v")))
+    val compacted = mergeCompact(events, existing, keys)
     val nextData = StateStore.newVersion("data")
     compacted.write.mode("overwrite").parquet(s"$stateDir/$nextData")
     // prune collision rows of now-applied chunks; keep the rest pending
@@ -2011,8 +1971,8 @@ object Streams {
       rels.filter(r => graduating.contains(r.relationId)).foreach { rel =>
         val rb = ready.filter(col("relation_id") === rel.relationId).drop("__slot")
         val existing = entries.get(s"data:${rel.relationId}")
-          .map(v => spark.read.parquet(s"$stateDir/$v"))
-        val merged = mergeCompact(rb, existing, rel, rel.keyColumnNames)
+          .map(v => readState(spark, Seq(s"$stateDir/$v")))
+        val merged = mergeCompact(rb, existing, rel.keyColumnNames)
         val v = StateStore.newVersion(s"data-${rel.relationId}")
         merged.write.mode("overwrite").parquet(s"$stateDir/$v")
         entries += (s"data:${rel.relationId}" -> v)

@@ -18,13 +18,15 @@ class CdcPropertySpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  /** Sequential reference semantics: apply events in (lsn, seq) order. */
-  private def interpret(events: Seq[ChangeEvent]): Map[String, Map[String, String]] = {
-    val state = scala.collection.mutable.Map.empty[String, Map[String, String]]
+  /** Sequential reference semantics: apply events in (lsn, seq) order; a
+    * Truncate clears every row. */
+  private def interpret[K](events: Seq[ChangeEvent],
+      keyOf: ChangeEvent => K): Map[K, Map[String, String]] = {
+    val state = scala.collection.mutable.Map.empty[K, Map[String, String]]
     events.sortBy(e => (e.lsn, e.seq)).foreach { e =>
       e.op match {
         case "I" | "U" =>
-          val key = e.key("id")
+          val key = keyOf(e)
           val prev = state.get(key)
           val base = e.after
           val repaired =
@@ -32,12 +34,15 @@ class CdcPropertySpec extends AnyFunSuite {
               base ++ prev.get.view.filterKeys(e.afterToasted.contains).toMap
             else base
           state(key) = repaired
-        case "D" => state.remove(e.key("id"))
-        case "T" => // handled via high-water mark in compact; not generated here
+        case "D" => state.remove(keyOf(e))
+        case "T" => state.clear()
       }
     }
     state.toMap
   }
+
+  private def interpret(events: Seq[ChangeEvent]): Map[String, Map[String, String]] =
+    interpret(events, _.key("id"))
 
   private def randomEvents(rnd: Random, n: Int, keySpace: Int): Seq[ChangeEvent] = {
     var seq = 0L
@@ -60,23 +65,70 @@ class CdcPropertySpec extends AnyFunSuite {
     }
   }
 
+  /** Mixes over a two-column key (a, b) whose values may be null, with
+    * Truncates: single ones, and pairs at one lsn whose later seq is the
+    * mark (the insert between them is truncated too), one pair at least. */
+  private def randomCompositeEvents(rnd: Random, n: Int): Seq[ChangeEvent] = {
+    var seq = 0L
+    def ev(op: String, lsn: Long, key: Map[String, String], after: Map[String, String],
+        toasted: Seq[String] = Nil): ChangeEvent = {
+      seq += 1
+      ChangeEvent(op, s"$lsn-$seq", lsn, seq, 1, lsn, 0L, "public", "t", 1,
+        key, null, after, Nil, toasted)
+    }
+    val as = Vector("1", "2", "3", null)
+    val bs = Vector("x", "y", null)
+    (1 to n).flatMap { i =>
+      val lsn = i.toLong * (1 + rnd.nextInt(2))
+      val key = Map("a" -> as(rnd.nextInt(as.size)), "b" -> bs(rnd.nextInt(bs.size)))
+      val r = rnd.nextInt(150)
+      if (r == 0) Seq(ev("T", lsn, Map.empty, null))
+      else if (r == 1 || i == n / 2) Seq(ev("T", lsn, Map.empty, null),
+        ev("I", lsn, key, key + ("v" -> s"v$i")), ev("T", lsn, Map.empty, null))
+      else {
+        val op = r % 10 match {
+          case 0 | 1 => "D"
+          case 2 | 3 | 4 => "U"
+          case _ => "I"
+        }
+        val toasted = op == "U" && rnd.nextBoolean()
+        val after =
+          if (op == "D") null
+          else if (toasted) key
+          else key ++ Map("v" -> s"v$i", "w" -> rnd.nextInt(100).toString)
+        Seq(ev(op, lsn, key, after, if (toasted) Seq("v", "w") else Nil))
+      }
+    }
+  }
+
   test("compactFillingToast equals sequential interpretation over 5 random mixes") {
     import spark.implicits._
-    (1 to 5).foreach { trial =>
-      val rnd = new Random(42 + trial)
-      val events = randomEvents(rnd, n = 400, keySpace = 40)
-      val expected = interpret(events)
+    // the interpreter's repaired map may carry nulls for toasted columns
+    // with no prior value; compaction omits what it cannot repair
+    def norm[K](m: Map[K, Map[String, String]]) =
+      m.map { case (k, row) => k -> row.filter(_._2 != null) }
+    def check[K](events: Seq[ChangeEvent], keys: Seq[String],
+        keyOf: Map[String, String] => K, rnd: Random, clue: String): Unit = {
+      val expected = interpret(events, (e: ChangeEvent) => keyOf(e.key))
       val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
-      val got = Cdc.compactFillingToast(df, Seq("id")).collect().map { r =>
-        val m = r.getMap[String, String](r.fieldIndex("after"))
-        m("id") -> m.toMap.map { case (k, v) => k -> v }
-      }.toMap
-      // normalize: interpreter's repaired map may carry nulls for toasted
-      // columns with no prior value; compaction omits what it cannot repair
-      val norm = expected.map { case (k, m) => k -> m.filter(_._2 != null) }
-      val gotNorm = got.map { case (k, m) => k -> m.filter(_._2 != null) }
-      assert(gotNorm === norm, s"trial $trial")
+      val rows = Cdc.compactFillingToast(df, keys).collect().toSeq.map { r =>
+        val m = r.getMap[String, String](r.fieldIndex("after")).toMap
+        keyOf(m) -> m
+      }
+      assert(rows.length === rows.map(_._1).distinct.length, s"$clue: one row per key")
+      assert(norm(rows.toMap) === norm(expected), clue)
     }
+    try Seq(1, 3, 8).foreach { partitions =>
+      spark.conf.set("spark.sql.shuffle.partitions", partitions.toString)
+      (1 to 5).foreach { trial =>
+        val rnd = new Random(42 + trial)
+        check(randomEvents(rnd, n = 400, keySpace = 40), Seq("id"),
+          (m: Map[String, String]) => m("id"), rnd, s"trial $trial, $partitions partitions")
+        check(randomCompositeEvents(rnd, n = 400), Seq("a", "b"),
+          (m: Map[String, String]) => (m.getOrElse("a", null), m.getOrElse("b", null)),
+          rnd, s"composite trial $trial, $partitions partitions")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
   }
 
   /** Stateful generator with REAL images: I only for absent keys, U/D only

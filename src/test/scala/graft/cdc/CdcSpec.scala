@@ -179,6 +179,24 @@ class CdcSpec extends AnyFunSuite {
     assert(out === Map("1" -> "fresh"))
   }
 
+  test("TOAST repair keeps map_concat's entry order: kept toasted entries, then after") {
+    import scala.collection.immutable.ListMap
+    import spark.implicits._
+    val events = Seq(
+      ev("I", 10, 1, "1", ListMap("id" -> "1", "v" -> "v1", "w" -> "w1", "x" -> "x1", "y" -> "y1")),
+      ev("U", 20, 2, "1", ListMap("x" -> "x2", "id" -> "1", "y" -> "y2"), toasted = Seq("w", "v")),
+      ev("I", 30, 3, "2", ListMap("y" -> "y3", "x" -> "x3", "w" -> "w3", "v" -> "v3", "id" -> "2")))
+    val out = Cdc.compactFillingToast(spark.createDataset(events).toDF(), Seq("id"))
+      .select(org.apache.spark.sql.functions.map_keys($"after"),
+        org.apache.spark.sql.functions.map_values($"after"), $"lsn")
+      .collect().map(r => r.getLong(2) -> (r.getSeq[String](0), r.getSeq[String](1))).toMap
+    // the row's toasted entries in the row's order (v before w), then the
+    // update's image in its own order; an untouched image keeps its order
+    assert(out === Map(
+      20L -> (Seq("v", "w", "x", "id", "y"), Seq("v1", "w1", "x2", "1", "y2")),
+      30L -> (Seq("y", "x", "w", "v", "id"), Seq("y3", "x3", "w3", "v3", "2"))))
+  }
+
   test("plain compact ignores TOAST (documented contrast with compactFillingToast)") {
     val out = compactIds(Seq(
       ev("I", 10, 1, "1", Map("id" -> "1", "v" -> "fat-value")),

@@ -604,6 +604,87 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Seq((3L, "c")))
   }
 
+  test("mergeBatch upserts and deletes through a key column named it's") {
+    val rel = Relation(6, "public", "q", 'd', Vector(
+      RelationColumn(partOfKey = true, "it's", TypedView.Oid.Int8, -1),
+      RelationColumn(partOfKey = false, "v", TypedView.Oid.Text, -1)))
+    def t(v: String) = ColumnData('t', Some(v))
+    val dir = Files.createTempDirectory("quotedkey")
+    val stateDir = dir.resolve("state").toString
+    val p1 = dir.resolve("log1.bin").toString
+    FrameLog.write(p1, Iterator(
+      FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
+      FrameLog.Entry(10, PgOutputEncoder.encode(Begin(13, 1000, 1))),
+      FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a")))))),
+      FrameLog.Entry(12, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("2"), t("b")))))),
+      FrameLog.Entry(13, PgOutputEncoder.encode(Commit(0, 13, 13, 1000)))))
+    Streams.mergeBatch(spark.read.format("pgcdc").option("path", p1).load(),
+      rel, rel.keyColumnNames, stateDir)
+    val p2 = dir.resolve("log2.bin").toString
+    FrameLog.write(p2, Iterator(
+      FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
+      FrameLog.Entry(20, PgOutputEncoder.encode(Begin(23, 2000, 2))),
+      FrameLog.Entry(21, PgOutputEncoder.encode(Update(6, None, None, TupleData(Vector(t("1"), t("c")))))),
+      FrameLog.Entry(22, PgOutputEncoder.encode(Delete(6, 'K', TupleData(Vector(t("2")))))),
+      FrameLog.Entry(23, PgOutputEncoder.encode(Commit(0, 23, 23, 2000)))))
+    Streams.mergeBatch(spark.read.format("pgcdc").option("path", p2).load(),
+      rel, rel.keyColumnNames, stateDir)
+    val got = Streams.materializedState(spark, rel, stateDir)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got === Seq((1L, "c")))
+  }
+
+  test("mergeBatch over existing state runs at most 2 Spark jobs") {
+    val rel = Relation(6, "public", "m", 'd', Vector(
+      RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1),
+      RelationColumn(partOfKey = false, "v", TypedView.Oid.Text, -1)))
+    def t(v: String) = ColumnData('t', Some(v))
+    val dir = Files.createTempDirectory("mergejobs")
+    val stateDir = dir.resolve("state").toString
+    def batch(name: String, frames: (Long, PgOutputMessage)*) = {
+      val p = dir.resolve(name).toString
+      FrameLog.write(p, (Iterator(0L -> (rel: PgOutputMessage)) ++ frames.iterator)
+        .map { case (lsn, m) => FrameLog.Entry(lsn, PgOutputEncoder.encode(m)) })
+      spark.read.format("pgcdc").option("path", p).load()
+    }
+    Streams.mergeBatch(batch("log1.bin", 10L -> Begin(13, 1000, 1),
+      11L -> Insert(6, TupleData(Vector(t("1"), t("a")))),
+      12L -> Insert(6, TupleData(Vector(t("2"), t("b")))),
+      13L -> Commit(0, 13, 13, 1000)), rel, Seq("id"), stateDir)
+    // an update, a delete and a truncate: every path of the merge
+    val b2 = batch("log2.bin", 20L -> Begin(25, 2000, 2),
+      21L -> Update(6, None, None, TupleData(Vector(t("1"), t("c")))),
+      22L -> Delete(6, 'K', TupleData(Vector(t("2")))),
+      23L -> Truncate(0, Vector(6)),
+      24L -> Insert(6, TupleData(Vector(t("3"), t("d")))),
+      25L -> Commit(0, 25, 25, 2000))
+    val sc = spark.sparkContext
+    val group = s"merge-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "one mergeBatch")
+      try Streams.mergeBatch(b2, rel, Seq("id"), stateDir)
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once a later job's start has
+      // arrived, every merge job has been counted
+      sc.setJobGroup(s"$group-end", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.contains(s"$group-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(s"$group-end"))
+    } finally sc.removeSparkListener(listener)
+    val mergeJobs = jobs.toArray.count(_ == group)
+    assert(mergeJobs >= 1 && mergeJobs <= 2, s"mergeBatch ran $mergeJobs jobs")
+    val got = Streams.materializedState(spark, rel, stateDir)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got === Seq((3L, "d")))
+  }
+
   test("jsonEnvelope renders one parseable JSON document per event (K1 default sink)") {
     val rel = Relation(5, "public", "j", 'd', Vector(
       RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1)))
