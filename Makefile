@@ -2,6 +2,8 @@
 SF_CORRECTNESS ?= /root/testdata/sf0.01
 SF_BENCH ?= /root/testdata/sf0.1
 OUT ?= /tmp/graft_verify
+CPUS ?= 32
+ONLY ?=
 # one benchmark run: workload, seed, per-layer trace (0|1)
 W ?= cdc_stream_open
 SEED ?= 1
@@ -20,8 +22,10 @@ verify:
 	sbt "runMain graft.Verify $(SF_CORRECTNESS) $(OUT)"
 	python3 scripts/check_oracle.py $(SF_CORRECTNESS) $(OUT)
 
+# CPUS: local[N] cores; ONLY: comma-separated query subset (empty = all)
 bench:
-	SPARK_GRAFT_SF_DIR=$(SF_BENCH) SPARK_GRAFT_CPUS=32 sbt "runMain graft.Bench"
+	SPARK_GRAFT_SF_DIR=$(SF_BENCH) SPARK_GRAFT_CPUS=$(CPUS) \
+	  $(if $(ONLY),SPARK_GRAFT_ONLY=$(ONLY)) sbt "runMain graft.Bench"
 
 smoke:
 	sbt "runMain graft.Smoke"

@@ -9,16 +9,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = Harness.session(cpus)
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
 
     // warmup: touch every table (via the normalizing loaders — events needs
@@ -115,12 +108,14 @@ object Bench {
       if (retimedFirst.isEmpty) ""
       else retimedFirst.map { case (k, v) => entry(k, v, 9) }
         .mkString(",\"first_pass\":{", ",", "}")
-    // Two detail files: the historical BENCH_LOCAL.json (latest run) AND a
+    // Two detail files in the working directory (the checkout root under
+    // `sbt runMain`): the historical BENCH_LOCAL.json (latest run) AND a
     // per-core-count BENCH_LOCAL_c$cpus.json — the driver's 8-core scaling
     // run used to overwrite the 32-core run's full per-query map in place
-    // (r9 verdict: the 32-core detail was unrecoverable).
+    // (r9 verdict: the 32-core detail was unrecoverable). A SPARK_GRAFT_ONLY
+    // subset run writes neither: its partial map would replace a full one.
     val fullLine = line(results, 9, "," + retimed + medianJson + firstPassJson) + "\n"
-    Seq("/root/repo/BENCH_LOCAL.json", s"/root/repo/BENCH_LOCAL_c$cpus.json")
+    if (only.isEmpty) Seq("BENCH_LOCAL.json", s"BENCH_LOCAL_c$cpus.json")
       .foreach { p =>
         try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), fullLine)
         catch { case _: Throwable => () } // read-only checkout: stdout still has it

@@ -119,14 +119,8 @@ object CdcDemo {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     if (args.headOption.contains("recover")) {
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       runRecover(spark)
       return
@@ -142,13 +136,6 @@ object CdcDemo {
     val verbose = sys.env.get("GRAFT_PGCDC_VERBOSE")
       .exists(v => Set("1", "true", "yes").contains(v.toLowerCase))
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
     spark.sparkContext.setLogLevel(if (verbose) "INFO" else "WARN")
 
     dsn.foreach { d =>

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named queries to files — the plan
@@ -16,13 +15,7 @@ object Plans {
     }
     val Array(outDir, suffix, list) = args.take(3)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     list.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

@@ -65,7 +65,7 @@ object Cdc {
     * column's value from the latest earlier event of the same key.
     *
     * One shuffle and one sorted scan, reading only `op, lsn, seq, key,
-    * after, afterToasted`. Each I/U/D row goes to partition
+    * after, after_toasted`. Each I/U/D row goes to partition
     * `pmod(hash(key), n)` (n = `spark.sql.shuffle.partitions`), each 'T'
     * row to all n; a partition sorts its T rows first, then by (key, lsn,
     * seq), and [[foldRuns]] folds each key's run in one compiled pass — the
@@ -83,7 +83,7 @@ object Cdc {
     events.filter(col("op").isin("I", "U", "D", "T"))
       .select(col("op"), col("lsn"), col("seq"), array(keys: _*).as("k"),
         map_keys(col("after")).as("ak"), map_values(col("after")).as("av"),
-        col("afterToasted").as("toasted"),
+        col("after_toasted").as("toasted"),
         explode(when(isT, sequence(lit(0), lit(n - 1)))
           .otherwise(array(pmod(hash(keys: _*), lit(n))))).as("pid"))
       .repartitionById(n, col("pid"))
@@ -547,7 +547,7 @@ object Cdc {
     val keyExprs = keyColumns.map(k => element_at(col("key"), k).as(s"__k_$k"))
     val localFirst = when(col("origin").isNull, lit(1)).otherwise(lit(0))
     val w = Window.partitionBy(keyColumns.map(k => col(s"__k_$k")): _*)
-      .orderBy(col("commitTsUs").desc, localFirst.desc,
+      .orderBy(col("commit_ts_us").desc, localFirst.desc,
         col("lsn").desc, col("seq").desc)
     val winners = events.filter(col("op").isin("I", "U", "D"))
       .select(col("*") +: keyExprs: _*)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.decode._
+import graft.sources.Envelope
 
 /** End-to-end CDC pipeline over *generated* pgoutput wire frames — the
   * SURVEY.md §7 "minimum end-to-end slice", driven at scale.
@@ -118,16 +119,16 @@ object CdcPipeline {
     * pattern) that more than one query consumes. */
   def ordersEventsUDFI(s: SparkSession, d: String): DataFrame =
     sharedEvents(s, d, "orders_udfi")(decodeFrames(ordersToFrames(s, d,
-      DmlPattern(updates = true, deletes = true, fullImages = true))).toDF())
+      DmlPattern(updates = true, deletes = true, fullImages = true))))
   def ordersEventsUD(s: SparkSession, d: String): DataFrame =
     sharedEvents(s, d, "orders_ud")(decodeFrames(ordersToFrames(s, d,
-      DmlPattern(updates = true, deletes = true))).toDF())
+      DmlPattern(updates = true, deletes = true))))
   def lineitemEvents(s: SparkSession, d: String): DataFrame =
-    sharedEvents(s, d, "lineitem")(decodeFrames(lineitemToFrames(s, d)).toDF())
+    sharedEvents(s, d, "lineitem")(decodeFrames(lineitemToFrames(s, d)))
   def docsDmlEvents(s: SparkSession, d: String): DataFrame =
-    sharedEvents(s, d, "docs_dml")(decodeFrames(documentsToFramesDml(s, d)).toDF())
+    sharedEvents(s, d, "docs_dml")(decodeFrames(documentsToFramesDml(s, d)))
   def embeddingsEvents(s: SparkSession, d: String): DataFrame =
-    sharedEvents(s, d, "emb")(decodeFrames(embeddingsToFrames(s, d)).toDF())
+    sharedEvents(s, d, "emb")(decodeFrames(embeddingsToFrames(s, d)))
   /** Epoch-2 decoded envelope (the failover fixture's post-gap DML). The
     * epoch boundary (maxKey) is derived HERE from [[ordersMaxKey]] rather
     * than taken from the caller: the spill cache key is (session, sfDir,
@@ -137,10 +138,10 @@ object CdcPipeline {
     * divergence impossible. */
   def ordersEpoch2Events(s: SparkSession, d: String): DataFrame =
     sharedEvents(s, d, "orders_epoch2")(
-      decodeFrames(ordersToFramesEpoch2(s, d, ordersMaxKey(s, d))).toDF())
+      decodeFrames(ordersToFramesEpoch2(s, d, ordersMaxKey(s, d))))
   def ordersRetypeEvents(s: SparkSession, d: String): DataFrame =
     sharedEvents(s, d, "orders_retype")(
-      decodeFrames(ordersToFramesRetyping(s, d)).toDF())
+      decodeFrames(ordersToFramesRetyping(s, d)))
   /** max(o_orderkey) — the failover fixture's epoch boundary; a pure
     * function of the orders table, memoized so the fixture builder and the
     * queries' slot-LSN arithmetic pay the scan once per (session, sfDir). */
@@ -1319,31 +1320,30 @@ object CdcPipeline {
     // two jobs overlap on idle cores — measured 7.6 s; caching the frames
     // to decode once measured 9.4 s and caching the decoded envelope 14.3 s
     // (MapType columnar cache build costs more than the duplicate work).
-    val events = decodeFrames(lineitemToFrames(spark, sfDir)).toDF()
+    val events = decodeFrames(lineitemToFrames(spark, sfDir))
     Cdc.materialize(events, lineitemRelation)
   }
 
-  /** Binary frames → envelope rows. Pure per-partition decode: each
-    * partition carries its own leading Relation frame, so no cross-partition
-    * schema dependency exists (the streaming source does the same per
+  /** Binary frames → envelope rows of `Envelope.schema`, the same shape the
+    * `pgcdc` source emits. Pure per-partition decode: each partition
+    * carries its own leading Relation frame, so no cross-partition schema
+    * dependency exists (the streaming source does the same per
     * micro-batch). */
-  def decodeFrames(frames: Dataset[(Long, Array[Byte])]): Dataset[ChangeEvent] =
+  def decodeFrames(frames: Dataset[(Long, Array[Byte])]): DataFrame =
     decodeFrames(frames, emitMessages = false)
 
-  def decodeFrames(
-      frames: Dataset[(Long, Array[Byte])], emitMessages: Boolean): Dataset[ChangeEvent] = {
+  def decodeFrames(frames: Dataset[(Long, Array[Byte])], emitMessages: Boolean): DataFrame = {
     import frames.sparkSession.implicits._
-    frames.mapPartitions { iter =>
+    Envelope.frame(frames.mapPartitions { iter =>
       val registry = new SchemaRegistry
       val builder = new ChangeEventBuilder(registry, emitMessages = emitMessages)
       iter.flatMap { case (lsn, payload) => builder.processRaw(lsn, payload) }
-    }
+    })
   }
-
 
   /** Full slice: generate frames → decode → compact → typed current state. */
   def materializedOrders(spark: SparkSession, sfDir: String, pattern: DmlPattern): DataFrame = {
-    val events = decodeFrames(ordersToFrames(spark, sfDir, pattern)).toDF()
+    val events = decodeFrames(ordersToFrames(spark, sfDir, pattern))
     val fillToast = pattern.toastPriorityOnUpdate
     Cdc.materialize(events, ordersRelation, fillToast)
   }
@@ -1367,7 +1367,7 @@ object CdcPipeline {
     import spark.implicits._
     val names = rel.columns.map(_.name)
     val st = Cdc.compactFillingToast(
-        events.filter(col("relationId") === rel.relationId), rel.keyColumnNames)
+        events.filter(col("relation_id") === rel.relationId), rel.keyColumnNames)
       .select(col("lsn"), col("after")).as[(Long, Map[String, String])]
     val relFrame = PgOutputEncoder.encode(rel)
     st.mapPartitions { rows =>

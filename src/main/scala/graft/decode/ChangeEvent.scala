@@ -4,8 +4,11 @@ package graft.decode
   * cleared on `Commit` (reference: reader.py:203-228 "T7"). */
 final case class TxnMeta(txId: Int, beginLsn: Long, commitTsUs: Long)
 
-/** The engine's envelope row — the Spark realization of the reference's
-  * `ChangeEvent` (models.py:64-76, SURVEY.md §1.1).
+/** One decoded change — the object [[ChangeEventBuilder]] emits, the Spark
+  * realization of the reference's `ChangeEvent` (models.py:64-76, SURVEY.md
+  * §1.1). Its row form is `graft.sources.Envelope.schema`: the fields
+  * follow that schema's order, and `Envelope.frame` renames a
+  * `Dataset[ChangeEvent]` into it (camelCase here, snake_case as columns).
   *
   * Dynamic table shapes ride in `Map[colName -> textValue]` images (pgoutput
   * sends all values as text); per-table *typed* views are derived later from

@@ -117,11 +117,9 @@ object TypedView {
     * Rows with `size(_errors) > 0` are the error channel: route them to a
     * dead-letter sink and keep the pipeline running — where the reference
     * throws and stops its single-threaded loop. */
-  def ofAfterValidated(
-      envelope: DataFrame, rel: Relation, notNull: Set[String],
-      toastedCol: String = "after_toasted"): DataFrame = {
+  def ofAfterValidated(envelope: DataFrame, rel: Relation, notNull: Set[String]): DataFrame = {
     val img = col("after")
-    val toasted = coalesce(col(toastedCol), array())
+    val toasted = coalesce(col("after_toasted"), array())
     val errs = rel.columns.flatMap { rc =>
       val raw = element_at(img, rc.name)
       val castErr =

@@ -148,7 +148,7 @@ object CdcQueries {
     // per-partition narrow; one pk shuffle for compaction).
     "cdc_binary_roundtrip" -> ((s, d) =>
       finish(graft.cdc.Cdc.materialize(
-        CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesBinary(s, d)).toDF(),
+        CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesBinary(s, d)),
         CdcPipeline.ordersRelation))),
 
     // Inserts + updates (key%10==0: totalprice+1, no old image on the wire)
@@ -170,11 +170,10 @@ object CdcQueries {
     // validation is a narrow codegen'd projection (try_cast per column) —
     // no shuffle until the final presentation sort.
     "cdc_dead_letter" -> ((s, d) => {
-      val env = CdcPipeline.decodeFrames(
-          CdcPipeline.ordersToFramesCorrupted(s, d)).toDF()
+      val env = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesCorrupted(s, d))
         .filter(col("op") === "I")
       graft.decode.TypedView.ofAfterValidated(env, CdcPipeline.ordersRelation,
-          notNull = Set("o_orderkey", "o_custkey"), toastedCol = "afterToasted")
+          notNull = Set("o_orderkey", "o_custkey"))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           array_join(sort_array(col("_errors")), ",").as("errors"),
           (size(col("_errors")) > 0).as("quarantined"))
@@ -251,7 +250,7 @@ object CdcQueries {
       // jobs with the decode subtree serialized 6x in the plan. The
       // checkpointed frame is the 4-column typed projection (narrow,
       // event-count rows), so the wire path runs once.
-      val ev = CdcPipeline.decodeFrames(CdcPipeline.eventsUserToFrames(s, d)).toDF()
+      val ev = CdcPipeline.decodeFrames(CdcPipeline.eventsUserToFrames(s, d))
         .filter(col("op") === "I")
         .select(
           element_at(col("after"), "event_id").cast("long").as("event_id"),
@@ -322,7 +321,7 @@ object CdcQueries {
       // hourly, fits + forecast off the fold) and each re-ran the wire
       // encode+decode. The checkpointed frame is the 3-column typed
       // projection; the wire path runs once.
-      val ev = CdcPipeline.decodeFrames(CdcPipeline.eventsFullToFrames(s, d)).toDF()
+      val ev = CdcPipeline.decodeFrames(CdcPipeline.eventsFullToFrames(s, d))
         .filter(col("op") === "I")
         .select(
           element_at(col("after"), "event_type").as("event_type"),
@@ -344,7 +343,7 @@ object CdcQueries {
     // group-keyed shuffle per batch; the streaming form is the unchanged
     // Streams.incrementalAggSink over this relation.
     "cdc_incremental_baseline" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(CdcPipeline.eventsToFrames(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.eventsToFrames(s, d))
       graft.cdc.Cdc.incrementalAggregate(events, "etype_hr", "cents")
         .select(
           split(col("g"), "\\|").getItem(0).as("event_type"),
@@ -367,7 +366,7 @@ object CdcQueries {
     "cdc_online_dedup" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("content_hash")).orderBy(col("lsn"), col("seq"))
-      CdcPipeline.decodeFrames(CdcPipeline.documentsToFrames(s, d)).toDF()
+      CdcPipeline.decodeFrames(CdcPipeline.documentsToFrames(s, d))
         .filter(col("op") === "I")
         .select(element_at(col("after"), "doc_id").cast("long").as("doc_id"),
           md5(element_at(col("after"), "text").cast("binary")).as("content_hash"),
@@ -648,7 +647,7 @@ object CdcQueries {
     "cdc_chunked_snapshot" -> ((s, d) => {
       val wal = CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(s, d,
         DmlPattern(updates = true, deletes = true, fullImages = true,
-          inserts = false))).toDF()
+          inserts = false)))
       val chunks = CdcPipeline.ordersSnapshotChunks(s, d, nChunks = 8)
       val merged = graft.cdc.Cdc.dblogMerge(wal, chunks, Seq("o_orderkey"))
       finish(graft.decode.TypedView.ofAfter(merged, CdcPipeline.ordersRelation))
@@ -758,8 +757,7 @@ object CdcQueries {
     // point; the v2 typed view surfaces pre-evolution rows with NULL
     // o_note. Hash-checked end-to-end — not just spec-pinned.
     "cdc_schema_evolution" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesEvolving(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesEvolving(s, d))
       graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelationV2)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_note"))
         .orderBy(col("o_orderkey"))
@@ -792,8 +790,7 @@ object CdcQueries {
     // Spark side but float64 on the oracle side (Verify refuses decimal
     // outputs for exactly this reason).
     "cdc_numeric_typed" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesNumeric(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesNumeric(s, d))
       graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelationNumeric)
         .select(col("o_orderkey"),
           col("o_totalprice").cast("double").as("o_totalprice"))
@@ -808,9 +805,8 @@ object CdcQueries {
     // logical table would split each key's history across two states and
     // hash-fail the updates.
     "cdc_partitioned_table" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-          CdcPipeline.ordersToFramesPartitioned(s, d)).toDF()
-        .filter(col("relationId").isin(
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesPartitioned(s, d))
+        .filter(col("relation_id").isin(
           CdcPipeline.OrdersP0RelId, CdcPipeline.OrdersP1RelId))
       finish(graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelation))
     }),
@@ -821,8 +817,7 @@ object CdcQueries {
     // projects it — no historical-state rewrite (the lazy-projection
     // property that also makes ADD COLUMN free).
     "cdc_schema_drop" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesDropping(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesDropping(s, d))
       graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelationV3)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"))
@@ -876,8 +871,7 @@ object CdcQueries {
     // in-flight streamed bytes — the consumer-side mirror of what keeps
     // replication lag flat when a bulk load writes one huge transaction.
     "cdc_streamed_txn" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesStreamed(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesStreamed(s, d))
       graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelation)
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
@@ -889,14 +883,13 @@ object CdcQueries {
     // k % 5 == 0 keys emit a NON-transactional "heartbeat" mid-txn (emitted
     // immediately at its own WAL position, outside the txn → tx_id = -1).
     "cdc_logical_messages" -> ((s, d) => {
-      CdcPipeline.decodeFrames(
-          CdcPipeline.ordersToFramesWithMessages(s, d), emitMessages = true).toDF()
+      CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesWithMessages(s, d), emitMessages = true)
         .filter(col("op") === "M")
         .select(col("lsn"),
           element_at(col("after"), "prefix").as("prefix"),
           element_at(col("after"), "content").as("content"),
           (element_at(col("after"), "transactional") === "true").as("transactional"),
-          col("txId").as("tx_id"))
+          col("tx_id"))
         .orderBy(col("lsn"), col("prefix"))
     }),
 
@@ -914,8 +907,7 @@ object CdcQueries {
         .agg(max(col("o_orderkey"))).head().getLong(0) / 2
       val snapshot = graft.Tables.orders(s, d).filter(col("o_orderkey") <= mid)
         .select(cols.map(col): _*)
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesTail(s, d, mid)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesTail(s, d, mid))
       val streamed = graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelation)
         .select(cols.map(col): _*)
       snapshot.join(streamed, Seq("o_orderkey"), "left_anti")
@@ -929,8 +921,7 @@ object CdcQueries {
     // WAL; rolled-back ones leave no trace, in-doubt ones are held, and
     // committed ones emit with the COMMIT PREPARED timestamp.
     "cdc_two_phase" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesTwoPhase(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesTwoPhase(s, d))
       graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelation)
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
@@ -945,7 +936,7 @@ object CdcQueries {
     // reference), so the filter is a narrow predicate before compaction.
     "cdc_origin_filter" -> ((s, d) => {
       val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(s, d,
-        DmlPattern(originOnMod3 = true))).toDF()
+        DmlPattern(originOnMod3 = true)))
       graft.cdc.Cdc.materialize(
           events.filter(col("origin").isNull), CdcPipeline.ordersRelation)
         .select(col("o_orderkey"), col("o_totalprice"))
@@ -992,9 +983,9 @@ object CdcQueries {
     // O(history).
     "cdc_compacted_replay" -> ((s, d) => {
       val full = CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(s, d,
-        DmlPattern(updates = true, deletes = true, toastPriorityOnUpdate = true))).toDF()
+        DmlPattern(updates = true, deletes = true, toastPriorityOnUpdate = true)))
       val compacted = CdcPipeline.compactFrames(full, CdcPipeline.ordersRelation)
-      val events = CdcPipeline.decodeFrames(compacted).toDF()
+      val events = CdcPipeline.decodeFrames(compacted)
       finish(graft.cdc.Cdc.materialize(events, CdcPipeline.ordersRelation))
     }),
 
@@ -1012,7 +1003,7 @@ object CdcQueries {
     // the same one-pk-shuffle lead-window build every SCD2 consumer pays.
     "cdc_temporal_join" -> ((s, d) => {
       val events = CdcPipeline.decodeFrames(CdcPipeline.jointOrdersFrames(s, d,
-        DmlPattern(updates = true, deletes = true))).toDF()
+        DmlPattern(updates = true, deletes = true)))
       val hist = graft.cdc.Cdc.scd2History(events, Seq("o_orderkey"))
         .select(col("__key_o_orderkey").cast("bigint").as("h_key"),
           element_at(col("after"), "o_totalprice").cast("double").as("price"),
@@ -1069,8 +1060,7 @@ object CdcQueries {
     // commit time would let site B's huge WAL offsets win every conflict
     // and hash-fail the tie/local-newer cases.
     "cdc_multi_origin_lww" -> ((s, d) => {
-      val events = CdcPipeline.decodeFrames(
-        CdcPipeline.ordersToFramesBiDir(s, d)).toDF()
+      val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFramesBiDir(s, d))
       graft.cdc.Cdc.lwwCompact(events, Seq("o_orderkey"))
         .select(
           element_at(col("after"), "o_orderkey").cast("bigint").as("o_orderkey"),
@@ -1084,7 +1074,7 @@ object CdcQueries {
       events.filter(col("op").isin("I", "U", "D"))
         .groupBy(col("op"))
         .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("txId")).as("n_txns"),
+          countDistinct(col("tx_id")).as("n_txns"),
           min(col("lsn")).as("min_lsn"),
           max(col("lsn")).as("max_lsn"))
         .orderBy(col("op"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -8,10 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.decode.ChangeEvent
 
-/** The fixed envelope schema every CDC source emits (SURVEY.md §1.1):
-  * dynamic table shapes ride in string→string image maps; typed views are
-  * derived downstream from the schema registry. Snake_case names on the
-  * wire-facing surface. */
+/** The one envelope row shape (SURVEY.md §1.1), for batch and stream
+  * alike: the `pgcdc` source emits it, and batch decode
+  * (`CdcPipeline.decodeFrames`) renames its [[ChangeEvent]] Dataset into
+  * it with [[frame]]. Dynamic table shapes ride in string→string image
+  * maps; typed views are derived downstream from the schema registry. */
 object Envelope {
 
   val schema: StructType = StructType(Seq(
@@ -31,6 +33,10 @@ object Envelope {
     StructField("before_toasted", ArrayType(StringType), nullable = true),
     StructField("after_toasted", ArrayType(StringType), nullable = true),
     StructField("origin", StringType, nullable = true)))
+
+  /** `ChangeEvent` objects as envelope rows: [[ChangeEvent]]'s fields
+    * follow [[schema]]'s order, so one positional rename. */
+  def frame(ds: Dataset[ChangeEvent]): DataFrame = ds.toDF(schema.fieldNames: _*)
 
   private def utf8(s: String): UTF8String =
     if (s == null) null else UTF8String.fromString(s)

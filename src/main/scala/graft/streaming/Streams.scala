@@ -122,10 +122,10 @@ object Streams {
   private def mergeCompact(batch: DataFrame, existing: Option[DataFrame],
       keys: Seq[String]): DataFrame = {
     val events = batch.select(col("op"), col("lsn"), col("seq"), col("key"),
-      col("after"), col("after_toasted").as("afterToasted"))
+      col("after"), col("after_toasted"))
     val all = existing.fold(events)(st => st.select(lit("I").as("op"),
       col("__lsn").as("lsn"), col("__seq").as("seq"), col("__key").as("key"),
-      col("__after").as("after"), lit(null).cast("array<string>").as("afterToasted"))
+      col("__after").as("after"), lit(null).cast("array<string>").as("after_toasted"))
       .unionByName(events))
     Cdc.compactFillingToast(all, keys).select(
       col("lsn").as("__lsn"), col("seq").as("__seq"), col("after").as("__after"),
@@ -188,7 +188,7 @@ object Streams {
     * once older than the deployment's maximum cross-site replication lag. */
   private def mergeLwwCompact(batch: DataFrame, existing: Option[DataFrame],
       keys: Seq[String]): DataFrame = {
-    val events = batch.select(col("op"), col("commit_ts_us").as("commitTsUs"),
+    val events = batch.select(col("op"), col("commit_ts_us"),
       col("origin"), col("lsn"), col("seq"), col("after"), col("key"))
     val all = existing.fold(events)(st => st.select(col("__op"), col("__ts"),
       col("__origin"), col("__lsn"), col("__seq"), col("__after"), col("__key"))
@@ -3058,7 +3058,7 @@ object Streams {
   def assembleTransactions(envelope: DataFrame): Dataset[TxnEnvelope] = {
     import envelope.sparkSession.implicits._
     envelope
-      .select(col("tx_id").as("txId"), col("op"), col("lsn"))
+      .select(col("tx_id"), col("op"), col("lsn"))
       .as[(Int, String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[TxnBuf, TxnEnvelope](

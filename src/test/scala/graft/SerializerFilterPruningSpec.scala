@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.plans.logical.SerializeFromObject
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.decode._
+
 /** A wide object crossing the serializer boundary (top-level: encoders
   * need a stable class). */
 case class WideObj(a: Long, b: String, c: Map[String, String], d: Seq[String])
@@ -84,5 +86,22 @@ class SerializerFilterPruningSpec extends AnyFunSuite {
     }
     assert(ser.head.serializer.size === 4)
     assert(df.count() === 1L)
+  }
+
+  test("the real decode path prunes its serializer to the filtered and read fields") {
+    import spark.implicits._
+    val row = TupleData(Vector(ColumnData('t', Some("1"))))
+    val frames = Seq(0L -> Relation(5, "public", "t", 'd', Vector(
+        RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1))),
+      10L -> Begin(13, 0, 1), 11L -> Insert(5, row), 12L -> Update(5, None, None, row),
+      13L -> Commit(0, 13, 13, 0))
+      .map { case (lsn, m) => (lsn, PgOutputEncoder.encode(m)) }.toDS().coalesce(1)
+    val df = graft.cdc.CdcPipeline.decodeFrames(frames)
+      .filter(col("op") === "U").select(col("lsn"), col("after"))
+    val ser = df.queryExecution.optimizedPlan.collect {
+      case s: SerializeFromObject => s.serializer.map(_.name).toSet
+    }
+    assert(ser === Seq(Set("op", "lsn", "after")))
+    assert(df.collect().map(_.getLong(0)).toSeq === Seq(12L))
   }
 }

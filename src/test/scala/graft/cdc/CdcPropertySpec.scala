@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.decode._
+import graft.sources.Envelope
 
 /** Property test: the distributed compaction equals a sequential in-memory
   * interpretation of the same event sequence — under random DML mixes,
@@ -110,7 +111,7 @@ class CdcPropertySpec extends AnyFunSuite {
     def check[K](events: Seq[ChangeEvent], keys: Seq[String],
         keyOf: Map[String, String] => K, rnd: Random, clue: String): Unit = {
       val expected = interpret(events, (e: ChangeEvent) => keyOf(e.key))
-      val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
+      val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(7))
       val rows = Cdc.compactFillingToast(df, keys).collect().toSeq.map { r =>
         val m = r.getMap[String, String](r.fieldIndex("after")).toMap
         keyOf(m) -> m
@@ -185,7 +186,7 @@ class CdcPropertySpec extends AnyFunSuite {
       val expected = finalState.values.groupBy(_("g")).map { case (g, rows) =>
         (g, BigDecimal(rows.map(r => BigInt(r("v"))).sum).setScale(6).toString, rows.size.toLong)
       }.toSeq.sortBy(_._1)
-      val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
+      val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(7))
       val incr = Cdc.incrementalAggregate(df, "g", "v")
         .orderBy("g").collect()
         .map(r => (r.getString(0), r.getDecimal(1).toPlainString, r.getLong(2))).toSeq
@@ -225,7 +226,7 @@ class CdcPropertySpec extends AnyFunSuite {
         val xs = rows.map(r => BigInt(r("v")) * 100)
         (g, xs.sum.toString, xs.map(x => x * x).sum.toString, rows.size.toLong)
       }.toSeq.sortBy(_._1)
-      val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
+      val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(7))
       val got = Cdc.incrementalStats(df, "g", "v")
         .orderBy("g").collect()
         .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
@@ -258,7 +259,7 @@ class CdcPropertySpec extends AnyFunSuite {
         BigDecimal(rows.map(r => BigInt(r("w"))).sum).setScale(6).toString,
         rows.size.toLong)
     }.toSeq.sortBy(_._1)
-    val df = spark.createDataset(rnd.shuffle(events)).repartition(6).toDF()
+    val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(6))
     val got = Cdc.incrementalAggregate(df, "g", Seq("v", "w"))
       .orderBy("g").collect()
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
@@ -283,7 +284,7 @@ class CdcPropertySpec extends AnyFunSuite {
         val vs = rows.map(r => BigDecimal(r("v")).setScale(6))
         (g, vs.min.toString, vs.max.toString, rows.size.toLong)
       }.toSeq.sortBy(_._1)
-      val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
+      val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(7))
       val got = Cdc.incrementalMinMax(df, "g", "v")
         .orderBy("g").collect()
         .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
@@ -294,7 +295,6 @@ class CdcPropertySpec extends AnyFunSuite {
 
   test("bounded MIN/MAX state across random micro-batch splits matches the reference (k=2 forces rescans)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     (1 to 3).foreach { trial =>
       val rnd = new Random(300 + trial)
       val events = randomFullImageEvents(rnd, n = 400, keySpace = 25)
@@ -320,9 +320,7 @@ class CdcPropertySpec extends AnyFunSuite {
           }
         }
         val tableNow = ref.values.map(r => (r("g"), r("v"))).toSeq
-        val env = spark.createDataset(b).toDF()
-          .select(col("relationId").as("relation_id"), col("lsn"), col("seq"),
-            col("op"), col("before"), col("after"))
+        val env = Envelope.frame(spark.createDataset(b))
         graft.streaming.Streams.mergeMinMaxBatch(env,
           Relation(1, "public", "t", 'f', Vector(
             RelationColumn(partOfKey = true, "id", TypedView.Oid.Text, -1))),
@@ -343,7 +341,6 @@ class CdcPropertySpec extends AnyFunSuite {
 
   test("top-k net-count state across random micro-batch splits + replays matches the reference") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     (1 to 3).foreach { trial =>
       val rnd = new Random(400 + trial)
       val events = randomFullImageEvents(rnd, n = 400, keySpace = 25)
@@ -359,9 +356,7 @@ class CdcPropertySpec extends AnyFunSuite {
       val rel = Relation(1, "public", "t", 'f', Vector(
         RelationColumn(partOfKey = true, "id", TypedView.Oid.Text, -1)))
       batches.foreach { b =>
-        val env = spark.createDataset(b).toDF()
-          .select(col("relationId").as("relation_id"), col("lsn"), col("seq"),
-            col("op"), col("before"), col("after"))
+        val env = Envelope.frame(spark.createDataset(b))
         graft.streaming.Streams.mergeTopKBatch(env, rel, "g", "v", stateDir, None)
         // at-least-once: random batches re-deliver; the high-water makes
         // the replay a no-op
@@ -435,7 +430,7 @@ class CdcPropertySpec extends AnyFunSuite {
       val rnd = new Random(500 + trial)
       val events = randomLwwEvents(rnd, n = 400, keySpace = 30)
       val expected = lwwInterpret(events)
-      val df = spark.createDataset(rnd.shuffle(events)).repartition(7).toDF()
+      val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(7))
       val got = Cdc.lwwCompact(df, Seq("id")).collect().map { r =>
         val m = r.getMap[String, String](r.fieldIndex("after"))
         m("id") -> m("v")
@@ -446,7 +441,6 @@ class CdcPropertySpec extends AnyFunSuite {
 
   test("LWW state merge across random micro-batch splits equals the one-shot compaction") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val rel = Relation(1, "public", "t", 'd', Vector(
       RelationColumn(partOfKey = true, "id", TypedView.Oid.Text, -1),
       RelationColumn(partOfKey = false, "v", TypedView.Oid.Text, -1)))
@@ -465,14 +459,7 @@ class CdcPropertySpec extends AnyFunSuite {
       val stateDir = java.nio.file.Files.createTempDirectory(s"lwwprop$trial")
         .resolve("state").toString
       batches.foreach { b =>
-        val env = spark.createDataset(b).toDF()
-          .withColumnRenamed("messageId", "message_id")
-          .withColumnRenamed("txId", "tx_id")
-          .withColumnRenamed("beginLsn", "begin_lsn")
-          .withColumnRenamed("commitTsUs", "commit_ts_us")
-          .withColumnRenamed("relationId", "relation_id")
-          .withColumnRenamed("beforeToasted", "before_toasted")
-          .withColumnRenamed("afterToasted", "after_toasted")
+        val env = Envelope.frame(spark.createDataset(b))
         graft.streaming.Streams.mergeLwwBatch(env, rel, Seq("id"), stateDir)
       }
       val got = graft.streaming.Streams.lwwState(spark, rel, stateDir)
@@ -486,7 +473,7 @@ class CdcPropertySpec extends AnyFunSuite {
     val rnd = new Random(7)
     val events = randomEvents(rnd, n = 300, keySpace = 25)
     val expectedKeys = interpret(events).keySet
-    val df = spark.createDataset(rnd.shuffle(events)).repartition(5).toDF()
+    val df = Envelope.frame(spark.createDataset(rnd.shuffle(events)).repartition(5))
     val gotKeys = Cdc.compact(df, Seq("id")).collect()
       .map(r => r.getMap[String, String](r.fieldIndex("key"))("id")).toSet
     assert(gotKeys === expectedKeys)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.decode._
+import graft.sources.Envelope
 
 /** Compaction semantics over hand-built envelope events: last-LSN-wins,
   * delete removal, truncate high-water mark, TOAST repair, delete-then-
@@ -27,7 +28,7 @@ class CdcSpec extends AnyFunSuite {
 
   private def compactIds(events: Seq[ChangeEvent], fillToast: Boolean = false): Map[String, String] = {
     import spark.implicits._
-    val df = spark.createDataset(events).toDF()
+    val df = Envelope.frame(spark.createDataset(events))
     val out = if (fillToast) Cdc.compactFillingToast(df, Seq("id"))
               else Cdc.compact(df, Seq("id"))
     out.collect().map { r =>
@@ -50,12 +51,12 @@ class CdcSpec extends AnyFunSuite {
       ev("I", 30, 0, "3", Map("id" -> "3", "v" -> "c")),
       ev("U", 31, 0, "3", Map("id" -> "3", "v" -> "c2")),
       ev("U", 32, 0, "3", Map("id" -> "3", "v" -> "c3")))
-    val compacted = CdcPipeline.compactFrames(spark.createDataset(events).toDF(), rel)
+    val compacted = CdcPipeline.compactFrames(Envelope.frame(spark.createDataset(events)), rel)
     // 1 Relation frame per partition + 3 frames per surviving key (2 keys)
     val frames = compacted.collect()
     assert(frames.count(_._1 != 0L) === 6)
     val replayed = Cdc.materialize(
-      CdcPipeline.decodeFrames(compacted).toDF(), rel)
+      CdcPipeline.decodeFrames(compacted), rel)
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(replayed === Map(1L -> "a", 3L -> "c3"))
   }
@@ -85,7 +86,7 @@ class CdcSpec extends AnyFunSuite {
 
   private def lwwIds(events: Seq[ChangeEvent]): Map[String, String] = {
     import spark.implicits._
-    Cdc.lwwCompact(spark.createDataset(events).toDF(), Seq("id"))
+    Cdc.lwwCompact(Envelope.frame(spark.createDataset(events)), Seq("id"))
       .collect().map { r =>
         val m = r.getMap[String, String](r.fieldIndex("after"))
         m("id") -> m.getOrElse("v", null)
@@ -135,7 +136,7 @@ class CdcSpec extends AnyFunSuite {
       ev("T", 20, 2, null, null).copy(key = Map.empty),
       ev("I", 30, 3, "2", Map("id" -> "2", "v" -> "new")))
     import spark.implicits._
-    val df = spark.createDataset(events).toDF()
+    val df = Envelope.frame(spark.createDataset(events))
     val out = Cdc.compact(df, Seq("id")).collect()
     assert(out.length === 1)
     assert(out.head.getMap[String, String](out.head.fieldIndex("after"))("id") === "2")
@@ -163,7 +164,7 @@ class CdcSpec extends AnyFunSuite {
       ev("T", 20, 2, null, null).copy(key = Map.empty),
       ev("I", 30, 3, "2", Map("id" -> "2", "v" -> "new")))
     import spark.implicits._
-    val df = spark.createDataset(events).toDF()
+    val df = Envelope.frame(spark.createDataset(events))
     val out = Cdc.compactFillingToast(df, Seq("id")).collect()
     assert(out.length === 1)
     assert(out.head.getMap[String, String](out.head.fieldIndex("after"))("id") === "2")
@@ -186,7 +187,7 @@ class CdcSpec extends AnyFunSuite {
       ev("I", 10, 1, "1", ListMap("id" -> "1", "v" -> "v1", "w" -> "w1", "x" -> "x1", "y" -> "y1")),
       ev("U", 20, 2, "1", ListMap("x" -> "x2", "id" -> "1", "y" -> "y2"), toasted = Seq("w", "v")),
       ev("I", 30, 3, "2", ListMap("y" -> "y3", "x" -> "x3", "w" -> "w3", "v" -> "v3", "id" -> "2")))
-    val out = Cdc.compactFillingToast(spark.createDataset(events).toDF(), Seq("id"))
+    val out = Cdc.compactFillingToast(Envelope.frame(spark.createDataset(events)), Seq("id"))
       .select(org.apache.spark.sql.functions.map_keys($"after"),
         org.apache.spark.sql.functions.map_values($"after"), $"lsn")
       .collect().map(r => r.getLong(2) -> (r.getSeq[String](0), r.getSeq[String](1))).toMap
@@ -208,7 +209,7 @@ class CdcSpec extends AnyFunSuite {
 
   private def scd2(events: Seq[ChangeEvent]): Seq[(String, String, Long, Option[Long], Boolean)] = {
     import spark.implicits._
-    val df = spark.createDataset(events).toDF()
+    val df = Envelope.frame(spark.createDataset(events))
     Cdc.scd2History(df, Seq("id")).collect().map { r =>
       val m = r.getMap[String, String](r.fieldIndex("after"))
       val to = r.fieldIndex("valid_to_lsn")
@@ -258,7 +259,7 @@ class CdcSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, element_at}
     val events = CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(spark,
       "/root/testdata/sf0.001",
-      CdcPipeline.DmlPattern(updates = true, deletes = true))).toDF()
+      CdcPipeline.DmlPattern(updates = true, deletes = true)))
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(element_at(col("after"), "o_orderkey").cast("long"),
         element_at(col("after"), "o_totalprice").cast("double"))
@@ -297,7 +298,7 @@ class CdcSpec extends AnyFunSuite {
       ChangeEvent("D", "14-5", 14, 5, 1, 14, 0L, "public", "t", 1,
         Map("id" -> "1"), Map("id" -> "1", "grp" -> "a", "val" -> "100"),
         null, Nil, Nil))
-    val out = Cdc.incrementalTopK(spark.createDataset(events).toDF(), "grp", "val", 3)
+    val out = Cdc.incrementalTopK(Envelope.frame(spark.createDataset(events)), "grp", "val", 3)
       .orderBy(org.apache.spark.sql.functions.col("rk"))
       .collect().map(r => (r.getAs[java.math.BigDecimal]("v").doubleValue, r.getAs[Int]("rk")))
     assert(out.toSeq === Seq((90.0, 1), (80.0, 2), (70.0, 3)))
@@ -310,10 +311,10 @@ class CdcSpec extends AnyFunSuite {
     def gev(lsn: Long, seq: Long, id: String, g: String, v: String) =
       ChangeEvent("I", s"$lsn-$seq", lsn, seq, 1, lsn, 0L, "public", "t", 1,
         Map("id" -> id), null, Map("id" -> id, "grp" -> g, "val" -> v), Nil, Nil)
-    val df = spark.createDataset(Seq(
+    val df = Envelope.frame(spark.createDataset(Seq(
       gev(10, 1, "1", "5", "1.5"),
       gev(11, 2, "2", "5.0", "2.5"),
-      gev(12, 3, "3", "5.00", "3.0"))).toDF()
+      gev(12, 3, "3", "5.00", "3.0"))))
     val raw = Cdc.incrementalMinMax(df, "grp", "val").collect()
     assert(raw.length === 3) // the trap the canonicalizer exists for
     val canon = Cdc.incrementalMinMax(df, "grp", "val", groupType = Some("double"))
@@ -338,11 +339,11 @@ class CdcSpec extends AnyFunSuite {
     //         select, so a post-sample record starts exactly at lo —
     //         live-observed on the failover leg, where the strict test let
     //         a raced update lose to the stale chunk read)
-    val wal = spark.createDataset(Seq(
+    val wal = Envelope.frame(spark.createDataset(Seq(
       ev("U", 15, 1, "1", Map("id" -> "1", "v" -> "new1")),
       ev("U", 25, 2, "2", Map("id" -> "2", "v" -> "new2")),
       ev("D", 18, 3, "3", null),
-      ev("U", 10, 5, "5", Map("id" -> "5", "v" -> "new5")))).toDF()
+      ev("U", 10, 5, "5", Map("id" -> "5", "v" -> "new5")))))
     val chunks = Seq(
       (0L, 10L, 20L, Map("id" -> "1"), Map("id" -> "1", "v" -> "old1")),
       (0L, 10L, 20L, Map("id" -> "2"), Map("id" -> "2", "v" -> "old2")),

@@ -68,9 +68,9 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // plain envelope compaction: events -> one hash exchange for the window
-    val events = Seq(
+    val events = graft.sources.Envelope.frame(Seq(
       graft.decode.ChangeEvent("I", "1-1", 1, 1, 1, 1, 0, "public", "t", 1,
-        Map("id" -> "1"), null, Map("id" -> "1", "v" -> "a"), Nil, Nil)).toDS().toDF()
+        Map("id" -> "1"), null, Map("id" -> "1", "v" -> "a"), Nil, Nil)).toDS())
     val out = graft.cdc.Cdc.compact(events, Seq("id"))
     val p = out.queryExecution.explainString(ExplainMode.fromString("formatted"))
     // one exchange for the window partitioning; the truncate high-water mark
@@ -160,9 +160,9 @@ class PlanSpec extends AnyFunSuite {
 
   test("scd2 history costs one pk shuffle — same as compaction (the lead window)") {
     import spark.implicits._
-    val events = Seq(
+    val events = graft.sources.Envelope.frame(Seq(
       graft.decode.ChangeEvent("I", "1-1", 1, 1, 1, 1, 0, "public", "t", 1,
-        Map("id" -> "1"), null, Map("id" -> "1", "v" -> "a"), Nil, Nil)).toDS().toDF()
+        Map("id" -> "1"), null, Map("id" -> "1", "v" -> "a"), Nil, Nil)).toDS())
     val out = graft.cdc.Cdc.scd2History(events, Seq("id"))
     val p = out.queryExecution.explainString(ExplainMode.fromString("formatted"))
     val dataShuffles = p.linesIterator.count(l => l.contains("hashpartitioning"))

@@ -2,15 +2,17 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.decode._
+import graft.streaming.Streams
 
 /** The replayable DSv2 source end-to-end: batch read, micro-batch
-  * streaming with admission control, offset restart, txn markers. */
+  * streaming with admission control, offset restart, txn markers, and
+  * rows identical to batch decode's (one `Envelope.schema`). */
 class FrameReplaySourceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkSession.builder().master("local[4]")
@@ -75,7 +77,7 @@ class FrameReplaySourceSpec extends AnyFunSuite {
     writeLog(p, 20) // 61 frames
     val stream = spark.readStream.format("pgcdc")
       .option("path", p).option("maxFramesPerTrigger", "7").load()
-    val q = graft.streaming.Streams.observedEnvelope(stream)
+    val q = Streams.observedEnvelope(stream)
       .writeStream.format("memory").queryName("observed_out")
       .trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(60000)
@@ -211,6 +213,44 @@ class FrameReplaySourceSpec extends AnyFunSuite {
       .option("path", p).option("txn.markers", "true").load()
     val ops = df.orderBy("lsn", "seq").select("op").collect().map(_.getString(0)).toSeq
     assert(ops === Seq("B", "I", "C", "B", "I", "C", "B", "I", "C"))
+  }
+
+  test("decodeFrames and the pgcdc source read one log into the same envelope rows") {
+    // three inserts, a TOAST update, a key-only delete, a truncate and a
+    // post-truncate insert, one transaction each
+    val dml = Seq(Insert(7, TupleData(Vector(t("1"), t("a")))),
+      Insert(7, TupleData(Vector(t("2"), t("b")))), Insert(7, TupleData(Vector(t("3"), t("c")))),
+      Update(7, None, None, TupleData(Vector(t("1"), ColumnData('u', None)))),
+      Delete(7, 'K', TupleData(Vector(t("2"), ColumnData('n', None)))),
+      Truncate(0, Vector(7)), Insert(7, TupleData(Vector(t("4"), t("d")))))
+    val frames = ((0L -> rel) +: dml.zipWithIndex.flatMap { case (m, i) =>
+      val lsn = (i + 1) * 10L
+      Seq(lsn -> Begin(lsn + 2, 1000L * i, i + 1), (lsn + 1) -> m,
+        (lsn + 2) -> Commit(0, lsn + 2, lsn + 2, 1000L * i))
+    }).map { case (lsn, m) => (lsn, PgOutputEncoder.encode(m)) }
+    val p = Files.createTempDirectory("flog").resolve("log.bin").toString
+    FrameLog.write(p, frames.iterator.map { case (lsn, b) => FrameLog.Entry(lsn, b) })
+    import spark.implicits._
+    val batch = graft.cdc.CdcPipeline.decodeFrames(
+      spark.sparkContext.parallelize(frames, 1).toDS())
+    val source = spark.read.format("pgcdc").option("path", p).load()
+
+    assert(batch.schema.fieldNames.toSeq === Envelope.schema.fieldNames.toSeq)
+    assert(source.schema.fieldNames.toSeq === Envelope.schema.fieldNames.toSeq)
+    def rowCounts(df: DataFrame) =
+      df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+    assert(batch.count() === 7L) // 4 I, 1 U, 1 D, 1 T
+    assert(rowCounts(batch) === rowCounts(source))
+    assert(Streams.exactlyOnceEnvelope(batch).count() === 7L)
+    def observed(df: DataFrame) = {
+      val o = Streams.observedEnvelope(df)
+      o.collect()
+      o.queryExecution.observedMetrics("graft_cdc")
+    }
+    val metrics = observed(batch)
+    assert(metrics === observed(source))
+    assert(Seq("n_inserts", "n_updates", "n_deletes", "n_truncates", "n_toasted")
+      .map(metrics.getAs[Long]) === Seq(4L, 1L, 1L, 1L, 1L))
   }
 }
 

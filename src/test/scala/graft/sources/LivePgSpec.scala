@@ -705,7 +705,7 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
       sparkStarted = spark
       import spark.implicits._
       val finalRel = registry.get(relId).get
-      val state = graft.cdc.Cdc.materialize(events.toSeq.toDS().toDF(), finalRel)
+      val state = graft.cdc.Cdc.materialize(Envelope.frame(events.toSeq.toDS()), finalRel)
       val priceType = state.schema("price").dataType
       assert(priceType === org.apache.spark.sql.types.DecimalType(12, 2),
         s"typed view must surface the retyped DecimalType(12,2), got $priceType")
@@ -2146,7 +2146,7 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
       sparkStarted = spark
       import spark.implicits._
       import org.apache.spark.sql.functions.{col, element_at}
-      val walDf = eventsB.toSeq.toDS().toDF()
+      val walDf = Envelope.frame(eventsB.toSeq.toDS())
       val chunksDf = chunkRows.toSeq
         .map { case (c, lo, hi, id, v) =>
           (c, lo, hi, Map("id" -> id), Map("id" -> id, "v" -> v)) }

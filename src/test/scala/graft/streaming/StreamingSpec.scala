@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.decode._
-import graft.sources.FrameLog
+import graft.sources.{Envelope, FrameLog}
 
 /** Structured-streaming surface: event-time windows vs their batch twins,
   * stateful dedup, session windows, txn-atomic assembly, and the streaming
@@ -749,7 +749,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir)).toDF()
+      graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir))
     val expected = graft.cdc.Cdc.lwwCompact(events, Seq("o_orderkey"))
       .select(element_at(col("after"), "o_orderkey").cast("long").as("k"),
         element_at(col("after"), "o_totalprice").cast("double").as("p"))
@@ -804,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("o_orderkey", "o_totalprice").orderBy("o_orderkey")
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir)).toDF()
+      graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir))
     val expected = graft.cdc.Cdc.lwwCompact(events, Seq("o_orderkey"))
       .select(element_at(col("after"), "o_orderkey").cast("long").as("k"),
         element_at(col("after"), "o_totalprice").cast("double").as("p"))
@@ -817,16 +817,9 @@ class StreamingSpec extends AnyFunSuite {
     val before = StateStore.load(stateDir)
     val oneKey = expected.head._1
     val extra = graft.cdc.CdcPipeline.decodeFrames(
-        graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir)).toDF()
+        graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir))
       .filter(col("op") === "I" &&
         element_at(col("key"), "o_orderkey") === oneKey.toString)
-      .withColumnRenamed("messageId", "message_id")
-      .withColumnRenamed("txId", "tx_id")
-      .withColumnRenamed("beginLsn", "begin_lsn")
-      .withColumnRenamed("commitTsUs", "commit_ts_us")
-      .withColumnRenamed("relationId", "relation_id")
-      .withColumnRenamed("beforeToasted", "before_toasted")
-      .withColumnRenamed("afterToasted", "after_toasted")
     Streams.mergeLwwBatchBucketed(extra, rel, Seq("o_orderkey"), stateDir, 8)
     val after = StateStore.load(stateDir)
     val changed = (0 until 8).count(b => before.get(s"b$b") != after.get(s"b$b"))
@@ -1105,14 +1098,7 @@ class StreamingSpec extends AnyFunSuite {
         Map("id" -> id), null, after, Nil, Nil, origin)
     }
     def env(events: ChangeEvent*): org.apache.spark.sql.DataFrame =
-      spark.createDataset(events).toDF()
-        .withColumnRenamed("messageId", "message_id")
-        .withColumnRenamed("txId", "tx_id")
-        .withColumnRenamed("beginLsn", "begin_lsn")
-        .withColumnRenamed("commitTsUs", "commit_ts_us")
-        .withColumnRenamed("relationId", "relation_id")
-        .withColumnRenamed("beforeToasted", "before_toasted")
-        .withColumnRenamed("afterToasted", "after_toasted")
+      Envelope.frame(spark.createDataset(events))
     def state(): Seq[(String, String)] =
       Streams.lwwState(spark, rel, stateDir)
         .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
@@ -1159,14 +1145,7 @@ class StreamingSpec extends AnyFunSuite {
         Map("id" -> id), null, after, Nil, Nil, origin)
     }
     def env(events: ChangeEvent*): org.apache.spark.sql.DataFrame =
-      spark.createDataset(events).toDF()
-        .withColumnRenamed("messageId", "message_id")
-        .withColumnRenamed("txId", "tx_id")
-        .withColumnRenamed("beginLsn", "begin_lsn")
-        .withColumnRenamed("commitTsUs", "commit_ts_us")
-        .withColumnRenamed("relationId", "relation_id")
-        .withColumnRenamed("beforeToasted", "before_toasted")
-        .withColumnRenamed("afterToasted", "after_toasted")
+      Envelope.frame(spark.createDataset(events))
     def rowsAt(s: Long): Seq[(String, String)] =
       Streams.lwwStateAt(spark, rel, stateDir, s)
         .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
@@ -1302,7 +1281,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy("g").collect()
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString, r.getLong(2)))
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val expected = graft.cdc.Cdc
       .incrementalAggregate(events, "o_orderpriority", "o_totalprice")
       .orderBy("g").collect()
@@ -1328,7 +1307,7 @@ class StreamingSpec extends AnyFunSuite {
       .orderBy("g").collect()
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString, r.getLong(2)))
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.eventsToFrames(spark, sfDir)).toDF()
+      graft.cdc.CdcPipeline.eventsToFrames(spark, sfDir))
     val expected = graft.cdc.Cdc.incrementalAggregate(events, "etype_hr", "cents")
       .orderBy("g").collect()
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString, r.getLong(2)))
@@ -1479,7 +1458,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = Streams.incrementalAggState(spark, dir.resolve("state").toString)
       .select("g", "sx", "sx2", "c").orderBy("g").collect().map(render)
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val expected = graft.cdc.Cdc
       .incrementalStats(events, "o_orderpriority", "o_totalprice")
       .orderBy("g").collect().map(render)
@@ -1651,7 +1630,7 @@ class StreamingSpec extends AnyFunSuite {
           r.getLong(r.fieldIndex("net")), r.getInt(r.fieldIndex("rk"))))
     val got = rows(Streams.topKFromState(spark, dir.resolve("state").toString, 3))
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val expected = rows(graft.cdc.Cdc
       .incrementalTopK(events, "o_orderpriority", "o_totalprice", 3))
     assert(got.nonEmpty)
@@ -1884,12 +1863,12 @@ class StreamingSpec extends AnyFunSuite {
     def oracleO(f: Long) = graft.cdc.Cdc.materialize(
         CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(spark, sfDir,
           CdcPipeline.DmlPattern(updates = true, deletes = true,
-            fullImages = true))).toDF().filter(col("lsn") <= f), relO)
+            fullImages = true))).filter(col("lsn") <= f), relO)
       .select(col("o_orderkey"), col("o_totalprice").cast("double"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     def oracleL(f: Long) = graft.cdc.Cdc.materialize(
         CdcPipeline.decodeFrames(CdcPipeline.lineitemToFrames(spark, sfDir))
-          .toDF().filter(col("lsn") <= f), relL)
+          .filter(col("lsn") <= f), relL)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity").cast("double"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sorted.toSeq
     def servedO() = Streams.frontierState(spark, relO, state)
@@ -2000,7 +1979,7 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getDecimal(1).toPlainString,
         r.getDecimal(2).toPlainString, r.getLong(3))).toSeq
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val expected = graft.cdc.Cdc
       .incrementalMinMax(events, "o_orderpriority", "o_totalprice")
       .orderBy("g").collect()
@@ -2112,7 +2091,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = rows(Streams.scd2State(spark, dir.resolve("state").toString),
       "__key", "__after")
     val events = graft.cdc.CdcPipeline.decodeFrames(
-      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+      graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val expected = rows(
       graft.cdc.Cdc.scd2History(events, Seq("o_orderkey"))
         .withColumn("__key", map_from_arrays(array(lit("o_orderkey")),
@@ -2311,11 +2290,11 @@ class StreamingSpec extends AnyFunSuite {
       Streams.wireStats(spark, stateDir).orderBy("relation_id", "op").collect()
         .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     val expected = graft.cdc.CdcPipeline.decodeFrames(
-        graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)).toDF()
+        graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
       .filter(col("op").isin("I", "U", "D", "T", "M"))
-      .groupBy(col("relationId"), col("op"))
+      .groupBy(col("relation_id"), col("op"))
       .agg(count(lit(1)).as("n"), min(col("lsn")), max(col("lsn")))
-      .orderBy("relationId", "op").collect()
+      .orderBy("relation_id", "op").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4))).toSeq
     assert(state().nonEmpty)
     assert(state() === expected)
