@@ -8,14 +8,24 @@ ONLY ?=
 W ?= cdc_stream_open
 SEED ?= 1
 TRACE ?= 0
+# one test suite (fully qualified name) for `make spec`
+S ?= graft.cdc.SyntheticWireSpec
 
-.PHONY: compile test verify bench smoke demo livetest perfbench-test perfbench all
+.PHONY: compile test spec verify bench smoke demo livetest perfbench-test perfbench all
 
 compile:
 	sbt compile
 
 test:
 	sbt test
+
+# one suite under the tier-1 test environment (cores, driver heap, local
+# dirs), e.g. the wire-byte gate for any frame-generator edit:
+#   make spec S=graft.cdc.SyntheticWireSpec
+spec:
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" \
+	  SPARK_DRIVER_MEM="$$(awk '/^MemTotal:/ {g = int($$2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)" \
+	  SPARK_LOCAL_DIRS=/tmp/spark-local sbt "testOnly $(S)"
 
 # correctness gate: run all queries, compare against DuckDB
 verify:

@@ -3,7 +3,9 @@ package graft.cdc
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.decode._
@@ -23,6 +25,28 @@ import graft.sources.Envelope
   * Scale design: frame generation and decode are narrow per-partition maps
   * (no shuffle); the only shuffle is the pk-keyed compaction. The wire bytes
   * for a row never leave the executor that generated them.
+  *
+  * Every generator is a per-partition script of `(lsn, message)` pairs
+  * that `frames` encodes; each partition opens with its own Relation
+  * frame(s) at LSN 0, so partitions decode independently. The LSN layout
+  * (the cdc_* oracle hashes depend on it, and `SyntheticWireSpec` pins it):
+  *  - orders key k owns `k*8` plus offsets 0–8: the insert txn at 0–2, the
+  *    update txn at 3–5 and the delete txn at 6–8, laid out by `txn`
+  *    (Begin, body, Commit at the last LSN) unless the code writes the
+  *    frames out: ordersToFrames' delete Begin names the Delete's LSN as
+  *    final, its Origin frame shares Begin's LSN, lineitem commits at the
+  *    insert's LSN, and the non-transactional heartbeat of
+  *    ordersToFramesWithMessages sits before its txn's Commit;
+  *  - the other tables use their own strides the same way (documents
+  *    `id*4` / `id*16`, lineitem `ok*32 + ln*4`, events `id*4` / `id*2+1`);
+  *  - LSNs 1–11 carry per-partition control frames (a re-sent Relation,
+  *    stream segment boundaries), placed in partition order before or
+  *    between the row frames they govern;
+  *  - `compactFrames` rescales each surviving key's last lsn by 4 to make
+  *    room for its Begin/Commit;
+  *  - disjoint regions: epoch 2 starts above every epoch-1 LSN, at
+  *    `8·(maxKey+1)`; site B's WAL starts at 2^41; the streamed commit
+  *    sits at 2^40.
   */
 object CdcPipeline {
 
@@ -153,7 +177,66 @@ object CdcPipeline {
         .agg(org.apache.spark.sql.functions.max(
           org.apache.spark.sql.functions.col("o_orderkey"))).first().getLong(0))
 
+  /** A generator's output before encoding: one pgoutput message at its
+    * WAL position. */
+  private type Frame = (Long, PgOutputMessage)
+
+  /** The one encode pass: runs a generator's per-partition `script` and
+    * encodes each message into its pgoutput bytes. Narrow, no shuffle; the
+    * script opens its partition with the Relation frame(s) it needs. */
+  private def frames[T](rows: Dataset[T])(
+      script: Iterator[T] => Iterator[Frame]): Dataset[(Long, Array[Byte])] = {
+    import rows.sparkSession.implicits._
+    rows.mapPartitions(it => script(it).map { case (lsn, m) => lsn -> PgOutputEncoder.encode(m) })
+  }
+
+  private def typed[T <: Product : TypeTag](df: DataFrame): Dataset[T] =
+    df.as(Encoders.product[T])
+
+  /** Begin at `at`, `body` at `at+1…`, and Commit at the last LSN, which is
+    * also Begin's final LSN. */
+  private def txn(at: Long, ts: Long, xid: Int, body: PgOutputMessage*): Seq[Frame] = {
+    val end = at + body.size + 1
+    ((at -> Begin(end, ts, xid)) +: body.zipWithIndex.map { case (m, i) => (at + 1 + i) -> m }) :+
+      (end -> Commit(0, end, end, ts))
+  }
+
+  private def t(v: String) = ColumnData('t', Some(v))
+  private val NullCol = ColumnData('n', None)
+  private def text(vs: Seq[String]): TupleData = TupleData(vs.map(t).toVector)
+
+  /** NUMERIC(12,2) text of a price, as Postgres sends it. */
+  private def decimal2(p: Double): String =
+    java.math.BigDecimal.valueOf(p).setScale(2, java.math.RoundingMode.HALF_UP).toPlainString
+
   val OrdersRelId = 50001
+
+  /** One row of [[ordersWire]]: the six orders columns every orders
+    * generator reads, with the images they render from it. */
+  private[cdc] final case class OrderRow(
+      k: Long, cust: Long, status: String, price: Double, dateUs: Long, prio: String) {
+    /** Commit timestamp (pg epoch micros) of every txn of this key. */
+    def ts: Long = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
+    def xid: Int = k.toInt
+    /** The six columns' wire text, o_totalprice rendered as `p`. */
+    def texts(p: String): Vector[String] =
+      Vector(k.toString, cust.toString, status, p, pgTimestampText(dateUs), prio)
+    /** The six-column text tuple; `toastPrio` sends o_orderpriority as an
+      * unchanged-TOAST datum. */
+    def tuple(p: Double = price, toastPrio: Boolean = false): TupleData = {
+      val cs = texts(p.toString).map(t)
+      TupleData(if (toastPrio) cs.updated(5, ColumnData('u', None)) else cs)
+    }
+    /** The same image as a wire-text map, what a snapshot read returns. */
+    def after(p: Double): Map[String, String] =
+      ordersRelation.columns.map(_.name).zip(texts(p.toString)).toMap
+    /** The key's insert txn, at `k*8`. */
+    private[cdc] def insertTxn(image: TupleData = tuple(), relId: Int = OrdersRelId): Seq[Frame] =
+      txn(k * 8, ts, xid, Insert(relId, image))
+    /** The key's update txn without an old image, at `k*8 + 3`. */
+    private[cdc] def updateTxn(image: TupleData, relId: Int = OrdersRelId): Seq[Frame] =
+      txn(k * 8 + 3, ts, xid, Update(relId, None, None, image))
+  }
 
   /** The six wire columns every orders frame generator consumes, fanned out
     * to the session's parallelism: the one-row-group source parquet scans
@@ -164,18 +247,21 @@ object CdcPipeline {
     * Frame values are pure per-row functions of the key, and every decoder-
     * side consumer is partitioning/order independent (events sort by
     * lsn/seq), so the fan-out is semantics-preserving. */
-  private def ordersWire(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.fanout(ordersWireNarrow(spark, sfDir))
+  private def ordersWire(spark: SparkSession, sfDir: String): Dataset[OrderRow] =
+    typed[OrderRow](graft.Tables.fanout(ordersColumns(spark, sfDir)))
 
   /** [[ordersWire]] without the fan-out — for consumers whose per-row work
     * is map-building rather than wire encoding (the snapshot-chunk
     * readers), where the extra exchange measured as a pure loss. */
-  private def ordersWireNarrow(spark: SparkSession, sfDir: String): DataFrame =
+  private def ordersWireNarrow(spark: SparkSession, sfDir: String): Dataset[OrderRow] =
+    typed[OrderRow](ordersColumns(spark, sfDir))
+
+  private def ordersColumns(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.orders(spark, sfDir)
       .select(
-        col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("o_totalprice"), unix_micros(col("o_orderdate")).as("date_us"),
-        col("o_orderpriority"))
+        col("o_orderkey").as("k"), col("o_custkey").as("cust"),
+        col("o_orderstatus").as("status"), col("o_totalprice").as("price"),
+        unix_micros(col("o_orderdate")).as("dateUs"), col("o_orderpriority").as("prio"))
 
   /** Wire-style schema for the orders relation (what a Relation message
     * would carry; oids are public pg_type constants). */
@@ -227,67 +313,48 @@ object CdcPipeline {
       originOnMod3: Boolean = false)
 
   /** orders parquet → Dataset[(lsn, frameBytes)] of pgoutput frames. */
-  def ordersToFrames(spark: SparkSession, sfDir: String, pattern: DmlPattern): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    val truncOpt = pattern.truncateAtLsn
-
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val trunc = truncOpt.iterator.map(lsn =>
-        lsn -> PgOutputEncoder.encode(Truncate(0, Vector(OrdersRelId))))
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def fullTuple(p: Double, toastPrio: Boolean) = TupleData(Vector(
-          t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)),
-          if (toastPrio) ColumnData('u', None) else t(prio)))
-
-        val originFrame =
-          if (pattern.originOnMod3 && k % 3 == 0)
-            Seq(base -> PgOutputEncoder.encode(Origin(base + 2, "upstream")))
-          else Nil
-        val insertTxn = if (pattern.inserts) Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, commitTs, k.toInt))) ++
-          originFrame ++ Seq(
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, fullTuple(price, toastPrio = false))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, commitTs)))
-        else Nil
-
-        val updateTxn = if (pattern.updates && k % 10 == 0) Seq(
-          (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, commitTs, k.toInt)),
-          (base + 4) -> PgOutputEncoder.encode(
-            if (pattern.fullImages)
-              Update(OrdersRelId, Some('O'), Some(fullTuple(price, toastPrio = false)),
-                fullTuple(price + 1.0, pattern.toastPriorityOnUpdate))
-            else Update(OrdersRelId, None, None,
-              fullTuple(price + 1.0, pattern.toastPriorityOnUpdate))),
-          (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, commitTs)))
-        else Nil
-
+  def ordersToFrames(spark: SparkSession, sfDir: String, pattern: DmlPattern): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
+      val head = Iterator(0L -> ordersRelation) ++
+        pattern.truncateAtLsn.iterator.map(_ -> Truncate(0, Vector(OrdersRelId)))
+      head ++ rows.flatMap { o =>
+        val base = o.k * 8
+        val inserted =
+          if (!pattern.inserts) Nil
+          else if (pattern.originOnMod3 && o.k % 3 == 0) Seq( // Origin at Begin's LSN
+            base -> Begin(base + 2, o.ts, o.xid), base -> Origin(base + 2, "upstream"),
+            (base + 1) -> Insert(OrdersRelId, o.tuple()), (base + 2) -> Commit(0, base + 2, base + 2, o.ts))
+          else o.insertTxn()
+        val updated = pattern.updates && o.k % 10 == 0
+        def newImage = o.tuple(o.price + 1.0, pattern.toastPriorityOnUpdate)
+        val update =
+          if (!updated) Nil
+          else if (pattern.fullImages)
+            txn(base + 3, o.ts, o.xid, Update(OrdersRelId, Some('O'), Some(o.tuple()), newImage))
+          else o.updateTxn(newImage)
         // the row state at delete time (updates sort before deletes)
-        val priceAtDelete =
-          if (pattern.updates && k % 10 == 0) price + 1.0 else price
-        val deleteTxn = if (pattern.deletes && k % 7 == 0) Seq(
-          (base + 6) -> PgOutputEncoder.encode(Begin(base + 7, commitTs, k.toInt)),
-          (base + 7) -> PgOutputEncoder.encode(
-            if (pattern.fullImages)
-              Delete(OrdersRelId, 'O', fullTuple(priceAtDelete, toastPrio = false))
-            else Delete(OrdersRelId, 'K',
-              TupleData(Vector(t(k.toString), ColumnData('n', None), ColumnData('n', None),
-                ColumnData('n', None), ColumnData('n', None), ColumnData('n', None))))),
-          (base + 8) -> PgOutputEncoder.encode(Commit(0, base + 8, base + 8, commitTs)))
-        else Nil
-
-        insertTxn ++ updateTxn ++ deleteTxn
+        val priceAtDelete = if (updated) o.price + 1.0 else o.price
+        // written out: this Begin's final LSN is the Delete's, not the Commit's
+        val delete =
+          if (!(pattern.deletes && o.k % 7 == 0)) Nil
+          else Seq(
+            (base + 6) -> Begin(base + 7, o.ts, o.xid),
+            (base + 7) ->
+              (if (pattern.fullImages) Delete(OrdersRelId, 'O', o.tuple(priceAtDelete))
+              else Delete(OrdersRelId, 'K', TupleData(t(o.k.toString) +: Vector.fill(5)(NullCol)))),
+            (base + 8) -> Commit(0, base + 8, base + 8, o.ts))
+        inserted ++ update ++ delete
       }
-      rel ++ trunc ++ dml
     }
-  }
+
+  /** One insert txn per order under `rel`, the tuple rendered by `image`:
+    * the body of the insert-only variants. */
+  private def ordersInserted(spark: SparkSession, sfDir: String, rel: Relation)(
+      image: OrderRow => TupleData): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
+      Iterator(0L -> rel) ++
+        rows.flatMap(o => o.insertTxn(image(o)))
+    }
 
   /** The orders relation after an `ALTER TABLE … ADD COLUMN o_note text`:
     * Postgres appends the column and re-sends the Relation message on the
@@ -297,16 +364,6 @@ object CdcPipeline {
     ordersRelation.columns :+
       RelationColumn(partOfKey = false, "o_note", TypedView.Oid.Text, -1))
 
-  /** Schema evolution mid-stream: every order row is inserted under the
-    * 6-column v1 relation; then the 7-column v2 Relation message is
-    * re-sent (the wire form of ADD COLUMN), and keys k % 3 == 0 are
-    * updated with 7-column images carrying `o_note = 'n<k>'` (and
-    * totalprice + 1). Decode must switch tuple→named-row projection at the
-    * re-send point; pre-evolution rows surface with a NULL o_note through
-    * the v2 typed view. Same per-partition narrow generation as
-    * [[ordersToFrames]] (rows buffer per partition so the v2 Relation
-    * precedes the first 7-column image in partition order — bounded by
-    * partition size, not table size). */
   /** Insert-only orders wire path in BINARY transfer mode (pgoutput
     * `binary 'true'`, PG 14+ — a surface the text-only reference lacks):
     * even keys ship every column as its type's binary send-function bytes
@@ -318,74 +375,43 @@ object CdcPipeline {
     * text twin emits a fixed 6-digit fraction while PgBinary trims zero
     * fractions the way real PG output does (the typed cast absorbs it);
     * raw-text parity against a REAL server's text mode is what LivePgSpec's
-    * binary leg pins. Same per-partition narrow generation as
-    * [[ordersToFrames]]. */
+    * binary leg pins. */
   def ordersToFramesBinary(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      def b(oid: Int, text: String) = ColumnData('b', None,
-        Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(
-          PgBinary.encode(oid, text))))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        val tuple =
-          if (k % 2 == 0) TupleData(Vector(
-            b(PgBinary.Int8Oid, k.toString), b(PgBinary.Int8Oid, cust.toString),
-            b(PgBinary.TextOid, status), b(PgBinary.Float8Oid, price.toString),
-            b(PgBinary.TimestamptzOid, pgTimestampText(dateUs)),
-            b(PgBinary.TextOid, prio)))
-          else TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(price.toString),
-            t(pgTimestampText(dateUs)), t(prio)))
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, commitTs, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, tuple)),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, commitTs)))
-      }
-      rel ++ dml
+    val oids = Vector(PgBinary.Int8Oid, PgBinary.Int8Oid, PgBinary.TextOid,
+      PgBinary.Float8Oid, PgBinary.TimestamptzOid, PgBinary.TextOid)
+    ordersInserted(spark, sfDir, ordersRelation) { o =>
+      if (o.k % 2 != 0) o.tuple()
+      else TupleData(o.texts(o.price.toString).zip(oids).map { case (v, oid) =>
+        ColumnData('b', None, Some(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(PgBinary.encode(oid, v))))
+      })
     }
   }
 
-  def ordersToFramesEvolving(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relV1 = PgOutputEncoder.encode(ordersRelation)
-    val relV2 = PgOutputEncoder.encode(ordersRelationV2)
-
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
+  /** Mid-stream schema change: every order inserts under the 6-column v1
+    * relation, `relV2` is re-sent at LSN 1, and every key with
+    * k % `every` == 0 updates with the post-change `image`. Rows buffer per
+    * partition so the re-sent Relation precedes the first new image in
+    * partition order (bounded by partition size, not table size). */
+  private def ordersEvolved(spark: SparkSession, sfDir: String, relV2: Relation, every: Int)(
+      image: OrderRow => TupleData): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
       val rs = rows.toVector
-      val inserts = rs.iterator.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, commitTs, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(price.toString),
-            t(pgTimestampText(dateUs)), t(prio))))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, commitTs)))
-      }
-      val updates = rs.iterator.filter(_._1 % 3 == 0)
-        .flatMap { case (k, cust, status, price, dateUs, prio) =>
-          val base = k * 8
-          val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-          Seq(
-            (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, commitTs, k.toInt)),
-            (base + 4) -> PgOutputEncoder.encode(Update(OrdersRelId, None, None,
-              TupleData(Vector(
-                t(k.toString), t(cust.toString), t(status), t((price + 1.0).toString),
-                t(pgTimestampText(dateUs)), t(prio), t(s"n$k"))))),
-            (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, commitTs)))
-        }
-      Iterator.single(0L -> relV1) ++ inserts ++
-        Iterator.single(1L -> relV2) ++ updates
+      Iterator(0L -> ordersRelation) ++
+        rs.iterator.flatMap(_.insertTxn()) ++
+        Iterator(1L -> relV2) ++
+        rs.iterator.filter(_.k % every == 0).flatMap(o => o.updateTxn(image(o)))
     }
-  }
+
+  /** Schema evolution mid-stream, ADD COLUMN form: the 7-column v2
+    * Relation is re-sent, and keys k % 3 == 0 are updated with 7-column
+    * images carrying `o_note = 'n<k>'` (and totalprice + 1). Decode must
+    * switch tuple→named-row projection at the re-send point;
+    * pre-evolution rows surface with a NULL o_note through the v2 typed
+    * view. */
+  def ordersToFramesEvolving(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    ordersEvolved(spark, sfDir, ordersRelationV2, 3)(o =>
+      text(o.texts((o.price + 1.0).toString) :+ s"n${o.k}"))
 
   /** orders with o_totalprice as NUMERIC(12,2) — the wire shape when the
     * upstream column is a money-like decimal. atttypmod for numeric(p,s)
@@ -401,77 +427,21 @@ object CdcPipeline {
 
   /** Insert-only wire path rendering o_totalprice as a scale-2 decimal
     * string (what Postgres sends for NUMERIC(12,2)). */
-  def ordersToFramesNumeric(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelationNumeric)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        val priceTxt = java.math.BigDecimal.valueOf(price)
-          .setScale(2, java.math.RoundingMode.HALF_UP).toPlainString
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(priceTxt),
-            t(pgTimestampText(dateUs)), t(prio))))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, ts)))
-      }
-      rel ++ dml
-    }
-  }
+  def ordersToFramesNumeric(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    ordersInserted(spark, sfDir, ordersRelationNumeric)(o => text(o.texts(decimal2(o.price))))
 
   /** ALTER COLUMN TYPE mid-stream (the third evolution form beside
-    * ADD/DROP): every order inserts under the float8-typed v1 relation,
-    * then the SAME relation id re-announces with o_totalprice retyped to
-    * NUMERIC(12,2) — new type oid AND atttypmod, both carried by the
+    * ADD/DROP): the SAME relation id re-announces with o_totalprice retyped
+    * to NUMERIC(12,2) — new type oid AND atttypmod, both carried by the
     * Relation frame (reference decoders.py:232-290 parses both but the
     * reference never re-projects) — and k % 3 == 0 keys update with
     * post-retype images (price + 1, rendered as the scale-2 decimal text
     * PG sends for the new type). The registry must swap the column type at
     * the re-send point, and the final typed view re-casts the PRE-retype
-    * rows' stored float8-era text under the new DecimalType(12,2). Same
-    * per-partition buffering as [[ordersToFramesEvolving]] (the retyped
-    * Relation precedes the first new-type image in partition order). */
-  def ordersToFramesRetyping(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relV1 = PgOutputEncoder.encode(ordersRelation)
-    val relRetyped = PgOutputEncoder.encode(ordersRelationNumeric)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rs = rows.toVector
-      val inserts = rs.iterator.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(price.toString),
-            t(pgTimestampText(dateUs)), t(prio))))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, ts)))
-      }
-      val updates = rs.iterator.filter(_._1 % 3 == 0)
-        .flatMap { case (k, cust, status, price, dateUs, prio) =>
-          val base = k * 8
-          val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-          val priceTxt = java.math.BigDecimal.valueOf(price + 1.0)
-            .setScale(2, java.math.RoundingMode.HALF_UP).toPlainString
-          Seq(
-            (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, ts, k.toInt)),
-            (base + 4) -> PgOutputEncoder.encode(Update(OrdersRelId, None, None,
-              TupleData(Vector(
-                t(k.toString), t(cust.toString), t(status), t(priceTxt),
-                t(pgTimestampText(dateUs)), t(prio))))),
-            (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, ts)))
-        }
-      Iterator.single(0L -> relV1) ++ inserts ++
-        Iterator.single(1L -> relRetyped) ++ updates
-    }
-  }
+    * rows' stored float8-era text under the new DecimalType(12,2). */
+  def ordersToFramesRetyping(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    ordersEvolved(spark, sfDir, ordersRelationNumeric, 3)(o =>
+      text(o.texts(decimal2(o.price + 1.0))))
 
   val OrdersP0RelId = 50011
   val OrdersP1RelId = 50012
@@ -484,38 +454,17 @@ object CdcPipeline {
     * relation. The logical table's state is the union compacted on the
     * shared pk — exactly what a consumer of a hash/range-partitioned
     * upstream does. */
-  def ordersToFramesPartitioned(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    def childRel(id: Int, name: String) =
-      Relation(id, "public", name, 'd', ordersRelation.columns)
-    val rel0 = PgOutputEncoder.encode(childRel(OrdersP0RelId, "orders_p0"))
-    val rel1 = PgOutputEncoder.encode(childRel(OrdersP1RelId, "orders_p1"))
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rels = Iterator((0L, rel0), (0L, rel1))
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val relId = if (k % 2 == 0) OrdersP0RelId else OrdersP1RelId
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def full(p: Double) = TupleData(Vector(
-          t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)), t(prio)))
-        val ins = Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(relId, full(price))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, ts)))
-        val upd = if (k % 10 == 0) Seq(
-          (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, ts, k.toInt)),
-          (base + 4) -> PgOutputEncoder.encode(
-            Update(relId, None, None, full(price + 1.0))),
-          (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, ts)))
-        else Nil
-        ins ++ upd
-      }
-      rels ++ dml
+  def ordersToFramesPartitioned(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
+      def childRel(id: Int, name: String) =
+        Relation(id, "public", name, 'd', ordersRelation.columns)
+      Iterator(0L -> childRel(OrdersP0RelId, "orders_p0"), 0L -> childRel(OrdersP1RelId, "orders_p1")) ++
+        rows.flatMap { o =>
+          val relId = if (o.k % 2 == 0) OrdersP0RelId else OrdersP1RelId
+          o.insertTxn(relId = relId) ++
+            (if (o.k % 10 == 0) o.updateTxn(o.tuple(o.price + 1.0), relId) else Nil)
+        }
     }
-  }
 
   /** The orders relation after an `ALTER TABLE … DROP COLUMN
     * o_orderpriority`: Postgres re-sends the Relation without the column. */
@@ -523,48 +472,16 @@ object CdcPipeline {
     OrdersRelId, "public", "orders", 'd',
     ordersRelation.columns.filterNot(_.name == "o_orderpriority"))
 
-  /** Schema evolution, DROP COLUMN form: 6-column v1 inserts, then the
-    * 5-column Relation re-send, then k % 4 == 0 keys updated with 5-column
-    * images (totalprice + 2). Decode must NARROW the tuple→named-row
-    * projection at the re-send point; pre-drop rows still carry the dropped
-    * column in their stored images, and the post-drop typed view simply
-    * never projects it — no rewrite of historical state is needed (the
-    * same lazy-projection property that makes ADD COLUMN free). */
-  def ordersToFramesDropping(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relV1 = PgOutputEncoder.encode(ordersRelation)
-    val relV3 = PgOutputEncoder.encode(ordersRelationV3)
-
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rs = rows.toVector
-      val inserts = rs.iterator.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, commitTs, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(price.toString),
-            t(pgTimestampText(dateUs)), t(prio))))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, commitTs)))
-      }
-      val updates = rs.iterator.filter(_._1 % 4 == 0)
-        .flatMap { case (k, cust, status, price, dateUs, _) =>
-          val base = k * 8
-          val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-          Seq(
-            (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, commitTs, k.toInt)),
-            (base + 4) -> PgOutputEncoder.encode(Update(OrdersRelId, None, None,
-              TupleData(Vector(
-                t(k.toString), t(cust.toString), t(status), t((price + 2.0).toString),
-                t(pgTimestampText(dateUs)))))),
-            (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, commitTs)))
-        }
-      Iterator.single(0L -> relV1) ++ inserts ++
-        Iterator.single(1L -> relV3) ++ updates
-    }
-  }
+  /** Schema evolution, DROP COLUMN form: the 5-column Relation is re-sent,
+    * then k % 4 == 0 keys update with 5-column images (totalprice + 2).
+    * Decode must NARROW the tuple→named-row projection at the re-send
+    * point; pre-drop rows still carry the dropped column in their stored
+    * images, and the post-drop typed view simply never projects it — no
+    * rewrite of historical state is needed (the same lazy-projection
+    * property that makes ADD COLUMN free). */
+  def ordersToFramesDropping(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    ordersEvolved(spark, sfDir, ordersRelationV3, 4)(o =>
+      text(o.texts((o.price + 2.0).toString).init))
 
   /** Protocol-v2 streamed-transaction slice: two large transactions stream
     * in INTERLEAVED segments (the wire shape `streaming on` produces when
@@ -581,52 +498,24 @@ object CdcPipeline {
     * Expected final state: keys with k % 4 ∈ {0, 3}; price +1 for k % 8 == 0
     * — pure function of the key, hence the exact SQL oracle. */
   def ordersToFramesStreamed(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
     val (xidA, xidB, xidASub) = (900001, 900002, 900003)
-
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      def enc(m: PgOutputMessage) = PgOutputEncoder.encode(m)
-      def full(k: Long, cust: Long, status: String, p: Double, dateUs: Long, prio: String) =
-        TupleData(Vector(t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)), t(prio)))
-      // rows iterate several times (one pass per segment) — buffer the
-      // partition; bounded by partition size, same as the evolving generator
+    frames(ordersWire(spark, sfDir)) { rows =>
+      // one pass per segment: buffer the partition (bounded by its size)
       val rs = rows.toVector
-      def seg(sel: Long => Boolean, sub: Int, mk: ((Long, Long, String, Double, Long, String)) => (Long, PgOutputMessage)) =
-        rs.iterator.filter(r => sel(r._1)).map { r =>
-          val (lsn, m) = mk(r); lsn -> enc(StreamedPart(sub, m))
-        }
-
-      val segA1 = seg(_ % 4 == 0, xidA, { case (k, c, st, p, d, pr) =>
-        (k * 8 + 1) -> Insert(OrdersRelId, full(k, c, st, p, d, pr)) })
-      val segB = seg(_ % 4 == 1, xidB, { case (k, c, st, p, d, pr) =>
-        (k * 8 + 1) -> Insert(OrdersRelId, full(k, c, st, p, d, pr)) })
-      val segASub = seg(_ % 4 == 2, xidASub, { case (k, c, st, p, d, pr) =>
-        (k * 8 + 1) -> Insert(OrdersRelId, full(k, c, st, p, d, pr)) })
-      val segA2 = seg(_ % 8 == 0, xidA, { case (k, c, st, p, d, pr) =>
-        (k * 8 + 4) -> Update(OrdersRelId, None, None, full(k, c, st, p + 1.0, d, pr)) })
-      val plain = rs.iterator.filter(_._1 % 4 == 3).flatMap { case (k, c, st, p, d, pr) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(d)
-        Seq(
-          base -> enc(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> enc(Insert(OrdersRelId, full(k, c, st, p, d, pr))),
-          (base + 2) -> enc(Commit(0, base + 2, base + 2, ts)))
-      }
-      def ctl(lsn: Long, m: PgOutputMessage) = Iterator.single(lsn -> enc(m))
-
-      Iterator.single(0L -> relFrame) ++
-        ctl(1L, StreamStart(xidA, firstSegment = true)) ++ segA1 ++ ctl(2L, StreamStop) ++
-        ctl(3L, StreamStart(xidB, firstSegment = true)) ++ segB ++ ctl(4L, StreamStop) ++
-        ctl(5L, StreamStart(xidA, firstSegment = false)) ++ segASub ++ ctl(6L, StreamStop) ++
-        ctl(7L, StreamStart(xidA, firstSegment = false)) ++ segA2 ++ ctl(8L, StreamStop) ++
-        ctl(9L, StreamAbort(xidA, xidASub)) ++
-        ctl(10L, StreamAbort(xidB, xidB)) ++
-        ctl(11L, StreamCommit(xidA, 0, 1L << 40, 1L << 40, 0L)) ++
-        plain
+      def seg(sel: Long => Boolean, xid: Int, offset: Long)(m: OrderRow => PgOutputMessage) =
+        rs.iterator.filter(o => sel(o.k)).map(o => (o.k * 8 + offset) -> StreamedPart(xid, m(o)))
+      def insert(o: OrderRow) = Insert(OrdersRelId, o.tuple())
+      Iterator(0L -> ordersRelation, 1L -> StreamStart(xidA, firstSegment = true)) ++
+        seg(_ % 4 == 0, xidA, 1)(insert) ++
+        Iterator(2L -> StreamStop, 3L -> StreamStart(xidB, firstSegment = true)) ++
+        seg(_ % 4 == 1, xidB, 1)(insert) ++
+        Iterator(4L -> StreamStop, 5L -> StreamStart(xidA, firstSegment = false)) ++
+        seg(_ % 4 == 2, xidASub, 1)(insert) ++
+        Iterator(6L -> StreamStop, 7L -> StreamStart(xidA, firstSegment = false)) ++
+        seg(_ % 8 == 0, xidA, 4)(o => Update(OrdersRelId, None, None, o.tuple(o.price + 1.0))) ++
+        Iterator(8L -> StreamStop, 9L -> StreamAbort(xidA, xidASub), 10L -> StreamAbort(xidB, xidB),
+          11L -> StreamCommit(xidA, 0, 1L << 40, 1L << 40, 0L)) ++
+        rs.iterator.filter(_.k % 4 == 3).flatMap(_.insertTxn())
     }
   }
 
@@ -635,35 +524,13 @@ object CdcPipeline {
     * (snapshot keys included — rows that changed AFTER the snapshot was
     * pinned) arrive as updates. The snapshot half is the plain table read
     * ≤ mid; see `cdc_backfill_union`. */
-  def ordersToFramesTail(spark: SparkSession, sfDir: String, mid: Long): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def full(p: Double) = TupleData(Vector(
-          t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)), t(prio)))
-        val ins = if (k > mid) Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, full(price))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, ts)))
-        else Nil
-        val upd = if (k % 10 == 0) Seq(
-          (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, ts, k.toInt)),
-          (base + 4) -> PgOutputEncoder.encode(
-            Update(OrdersRelId, None, None, full(price + 1.0))),
-          (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, ts)))
-        else Nil
-        ins ++ upd
+  def ordersToFramesTail(spark: SparkSession, sfDir: String, mid: Long): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
+      Iterator(0L -> ordersRelation) ++ rows.flatMap { o =>
+        (if (o.k > mid) o.insertTxn() else Nil) ++
+          (if (o.k % 10 == 0) o.updateTxn(o.tuple(o.price + 1.0)) else Nil)
       }
-      rel ++ dml
     }
-  }
 
   /** Active-active (bidirectional) replication wire shape: TWO sites
     * publish changes to the same table and the subscriber merges both WAL
@@ -676,47 +543,22 @@ object CdcPipeline {
     * exercises every conflict case: remote-newer (k%24==0 → B wins),
     * exact commit-ts TIE (k%12==0, k%24≠0 → both at +300µs — resolved by
     * the deterministic site tiebreak), remote-only and local-only updates.
-    * Generation is one per-partition map over orders; both sites' frames
-    * for a key are rendered together, ordered into their own LSN spaces. */
+    * Both sites' frames for a key are rendered together. */
   def ordersToFramesBiDir(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
     val SiteBBase = 1L << 41 // site B's WAL region, disjoint from site A's
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val baseA = k * 8
-        val baseB = SiteBBase + k * 8
-        val ts0 = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def full(p: Double) = TupleData(Vector(
-          t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)), t(prio)))
-        val insA = Seq(
-          baseA -> PgOutputEncoder.encode(Begin(baseA + 2, ts0, k.toInt)),
-          (baseA + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, full(price))),
-          (baseA + 2) -> PgOutputEncoder.encode(Commit(0, baseA + 2, baseA + 2, ts0)))
-        val updA = if (k % 4 == 0) {
-          val tsA = ts0 + (if (k % 8 == 0) 100L else 300L)
-          Seq(
-            (baseA + 3) -> PgOutputEncoder.encode(Begin(baseA + 5, tsA, k.toInt)),
-            (baseA + 4) -> PgOutputEncoder.encode(
-              Update(OrdersRelId, None, None, full(price + 1.0))),
-            (baseA + 5) -> PgOutputEncoder.encode(Commit(0, baseA + 5, baseA + 5, tsA)))
-        } else Nil
-        val updB = if (k % 6 == 0) {
-          val tsB = ts0 + (if (k % 12 == 0) 300L else 200L)
-          Seq(
-            baseB -> PgOutputEncoder.encode(Begin(baseB + 3, tsB, k.toInt)),
-            (baseB + 1) -> PgOutputEncoder.encode(Origin(baseB + 3, "site_b")),
-            (baseB + 2) -> PgOutputEncoder.encode(
-              Update(OrdersRelId, None, None, full(price + 2.0))),
-            (baseB + 3) -> PgOutputEncoder.encode(Commit(0, baseB + 3, baseB + 3, tsB)))
-        } else Nil
-        insA ++ updA ++ updB
+    frames(ordersWire(spark, sfDir)) { rows =>
+      Iterator(0L -> ordersRelation) ++ rows.flatMap { o =>
+        val (baseA, baseB) = (o.k * 8, SiteBBase + o.k * 8)
+        val updA =
+          if (o.k % 4 != 0) Nil
+          else txn(baseA + 3, o.ts + (if (o.k % 8 == 0) 100L else 300L), o.xid,
+            Update(OrdersRelId, None, None, o.tuple(o.price + 1.0)))
+        val updB =
+          if (o.k % 6 != 0) Nil
+          else txn(baseB, o.ts + (if (o.k % 12 == 0) 300L else 200L), o.xid,
+            Origin(baseB + 3, "site_b"), Update(OrdersRelId, None, None, o.tuple(o.price + 2.0)))
+        o.insertTxn() ++ updA ++ updB
       }
-      rel ++ dml
     }
   }
 
@@ -727,82 +569,57 @@ object CdcPipeline {
     * "far apart in the WAL, keyed by gid" shape 2PC consumers must hold.
     * Everything else is an ordinary transaction. Expected final state:
     * keys with k % 6 != 3. */
-  def ordersToFramesTwoPhase(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      def enc(m: PgOutputMessage) = PgOutputEncoder.encode(m)
-      def full(k: Long, c: Long, st: String, p: Double, d: Long, pr: String) =
-        TupleData(Vector(t(k.toString), t(c.toString), t(st), t(p.toString),
-          t(pgTimestampText(d)), t(pr)))
+  def ordersToFramesTwoPhase(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
       val rs = rows.toVector
-      val prepares = rs.iterator.flatMap { case (k, c, st, p, d, pr) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(d)
-        if (k % 12 == 6 || k % 12 == 9) Seq(
+      val prepares = rs.iterator.flatMap { o =>
+        val (base, xid, gid) = (o.k * 8, o.xid, s"gid${o.k}")
+        val insert = Insert(OrdersRelId, o.tuple())
+        if (o.k % 12 == 6 || o.k % 12 == 9) Seq[Frame](
           // streamed + prepared ('p'): segments reassemble, then the txn
           // parks in the prepared table under its gid — k%12==6 ⊂ k%6==0
           // (committed), k%12==9 ⊂ k%6==3 (rolled back), so the oracle is
           // untouched by which wire path carried the rows
-          base -> enc(StreamStart(k.toInt, firstSegment = true)),
-          (base + 1) -> enc(StreamedPart(k.toInt, Insert(OrdersRelId, full(k, c, st, p, d, pr)))),
-          (base + 2) -> enc(StreamStop),
-          (base + 2) -> enc(StreamPrepare(0, base + 2, base + 2, ts, k.toInt, s"gid$k")))
-        else if (k % 3 == 0) Seq( // both 2PC flavors prepare identically
-          base -> enc(BeginPrepare(base + 2, base + 2, ts, k.toInt, s"gid$k")),
-          (base + 1) -> enc(Insert(OrdersRelId, full(k, c, st, p, d, pr))),
-          (base + 2) -> enc(Prepare(0, base + 2, base + 2, ts, k.toInt, s"gid$k")))
-        else Seq(
-          base -> enc(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> enc(Insert(OrdersRelId, full(k, c, st, p, d, pr))),
-          (base + 2) -> enc(Commit(0, base + 2, base + 2, ts)))
+          base -> StreamStart(xid, firstSegment = true),
+          (base + 1) -> StreamedPart(xid, insert),
+          (base + 2) -> StreamStop,
+          (base + 2) -> StreamPrepare(0, base + 2, base + 2, o.ts, xid, gid))
+        else if (o.k % 3 == 0) Seq[Frame]( // both 2PC flavors prepare identically
+          base -> BeginPrepare(base + 2, base + 2, o.ts, xid, gid),
+          (base + 1) -> insert,
+          (base + 2) -> Prepare(0, base + 2, base + 2, o.ts, xid, gid))
+        else o.insertTxn()
       }
-      val resolutions = rs.iterator.filter(_._1 % 3 == 0).map { case (k, _, _, _, d, _) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(d)
-        if (k % 6 == 0)
-          (base + 5) -> enc(CommitPrepared(0, base + 5, base + 5, ts, k.toInt, s"gid$k"))
-        else
-          (base + 5) -> enc(RollbackPrepared(0, base + 2, base + 5, ts, ts, k.toInt, s"gid$k"))
+      val resolutions = rs.iterator.filter(_.k % 3 == 0).map[Frame] { o =>
+        val end = o.k * 8 + 5
+        if (o.k % 6 == 0) end -> CommitPrepared(0, end, end, o.ts, o.xid, s"gid${o.k}")
+        else end -> RollbackPrepared(0, o.k * 8 + 2, end, o.ts, o.ts, o.xid, s"gid${o.k}")
       }
-      Iterator.single(0L -> relFrame) ++ prepares ++ resolutions
+      Iterator(0L -> ordersRelation) ++ prepares ++ resolutions
     }
-  }
 
   /** Logical decoding messages on the wire ('M', pg_logical_emit_message):
     * every order's transaction carries a transactional "audit" message, and
     * k % 5 == 0 keys additionally emit a NON-transactional "heartbeat"
     * message mid-transaction (sent immediately at its own WAL position,
-    * outside the txn — exactly PG's semantics for transactional=false). */
-  def ordersToFramesWithMessages(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val audit = LogicalMessage(transactional = true, base + 2, "audit", utf8(s"order=$k"))
-        val hb = if (k % 5 == 0)
-          Seq((base + 6) -> PgOutputEncoder.encode(
-            LogicalMessage(transactional = false, base + 6, "heartbeat", utf8(s"hb=$k"))))
-        else Nil
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 3, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, TupleData(Vector(
-            t(k.toString), t(cust.toString), t(status), t(price.toString),
-            t(pgTimestampText(dateUs)), t(prio))))),
-          (base + 2) -> PgOutputEncoder.encode(audit)) ++ hb ++ Seq(
-          (base + 3) -> PgOutputEncoder.encode(Commit(0, base + 3, base + 3, ts)))
+    * outside the txn — exactly PG's semantics for transactional=false);
+    * in stream order it sits before the Commit. */
+  def ordersToFramesWithMessages(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    frames(ordersWire(spark, sfDir)) { rows =>
+      def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      Iterator(0L -> ordersRelation) ++ rows.flatMap { o =>
+        val base = o.k * 8
+        val heartbeat =
+          if (o.k % 5 != 0) Nil
+          else Seq((base + 6) -> LogicalMessage(
+            transactional = false, base + 6, "heartbeat", utf8(s"hb=${o.k}")))
+        Seq[Frame](
+          base -> Begin(base + 3, o.ts, o.xid),
+          (base + 1) -> Insert(OrdersRelId, o.tuple()),
+          (base + 2) -> LogicalMessage(transactional = true, base + 2, "audit", utf8(s"order=${o.k}"))) ++
+          heartbeat :+ ((base + 3) -> Commit(0, base + 3, base + 3, o.ts))
       }
-      rel ++ dml
     }
-  }
 
   val LineitemRelId = 50002
 
@@ -823,42 +640,35 @@ object CdcPipeline {
 
   /** lineitem → frames with a key-dependent DML pattern:
     * insert all; (ok+ln)%5==0 → update quantity+1 (no old image);
-    * (ok+ln)%9==0 → delete with key-only composite image.
-    * LSNs collide across different (partkey, suppkey) rows sharing
-    * (ok, ln) — harmless: compaction orders within a key only, and each
-    * key's own events have distinct offsets. */
+    * (ok+ln)%9==0 → delete with key-only composite image. The insert txn
+    * commits at the insert's own LSN, and the update and delete frames sit
+    * outside any transaction. LSNs collide across different (partkey,
+    * suppkey) rows sharing (ok, ln) — harmless: compaction orders within a
+    * key only, and each key's own events have distinct offsets. */
   def lineitemToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
     // same one-row-group fan-out as ordersWire (600k rows × per-row encode)
     val li = graft.Tables.fanout(graft.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"),
         col("l_quantity"), col("l_returnflag"), unix_micros(col("l_shipdate")).as("ship_us")))
-    val relFrame = PgOutputEncoder.encode(lineitemRelation)
-    li.as[(Long, Int, Long, Long, Double, String, Long)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      def n = ColumnData('n', None)
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (ok, ln, pk, sk, qty, rf, shipUs) =>
+    frames(typed[(Long, Int, Long, Long, Double, String, Long)](li)) { rows =>
+      Iterator(0L -> lineitemRelation) ++ rows.flatMap { case (ok, ln, pk, sk, qty, rf, shipUs) =>
         val base = ok * 32 + ln * 4
         val ts = PgOutputDecoder.unixMicrosToPgMicros(shipUs)
-        def full(q: Double) = TupleData(Vector(
-          t(ok.toString), t(ln.toString), t(pk.toString), t(sk.toString),
-          t(q.toString), t(rf), t(pgTimestampText(shipUs))))
-        val ins = Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 1, ts, ok.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(LineitemRelId, full(qty))),
-          (base + 1) -> PgOutputEncoder.encode(Commit(0, base + 1, base + 1, ts)))
-        val upd = if ((ok + ln) % 5 == 0) Seq(
-          (base + 2) -> PgOutputEncoder.encode(Update(LineitemRelId, None, None, full(qty + 1.0))))
-        else Nil
-        val del = if ((ok + ln) % 9 == 0) Seq(
-          (base + 3) -> PgOutputEncoder.encode(Delete(LineitemRelId, 'K',
-            TupleData(Vector(t(ok.toString), t(ln.toString), t(pk.toString), t(sk.toString),
-              n, n, n)))))
-        else Nil
+        val key = Vector(ok.toString, ln.toString, pk.toString, sk.toString)
+        def full(q: Double) = text(key ++ Vector(q.toString, rf, pgTimestampText(shipUs)))
+        val ins = Seq[Frame](
+          base -> Begin(base + 1, ts, ok.toInt),
+          (base + 1) -> Insert(LineitemRelId, full(qty)),
+          (base + 1) -> Commit(0, base + 1, base + 1, ts))
+        val upd =
+          if ((ok + ln) % 5 == 0) Seq((base + 2) -> Update(LineitemRelId, None, None, full(qty + 1.0)))
+          else Nil
+        val del =
+          if ((ok + ln) % 9 == 0)
+            Seq((base + 3) -> Delete(LineitemRelId, 'K', TupleData(key.map(t) ++ Vector.fill(3)(NullCol))))
+          else Nil
         ins ++ upd ++ del
       }
-      rel ++ dml
     }
   }
 
@@ -871,28 +681,23 @@ object CdcPipeline {
     * reference's pydantic validation raises and stops its single-threaded
     * callback loop (reference reader.py:274-292). */
   def ordersToFramesCorrupted(
-      spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = k * 8
-        val commitTs = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        val priceCol = if (k % 13 == 0) t(s"bad-price-$k") else t(price.toString)
-        val custCol = if (k % 17 == 0) ColumnData('n', None) else t(cust.toString)
-        val tuple = TupleData(Vector(
-          t(k.toString), custCol, t(status), priceCol,
-          t(pgTimestampText(dateUs)), t(prio)))
-        Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, commitTs, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(OrdersRelId, tuple)),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, commitTs)))
-      }
-      rel ++ dml
+      spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    ordersInserted(spark, sfDir, ordersRelation) { o =>
+      val cs = o.texts(if (o.k % 13 == 0) s"bad-price-${o.k}" else o.price.toString).map(t)
+      TupleData(if (o.k % 17 == 0) cs.updated(1, NullCol) else cs)
     }
+
+  /** Snapshot-chunk rows (chunk_id, lo_lsn, hi_lsn, key, after) with
+    * wire-text maps: `state` gives a row's chunk, watermarks and price at
+    * its low watermark, or None where the row is already deleted there. */
+  private def chunkRows(spark: SparkSession, sfDir: String)(
+      state: OrderRow => Option[(Long, Long, Long, Double)]): DataFrame = {
+    import spark.implicits._
+    ordersWireNarrow(spark, sfDir)
+      .flatMap(o => state(o).map { case (chunk, lo, hi, p) =>
+        (chunk, lo, hi, Map("o_orderkey" -> o.k.toString), o.after(p))
+      })
+      .toDF("chunk_id", "lo_lsn", "hi_lsn", "key", "after")
   }
 
   /** Snapshot of orders taken in pk-range CHUNKS while the WAL streams —
@@ -905,33 +710,20 @@ object CdcPipeline {
     * half sees its keys' events INSIDE the window (the rows the watermark
     * rule must drop) and its second half sees them after hi (chunk row
     * later overridden by the WAL) — both interleavings exercised.
-    * Output: (chunk_id, lo_lsn, hi_lsn, key, after) with wire-text maps,
-    * `after` = null for rows already deleted at lo. */
+    * `after` is absent for rows already deleted at lo. NOT fanned out:
+    * see [[ordersWireNarrow]]. */
   def ordersSnapshotChunks(
       spark: SparkSession, sfDir: String, nChunks: Int = 8): DataFrame = {
-    import spark.implicits._
-    val orders = ordersWireNarrow(spark, sfDir) // see ordersSnapshotChunksFailover
-    val maxKey = orders.agg(max(col("o_orderkey"))).first().getLong(0)
-    val c = maxKey / nChunks + 1
-    orders.as[(Long, Long, String, Double, Long, String)]
-      .flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val chunk = k / c
-        val hi = 8 * c * chunk + 4 * c
-        val lo = hi - 8 * c
-        val updatedAtLo = k % 10 == 0 && 8 * k + 4 <= lo
-        val deletedAtLo = k % 7 == 0 && 8 * k + 7 <= lo
-        if (deletedAtLo) None
-        else {
-          val p = if (updatedAtLo) price + 1.0 else price
-          Some((chunk, lo, hi,
-            Map("o_orderkey" -> k.toString),
-            Map("o_orderkey" -> k.toString, "o_custkey" -> cust.toString,
-              "o_orderstatus" -> status, "o_totalprice" -> p.toString,
-              "o_orderdate" -> pgTimestampText(dateUs),
-              "o_orderpriority" -> prio)))
-        }
-      }
-      .toDF("chunk_id", "lo_lsn", "hi_lsn", "key", "after")
+    val c = ordersMaxKey(spark, sfDir) / nChunks + 1
+    chunkRows(spark, sfDir) { o =>
+      val chunk = o.k / c
+      val hi = 8 * c * chunk + 4 * c
+      val lo = hi - 8 * c
+      val updatedAtLo = o.k % 10 == 0 && 8 * o.k + 4 <= lo
+      val deletedAtLo = o.k % 7 == 0 && 8 * o.k + 7 <= lo
+      if (deletedAtLo) None
+      else Some((chunk, lo, hi, if (updatedAtLo) o.price + 1.0 else o.price))
+    }
   }
 
   /** WAL position the replacement slot is created at in the failover-
@@ -945,55 +737,37 @@ object CdcPipeline {
     8L * (maxKey + 1) + 8L * (2L * (maxKey + 1) / 3L)
 
   /** Post-failover DML epoch — the WAL the PROMOTED primary writes after
-    * the original slot is lost. All LSNs live above every epoch-1 position
-    * (base B = 8·(maxKey+1) + 8k per key), REPLICA IDENTITY FULL:
+    * the original slot is lost, in its own LSN region above epoch 1,
+    * REPLICA IDENTITY FULL:
     *  - k % 35 == 0: re-INSERT of a key epoch 1 deleted (price doubled);
     *  - surviving (k % 7 ≠ 0) k % 4 == 0: UPDATE, price + 10.0;
     *  - surviving k % 9 == 0: DELETE (after any update) —
     * so recovery must apply inserts, value changes AND retirements against
     * the pre-failover state. `maxKey` is threaded in by the caller (one
     * scan-for-a-scalar job shared by the query, this generator, and the
-    * chunk generator — review finding). Same narrow per-partition
-    * generation as [[ordersToFrames]]. */
+    * chunk generator — review finding). */
   def ordersToFramesEpoch2(spark: SparkSession, sfDir: String,
       maxKey: Long): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val orders = ordersWire(spark, sfDir)
     val b0 = 8L * (maxKey + 1)
-    val relFrame = PgOutputEncoder.encode(ordersRelation)
-    orders.as[(Long, Long, String, Double, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val base = b0 + k * 8
-        val ts = PgOutputDecoder.unixMicrosToPgMicros(dateUs)
-        def full(p: Double) = TupleData(Vector(
-          t(k.toString), t(cust.toString), t(status), t(p.toString),
-          t(pgTimestampText(dateUs)), t(prio)))
-        val p1 = if (k % 10 == 0) price + 1.0 else price // epoch-1 end state
-        val alive = k % 7 != 0
-        val reinsert = if (k % 35 == 0) Seq(
-          base -> PgOutputEncoder.encode(Begin(base + 2, ts, k.toInt)),
-          (base + 1) -> PgOutputEncoder.encode(
-            Insert(OrdersRelId, full(price * 2.0))),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, ts)))
-        else Nil
-        val upd = if (alive && k % 4 == 0) Seq(
-          (base + 3) -> PgOutputEncoder.encode(Begin(base + 5, ts, k.toInt)),
-          (base + 4) -> PgOutputEncoder.encode(
-            Update(OrdersRelId, Some('O'), Some(full(p1)), full(p1 + 10.0))),
-          (base + 5) -> PgOutputEncoder.encode(Commit(0, base + 5, base + 5, ts)))
-        else Nil
-        val pAtDelete = if (alive && k % 4 == 0) p1 + 10.0 else p1
-        val del = if (alive && k % 9 == 0) Seq(
-          (base + 6) -> PgOutputEncoder.encode(Begin(base + 8, ts, k.toInt)),
-          (base + 7) -> PgOutputEncoder.encode(
-            Delete(OrdersRelId, 'O', full(pAtDelete))),
-          (base + 8) -> PgOutputEncoder.encode(Commit(0, base + 8, base + 8, ts)))
-        else Nil
+    frames(ordersWire(spark, sfDir)) { rows =>
+      Iterator(0L -> ordersRelation) ++ rows.flatMap { o =>
+        val base = b0 + o.k * 8
+        val p1 = if (o.k % 10 == 0) o.price + 1.0 else o.price // epoch-1 end state
+        val alive = o.k % 7 != 0
+        val updated = alive && o.k % 4 == 0
+        val reinsert =
+          if (o.k % 35 != 0) Nil
+          else txn(base, o.ts, o.xid, Insert(OrdersRelId, o.tuple(o.price * 2.0)))
+        val upd =
+          if (!updated) Nil
+          else txn(base + 3, o.ts, o.xid,
+            Update(OrdersRelId, Some('O'), Some(o.tuple(p1)), o.tuple(p1 + 10.0)))
+        val del =
+          if (!(alive && o.k % 9 == 0)) Nil
+          else txn(base + 6, o.ts, o.xid,
+            Delete(OrdersRelId, 'O', o.tuple(if (updated) p1 + 10.0 else p1)))
         reinsert ++ upd ++ del
       }
-      rel ++ dml
     }
   }
 
@@ -1010,39 +784,28 @@ object CdcPipeline {
   def ordersSnapshotChunksFailover(
       spark: SparkSession, sfDir: String, nChunks: Int,
       maxKey: Long): DataFrame = {
-    import spark.implicits._
     // NOT fanned out: chunk reads build flat Scala maps (no pgoutput
     // encode/decode), and a 32-partition map-typed chunk side into
     // dblogMerge's anti join measured 93% task wait / 4x wall at sf0.1
     // (r9-opt bisect) — the fan-out rationale never applied here.
-    val orders = ordersWireNarrow(spark, sfDir)
     val b0 = 8L * (maxKey + 1)
     val endLsn = b0 + 8L * (maxKey + 1) + 8L
     val slotLsn = failoverNewSlotLsn(maxKey)
     val c = maxKey / nChunks + 1
     val w = (endLsn - slotLsn) / nChunks + 1L
-    orders.as[(Long, Long, String, Double, Long, String)]
-      .flatMap { case (k, cust, status, price, dateUs, prio) =>
-        val chunk = k / c
-        val lo = slotLsn + chunk * w
-        val hi = lo + w
-        val base = b0 + k * 8
-        val p1 = if (k % 10 == 0) price + 1.0 else price
-        val stateAtLo: Option[Double] =
-          if (k % 7 == 0)
-            if (k % 35 == 0 && base + 1 <= lo) Some(price * 2.0) else None
-          else if (k % 9 == 0 && base + 7 <= lo) None
-          else Some(if (k % 4 == 0 && base + 4 <= lo) p1 + 10.0 else p1)
-        stateAtLo.map { p =>
-          (chunk, lo, hi,
-            Map("o_orderkey" -> k.toString),
-            Map("o_orderkey" -> k.toString, "o_custkey" -> cust.toString,
-              "o_orderstatus" -> status, "o_totalprice" -> p.toString,
-              "o_orderdate" -> pgTimestampText(dateUs),
-              "o_orderpriority" -> prio))
-        }
-      }
-      .toDF("chunk_id", "lo_lsn", "hi_lsn", "key", "after")
+    chunkRows(spark, sfDir) { o =>
+      val (k, price) = (o.k, o.price)
+      val chunk = k / c
+      val lo = slotLsn + chunk * w
+      val base = b0 + k * 8
+      val p1 = if (k % 10 == 0) price + 1.0 else price
+      val stateAtLo: Option[Double] =
+        if (k % 7 == 0)
+          if (k % 35 == 0 && base + 1 <= lo) Some(price * 2.0) else None
+        else if (k % 9 == 0 && base + 7 <= lo) None
+        else Some(if (k % 4 == 0 && base + 4 <= lo) p1 + 10.0 else p1)
+      stateAtLo.map(p => (chunk, lo, lo + w, p))
+    }
   }
 
   /** Two publications in ONE replication slot: orders and lineitem frames
@@ -1061,17 +824,17 @@ object CdcPipeline {
     * the union by parity — consumers needing one relation generate only
     * its half instead of encoding both and discarding one. */
   def jointOrdersFrames(spark: SparkSession, sfDir: String,
-      pattern: DmlPattern): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    ordersToFrames(spark, sfDir, pattern).map { case (l, bytes) => (l * 2, bytes) }
-  }
+      pattern: DmlPattern): Dataset[(Long, Array[Byte])] =
+    relocated(ordersToFrames(spark, sfDir, pattern), col("_1") * 2)
 
   /** The joint log's odd-LSN half (lineitem). */
   def jointLineitemFrames(
-      spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    lineitemToFrames(spark, sfDir).map { case (l, bytes) => (l * 2 + 1, bytes) }
-  }
+      spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    relocated(lineitemToFrames(spark, sfDir), col("_1") * 2 + 1)
+
+  /** The same frames at the LSNs `lsn` computes from the old ones. */
+  private def relocated(fs: Dataset[(Long, Array[Byte])], lsn: Column): Dataset[(Long, Array[Byte])] =
+    fs.select(lsn.as("_1"), col("_2")).as(fs.encoder)
 
   val DocumentsRelId = 50003
 
@@ -1086,72 +849,44 @@ object CdcPipeline {
       RelationColumn(partOfKey = false, "source", TypedView.Oid.Text, -1),
       RelationColumn(partOfKey = false, "n_chars", TypedView.Oid.Int8, -1)))
 
-  /** documents → insert-only pgoutput frames, one transaction per document.
-    * LSN = doc_id*4 + {1,2,3}, so arrival order ≡ doc_id order — which is
-    * what lets the online-dedup oracle express "first seen wins" as
-    * MIN(doc_id) per content hash. Same narrow per-partition generation as
-    * [[ordersToFrames]]. */
-  def documentsToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val docs = graft.Tables.fanout(graft.Tables.documents(spark, sfDir))
-      .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-    val relFrame = PgOutputEncoder.encode(documentsRelation)
-    docs.as[(Long, String, String, String, Long)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (id, text, lang, source, nChars) =>
-        val base = id * 4
-        Seq(
-          (base + 1) -> PgOutputEncoder.encode(Begin(base + 3, 0L, id.toInt)),
-          (base + 2) -> PgOutputEncoder.encode(Insert(DocumentsRelId, TupleData(Vector(
-            t(id.toString), t(text), t(lang), t(source), t(nChars.toString))))),
-          (base + 3) -> PgOutputEncoder.encode(Commit(0, base + 3, base + 3, 0L)))
+  private def documentsWire(spark: SparkSession, sfDir: String) =
+    typed[(Long, String, String, String, Long)](graft.Tables.fanout(graft.Tables.documents(spark, sfDir))
+      .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars")))
+
+  /** documents → insert-only pgoutput frames, one transaction per document
+    * at `doc_id*4 + 1…3`, so arrival order ≡ doc_id order — which is what
+    * lets the online-dedup oracle express "first seen wins" as
+    * MIN(doc_id) per content hash. */
+  def documentsToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    frames(documentsWire(spark, sfDir)) { rows =>
+      Iterator(0L -> documentsRelation) ++ rows.flatMap { case (id, txt, lang, source, nChars) =>
+        txn(id * 4 + 1, 0L, id.toInt, Insert(DocumentsRelId,
+          text(Vector(id.toString, txt, lang, source, nChars.toString))))
       }
-      rel ++ dml
     }
-  }
 
   /** documents → frames with FULL DML (the corpus as a LIVING table):
     * every doc inserts; doc_id % 7 == 0 is then UPDATED (text gains a
     * ' zzupdate' suffix) with a REPLICA IDENTITY FULL old image;
     * doc_id % 11 == 0 is DELETED carrying the full CURRENT image (the
     * post-update text when both apply — deletes sort after updates).
-    * LSN = doc_id*16 + offset keeps events distinct and arrival ≡ doc
-    * order. Retraction-grade old images are what incremental index
+    * Stride `doc_id*16` keeps events distinct and arrival ≡ doc order.
+    * Retraction-grade old images are what incremental index
     * maintenance (cdc_incremental_termdf) consumes. */
-  def documentsToFramesDml(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
-    val docs = graft.Tables.fanout(graft.Tables.documents(spark, sfDir))
-      .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
-    val relFrame = PgOutputEncoder.encode(documentsRelation)
-    docs.as[(Long, String, String, String, Long)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (id, text, lang, source, nChars) =>
+  def documentsToFramesDml(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] =
+    frames(documentsWire(spark, sfDir)) { rows =>
+      Iterator(0L -> documentsRelation) ++ rows.flatMap { case (id, txt, lang, source, nChars) =>
         val base = id * 16
-        def tup(tx: String) = TupleData(Vector(
-          t(id.toString), t(tx), t(lang), t(source), t(nChars.toString)))
-        val ins = Seq(
-          (base + 1) -> PgOutputEncoder.encode(Begin(base + 3, 0L, id.toInt)),
-          (base + 2) -> PgOutputEncoder.encode(Insert(DocumentsRelId, tup(text))),
-          (base + 3) -> PgOutputEncoder.encode(Commit(0, base + 3, base + 3, 0L)))
-        val upd = if (id % 7 == 0) Seq(
-          (base + 4) -> PgOutputEncoder.encode(Begin(base + 6, 0L, id.toInt)),
-          (base + 5) -> PgOutputEncoder.encode(Update(DocumentsRelId,
-            Some('O'), Some(tup(text)), tup(text + " zzupdate"))),
-          (base + 6) -> PgOutputEncoder.encode(Commit(0, base + 6, base + 6, 0L)))
-        else Nil
-        val current = if (id % 7 == 0) text + " zzupdate" else text
-        val del = if (id % 11 == 0) Seq(
-          (base + 7) -> PgOutputEncoder.encode(Begin(base + 9, 0L, id.toInt)),
-          (base + 8) -> PgOutputEncoder.encode(Delete(DocumentsRelId, 'O', tup(current))),
-          (base + 9) -> PgOutputEncoder.encode(Commit(0, base + 9, base + 9, 0L)))
-        else Nil
-        ins ++ upd ++ del
+        def tup(tx: String) = text(Vector(id.toString, tx, lang, source, nChars.toString))
+        val current = if (id % 7 == 0) txt + " zzupdate" else txt
+        txn(base + 1, 0L, id.toInt, Insert(DocumentsRelId, tup(txt))) ++
+          (if (id % 7 == 0) txn(base + 4, 0L, id.toInt,
+            Update(DocumentsRelId, Some('O'), Some(tup(txt)), tup(current)))
+          else Nil) ++
+          (if (id % 11 == 0) txn(base + 7, 0L, id.toInt, Delete(DocumentsRelId, 'O', tup(current)))
+          else Nil)
       }
-      rel ++ dml
     }
-  }
 
   val EmbeddingsRelId = 50004
 
@@ -1170,28 +905,17 @@ object CdcPipeline {
     * the vector). Floats render at DOUBLE precision ("0.10000000149011612",
     * not "0.1") so the text→double parse on the consumer side reproduces
     * exactly the float-widened value both engines compute from the parquet
-    * column — bit-identical distances. */
+    * column — bit-identical distances. No transaction framing. */
   def embeddingsToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
     val e = graft.Tables.fanout(graft.Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"), col("label")))
-    val relFrame = PgOutputEncoder.encode(embeddingsRelation)
-    e.as[(Long, Array[Float], Int)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (id, vec, label) =>
-        val base = id * 4
-        val arr = vec.map(_.toDouble.toString).mkString("{", ",", "}")
-        val ins = Seq((base + 1) -> PgOutputEncoder.encode(
-          Insert(EmbeddingsRelId, TupleData(Vector(
-            t(id.toString), t(arr), t(label.toString))))))
-        val del = if (id % 9 == 0) Seq((base + 2) -> PgOutputEncoder.encode(
-          Delete(EmbeddingsRelId, 'O', TupleData(Vector(
-            t(id.toString), t(arr), t(label.toString))))))
-        else Nil
-        ins ++ del
+    frames(typed[(Long, Array[Float], Int)](e)) { rows =>
+      Iterator(0L -> embeddingsRelation) ++ rows.flatMap { case (id, vec, label) =>
+        val tup = text(Vector(
+          id.toString, vec.map(_.toDouble.toString).mkString("{", ",", "}"), label.toString))
+        Seq((id * 4 + 1) -> Insert(EmbeddingsRelId, tup)) ++
+          (if (id % 9 == 0) Seq((id * 4 + 2) -> Delete(EmbeddingsRelId, 'O', tup)) else Nil)
       }
-      rel ++ dml
     }
   }
 
@@ -1214,27 +938,19 @@ object CdcPipeline {
     * later DELETED with a REPLICA IDENTITY FULL old image (late
     * invalidation — bot/abuse traffic retracted after the fact), which is
     * exactly the retraction the delta-maintained baseline must absorb.
-    * LSN = event_id*4 + offset keeps arrival ≡ event order. */
+    * Stride `event_id*4` keeps arrival ≡ event order; no transaction
+    * framing. */
   def eventsToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
     val ev = graft.Tables.fanout(graft.Tables.events(spark, sfDir))
       .select(col("event_id"),
         concat_ws("|", col("event_type"), hour(col("ts"))).as("etype_hr"),
         round(col("value") * 100).cast("long").as("cents"))
-    val relFrame = PgOutputEncoder.encode(eventsRelation)
-    ev.as[(Long, String, Long)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.flatMap { case (id, key, cents) =>
-        val base = id * 4
-        def tup = TupleData(Vector(t(id.toString), t(key), t(cents.toString)))
-        val ins = Seq((base + 1) -> PgOutputEncoder.encode(Insert(EventsRelId, tup)))
-        val del = if (id % 13 == 0) Seq((base + 2) -> PgOutputEncoder.encode(
-          Delete(EventsRelId, 'O', tup)))
-        else Nil
-        ins ++ del
+    frames(typed[(Long, String, Long)](ev)) { rows =>
+      Iterator(0L -> eventsRelation) ++ rows.flatMap { case (id, key, cents) =>
+        val tup = text(Vector(id.toString, key, cents.toString))
+        Seq((id * 4 + 1) -> Insert(EventsRelId, tup)) ++
+          (if (id % 13 == 0) Seq((id * 4 + 2) -> Delete(EventsRelId, 'O', tup)) else Nil)
       }
-      rel ++ dml
     }
   }
 
@@ -1256,26 +972,21 @@ object CdcPipeline {
       // re-parses timestamps
       RelationColumn(partOfKey = false, "etype_hr", TypedView.Oid.Text, -1)))
 
-  /** All events → insert-only pgoutput frames (append-only log, LSN =
-    * event order) — feeds `cdc_forecast_serving` and the streaming
-    * hourly-grid sink behind the Holt-Winters serving view. */
+  /** All events → insert-only pgoutput frames at `event_id*2 + 1` (an
+    * append-only log, no transaction framing) — feeds
+    * `cdc_forecast_serving` and the streaming hourly-grid sink behind the
+    * Holt-Winters serving view. */
   def eventsFullToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
     val ev = graft.Tables.fanout(graft.Tables.events(spark, sfDir))
       .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), round(col("value") * 100).cast("long").as("cents"))
       .withColumn("etype_hr",
         concat_ws("|", col("event_type"), expr("ts_us div 3600000000")))
-    val relFrame = PgOutputEncoder.encode(eventsFullRelation)
-    ev.as[(Long, Long, String, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.map { case (id, us, tpe, cents, key) =>
-        (id * 2 + 1) -> PgOutputEncoder.encode(Insert(EventsFullRelId,
-          TupleData(Vector(t(id.toString), t(us.toString), t(tpe),
-            t(cents.toString), t(key)))))
+    frames(typed[(Long, Long, String, Long, String)](ev)) { rows =>
+      Iterator(0L -> eventsFullRelation) ++ rows.map { case (id, us, tpe, cents, key) =>
+        (id * 2 + 1) -> Insert(EventsFullRelId,
+          text(Vector(id.toString, us.toString, tpe, cents.toString, key)))
       }
-      rel ++ dml
     }
   }
 
@@ -1291,24 +1002,18 @@ object CdcPipeline {
       RelationColumn(partOfKey = false, "ts_us", TypedView.Oid.Int8, -1),
       RelationColumn(partOfKey = false, "event_type", TypedView.Oid.Text, -1)))
 
-  /** view/purchase events → insert-only pgoutput frames (an append-only
-    * behavioral log — nothing retracts a user's action), LSN = event order. */
+  /** view/purchase events → insert-only pgoutput frames at `event_id*2 + 1`
+    * (an append-only behavioral log — nothing retracts a user's action). */
   def eventsUserToFrames(spark: SparkSession, sfDir: String): Dataset[(Long, Array[Byte])] = {
-    import spark.implicits._
     val ev = graft.Tables.fanout(graft.Tables.events(spark, sfDir))
       .filter(col("event_type").isin("view", "purchase"))
       .select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"))
-    val relFrame = PgOutputEncoder.encode(eventsUserRelation)
-    ev.as[(Long, Long, Long, String)].mapPartitions { rows =>
-      def t(v: String) = ColumnData('t', Some(v))
-      val rel = Iterator.single(0L -> relFrame)
-      val dml = rows.map { case (id, user, us, tpe) =>
-        (id * 2 + 1) -> PgOutputEncoder.encode(Insert(EventsUserRelId,
-          TupleData(Vector(t(id.toString), t(user.toString),
-            t(us.toString), t(tpe)))))
+    frames(typed[(Long, Long, Long, String)](ev)) { rows =>
+      Iterator(0L -> eventsUserRelation) ++ rows.map { case (id, user, us, tpe) =>
+        (id * 2 + 1) -> Insert(EventsUserRelId,
+          text(Vector(id.toString, user.toString, us.toString, tpe)))
       }
-      rel ++ dml
     }
   }
 
@@ -1359,32 +1064,21 @@ object CdcPipeline {
     * consumer bootstrap without reading a year of WAL. Scale shape:
     * decode+compact is the standard one-pk-shuffle pipeline; re-encoding
     * is a narrow per-partition map, each output partition self-contained
-    * behind its own leading Relation frame (decodeFrames' contract). LSNs
-    * rescale ×4 to make room for Begin/Commit framing while preserving the
-    * original total order. */
+    * behind its own leading Relation frame (decodeFrames' contract). */
   def compactFrames(events: DataFrame, rel: Relation): Dataset[(Long, Array[Byte])] = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val names = rel.columns.map(_.name)
     val st = Cdc.compactFillingToast(
         events.filter(col("relation_id") === rel.relationId), rel.keyColumnNames)
-      .select(col("lsn"), col("after")).as[(Long, Map[String, String])]
-    val relFrame = PgOutputEncoder.encode(rel)
-    st.mapPartitions { rows =>
-      val dml = rows.flatMap { case (lsn, after) =>
-        val tuple = TupleData(names.toVector.map { n =>
+      .select(col("lsn"), col("after"))
+    frames(typed[(Long, Map[String, String])](st)) { rows =>
+      Iterator(0L -> rel) ++ rows.flatMap { case (lsn, after) =>
+        txn(lsn * 4, 0L, 1, Insert(rel.relationId, TupleData(names.map { n =>
           after.get(n) match {
-            case Some(v) if v != null => ColumnData('t', Some(v))
-            case _ => ColumnData('n', None)
+            case Some(v) if v != null => t(v)
+            case _ => NullCol
           }
-        })
-        val base = lsn * 4
-        Iterator(
-          base -> PgOutputEncoder.encode(Begin(base + 2, 0L, 1)),
-          (base + 1) -> PgOutputEncoder.encode(Insert(rel.relationId, tuple)),
-          (base + 2) -> PgOutputEncoder.encode(Commit(0, base + 2, base + 2, 0L)))
+        })))
       }
-      Iterator.single(0L -> relFrame) ++ dml
     }
   }
 }

@@ -140,10 +140,4 @@ object TypedView {
       rel.columns.map(rc => tryTypedColumn(col("after"), rc).as(rc.name)) :+
         errArray.as("_errors"): _*)
   }
-
-  /** Typed projection keeping envelope metadata columns alongside. */
-  def withTyped(envelope: DataFrame, rel: Relation, image: String = "after"): DataFrame =
-    envelope.select(
-      (envelope.columns.map(col) ++
-        rel.columns.map(rc => typedColumn(col(image), rc))): _*)
 }

@@ -1423,6 +1423,97 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally { conduit.close(); sql.close() }
   }
 
+  test("synthetic wire vs a live walsender: ordersToFrames' update/delete " +
+      "pattern, applied as SQL, decodes to the same per-key ops, relation, " +
+      "image key sets and typed values") {
+    live()
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    sparkStarted = spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, unix_micros}
+    import graft.cdc.CdcPipeline
+    val d = "/root/testdata/sf0.001"
+    val rows = graft.Tables.orders(spark, d).orderBy("o_orderkey").limit(70)
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+        col("o_totalprice"), unix_micros(col("o_orderdate")), col("o_orderpriority"))
+      .collect()
+    val keys = rows.map(_.getLong(0))
+    val updated = keys.filter(_ % 10 == 0)
+    val deleted = keys.filter(_ % 7 == 0)
+    assert(updated.nonEmpty && deleted.nonEmpty)
+    val sql = sqlConn()
+    val conduit = new PgWireConduit("127.0.0.1", port, "postgres", "postgres",
+      None, "graft_slot_syn", "graft_pub_syn", createSlot = true,
+      temporarySlot = true, statusIntervalMs = 500L)
+    try {
+      sql.simpleQuery("CREATE TABLE orders (o_orderkey bigint primary key, " +
+        "o_custkey bigint, o_orderstatus text, o_totalprice double precision, " +
+        "o_orderdate timestamptz, o_orderpriority text)")
+      sql.simpleQuery("CREATE PUBLICATION graft_pub_syn FOR TABLE orders")
+      conduit.start(0L)
+      // DmlPattern(updates = true, deletes = true) as SQL, one txn per
+      // statement, in key order
+      def lit(s: String) = "'" + s.replace("'", "''") + "'"
+      rows.foreach { r =>
+        sql.simpleQuery(s"INSERT INTO orders VALUES (${r.getLong(0)}, ${r.getLong(1)}, " +
+          s"${lit(r.getString(2))}, ${lit(r.getDouble(3).toString)}, " +
+          s"timestamptz '1970-01-01 00:00:00+00' + ${r.getLong(4)} * interval '1 microsecond', " +
+          s"${lit(r.getString(5))})")
+      }
+      updated.foreach(k =>
+        sql.simpleQuery(s"UPDATE orders SET o_totalprice = o_totalprice + 1 WHERE o_orderkey = $k"))
+      deleted.foreach(k => sql.simpleQuery(s"DELETE FROM orders WHERE o_orderkey = $k"))
+
+      val registry = new SchemaRegistry
+      val real = scala.collection.mutable.ArrayBuffer.empty[ChangeEvent]
+      drainUntil(conduit, new ChangeEventBuilder(registry), real)(
+        _.size >= keys.length + updated.length + deleted.length)
+      val synth = CdcPipeline.decodeFrames(CdcPipeline.ordersToFrames(spark, d,
+          CdcPipeline.DmlPattern(updates = true, deletes = true)))
+        .filter(col("key")("o_orderkey").isin(keys.map(_.toString): _*))
+        .orderBy("lsn", "seq")
+      val synthRows = synth.collect()
+
+      // LSNs, xids, timestamps and relation ids differ by construction; the
+      // relation itself must not
+      val realRel = registry.get(real.head.relationId).get
+      val rel = CdcPipeline.ordersRelation
+      assert((realRel.namespace, realRel.name, realRel.replicaIdentity) ===
+        ((rel.namespace, rel.name, rel.replicaIdentity)))
+      assert(realRel.columns === rel.columns)
+
+      // per key: the op sequence and which images ride each event, by key set
+      def keys0(m: scala.collection.Map[String, String]) = Option(m).map(_.keySet.toSet)
+      val realShapes = real.toSeq.groupBy(_.key("o_orderkey")).map { case (k, es) =>
+        k -> es.map(e => (e.op, keys0(e.key), keys0(e.before), keys0(e.after)))
+      }
+      val synthShapes = synthRows.toSeq
+        .groupBy(r => r.getMap[String, String](r.fieldIndex("key"))("o_orderkey"))
+        .map { case (k, rs) => k -> rs.map { r =>
+          def img(c: String) = keys0(r.getMap[String, String](r.fieldIndex(c)))
+          (r.getAs[String]("op"), img("key"), img("before"), img("after"))
+        } }
+      assert(realShapes.keySet === keys.map(_.toString).toSet)
+      assert(realShapes === synthShapes)
+
+      // typed after values: raw float8 and timestamptz text may differ (the
+      // generator writes a fixed 6-digit fraction), the typed values may not
+      def typed(df: org.apache.spark.sql.DataFrame, r: Relation) =
+        TypedView.ofAfter(df.filter(col("after").isNotNull), r)
+          .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      assert(typed(real.toSeq.flatMap(e => Option(e.after)).toDF("after"), realRel) ===
+        typed(synth, rel))
+    } finally {
+      conduit.close()
+      try sql.simpleQuery("DROP PUBLICATION graft_pub_syn") catch { case _: Throwable => () }
+      try sql.simpleQuery("DROP TABLE orders") catch { case _: Throwable => () }
+      sql.close()
+    }
+  }
+
   test("checkpoint restart live: the source resumes from the committed offset " +
       "against a real walsender; replays mint identical message ids") {
     live()

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -32,6 +32,10 @@ class StreamingSpec extends AnyFunSuite {
       d.resolve("part-0.parquet"))
     d.toString
   }
+
+  /** Collects a generator's frames into an LSN-ordered FrameLog at `path`. */
+  private def writeLog(path: String, frames: Dataset[(Long, Array[Byte])]): Unit =
+    FrameLog.write(path, FrameLog.lsnOrdered(frames.collect()))
 
   test("streaming tumbling window + watermark matches the batch computation") {
     // stream the raw parquet (ts normalized by the shared helper — ns-long or µs depending on the
@@ -712,10 +716,8 @@ class StreamingSpec extends AnyFunSuite {
     val stateDir = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     // reuse the batch generator's frames: upserts + deletes over orders
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir,
-      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true))
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir,
+      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true)))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(20000))
     val q = Streams.cdcUpsertSink(env, graft.cdc.CdcPipeline.ordersRelation, stateDir, ckpt)
     q.processAllAvailable(); q.stop()
@@ -739,9 +741,7 @@ class StreamingSpec extends AnyFunSuite {
     // both sites' WAL interleaved in one replay log; small trigger cap so
     // site B's conflicting updates land in LATER micro-batches and must
     // resolve against persisted winners (ts compare, not lsn)
-    val frames = graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(1500))
     val q = Streams.lwwUpsertSink(env, rel, stateDir, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
@@ -764,10 +764,8 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val stateDir = dir.resolve("state").toString
     val rel = graft.cdc.CdcPipeline.ordersRelation
-    val frames = graft.cdc.CdcPipeline.jointOrdersFrames(spark, sfDir,
-      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true))
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.jointOrdersFrames(spark, sfDir,
+      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true)))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(5000))
     val q = Streams.scd2Sink(env, rel, stateDir, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
@@ -793,9 +791,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val stateDir = dir.resolve("state").toString
     val rel = graft.cdc.CdcPipeline.ordersRelation
-    val frames = graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFramesBiDir(spark, sfDir))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(1500))
     val q = Streams.lwwUpsertSinkBucketed(env, rel, stateDir,
       dir.resolve("ckpt").toString, nBuckets = 8)
@@ -841,9 +837,7 @@ class StreamingSpec extends AnyFunSuite {
           "o_orderdate", "o_orderpriority"),
       rel, stateDir, snapshotLsn = 0L)
     // tail: inserts beyond mid + post-pin updates stream into the SAME sink
-    val frames = graft.cdc.CdcPipeline.ordersToFramesTail(spark, sfDir, mid)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFramesTail(spark, sfDir, mid))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(10000))
     val q = Streams.cdcUpsertSink(env, rel, stateDir, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
@@ -870,10 +864,8 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("cdcbucketed")
     val p = dir.resolve("log.bin").toString
     val stateDir = dir.resolve("state").toString
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir,
-      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true))
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir,
+      graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true)))
     // several micro-batches so the incremental path (state read-back) runs
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(5000))
     val q = Streams.cdcUpsertSinkBucketed(env, graft.cdc.CdcPipeline.ordersRelation,
@@ -1269,9 +1261,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.ordersRelation,
       "o_orderpriority", "o_totalprice",
@@ -1294,9 +1284,7 @@ class StreamingSpec extends AnyFunSuite {
     // the events_agg wire relation through the UNCHANGED incrementalAggSink
     val dir = Files.createTempDirectory("incrbase")
     val p = dir.resolve("log.bin").toString
-    val frames = graft.cdc.CdcPipeline.eventsToFrames(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.eventsToFrames(spark, sfDir))
     // cuts land between an insert and its later retraction (id % 13)
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(250))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.eventsRelation,
@@ -1323,9 +1311,7 @@ class StreamingSpec extends AnyFunSuite {
     // O(batch + touched hours), never a corpus rescan
     val dir = Files.createTempDirectory("hwgrid")
     val p = dir.resolve("log.bin").toString
-    val frames = graft.cdc.CdcPipeline.eventsFullToFrames(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.eventsFullToFrames(spark, sfDir))
     // cuts land mid-hour-bucket: partial sums must merge across batches
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(700))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.eventsFullRelation,
@@ -1349,9 +1335,7 @@ class StreamingSpec extends AnyFunSuite {
   test("term-df sink equals the batch incremental index across micro-batches") {
     val dir = Files.createTempDirectory("termdf")
     val p = dir.resolve("log.bin").toString
-    val frames = graft.cdc.CdcPipeline.documentsToFramesDml(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.documentsToFramesDml(spark, sfDir))
     // micro-batch cuts land inside doc txn groups (insert/update/delete of
     // one doc may split across batches — the retraction still nets out)
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(130))
@@ -1411,9 +1395,7 @@ class StreamingSpec extends AnyFunSuite {
       "micro-batches; replay is idempotent") {
     val dir = Files.createTempDirectory("chunkidx")
     val p = dir.resolve("log.bin").toString
-    val frames = graft.cdc.CdcPipeline.documentsToFramesDml(spark, sfDir)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.documentsToFramesDml(spark, sfDir))
     // cuts land inside doc txn groups: an update's retraction (+new chunks,
     // −old chunks) may split across batches and must still net out
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(130))
@@ -1444,9 +1426,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
     val q = Streams.incrementalStatsSink(env, graft.cdc.CdcPipeline.ordersRelation,
       "o_orderpriority", "o_totalprice",
@@ -1583,9 +1563,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val dims = graft.Tables.customer(spark, sfDir)
       .join(graft.Tables.nation(spark, sfDir),
         org.apache.spark.sql.functions.col("c_nationkey") ===
@@ -1613,9 +1591,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     // small batches: deletes/updates retract inserts from EARLIER batches,
     // exercising the negative-delta merge path
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
@@ -1963,9 +1939,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     // several micro-batches + k=2 so deletes of retained extremes force the
     // targeted-rescan path through the co-located table state
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
@@ -1994,9 +1968,7 @@ class StreamingSpec extends AnyFunSuite {
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(
       updates = true, deletes = true, fullImages = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     // Δ⋈dim composition: splice the broadcast-joined nation name into BOTH
     // images as an ordinary envelope column, then the UNCHANGED incremental
     // aggregate sink maintains the per-nation view — no new sink machinery
@@ -2072,9 +2044,7 @@ class StreamingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("scd2stream")
     val p = dir.resolve("log.bin").toString
     val pat = graft.cdc.CdcPipeline.DmlPattern(updates = true, deletes = true)
-    val frames = graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat)
-       .collect() match { case fs => FrameLog.lsnOrdered(fs) }
-    FrameLog.write(p, frames)
+    writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     // several micro-batches so versions open in one batch close in a later one
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
     val q = Streams.scd2Sink(env, graft.cdc.CdcPipeline.ordersRelation,
