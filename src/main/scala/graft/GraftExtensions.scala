@@ -6,14 +6,15 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.functions.{DecodeFrameFunction, PgBinaryTextFunction, StringMetricFunctions, TextNormFunctions, VectorFunctions}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * functions for SQL use. Activate with
+  * functions for SQL use and its one planner strategy. Activate with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`.
   *
-  * Custom planner strategies are intentionally absent: every declared
-  * operator is expressible through built-ins + the expressions registered
-  * here (SURVEY.md §4 — Catalyst provides the rewrites; only the fused
-  * vector kernel needed native code). */
+  * The one strategy plans the CDC fold node ([[graft.cdc.FoldRuns]] →
+  * [[graft.cdc.FoldRunsExec]]), a row kernel no built-in expresses without
+  * a typed object round trip; every other operator is built-ins + the
+  * expressions registered here (SURVEY.md §4). A session built without
+  * these extensions learns the strategy when it first builds the node. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // Serializer pruning for the filter-on-decode shape Spark's own
@@ -22,6 +23,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // never reads. Joins the operator-optimization fixed point, so it
     // composes with predicate pushdown / column pruning in any order.
     e.injectOptimizerRule(_ => SerializerFilterPruning)
+    e.injectPlannerStrategy(_ => graft.cdc.FoldRunsStrategy)
     e.injectFunction((
       FunctionIdentifier(VectorFunctions.fnName),
       VectorFunctions.fnInfo,

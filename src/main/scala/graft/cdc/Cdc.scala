@@ -15,15 +15,10 @@ import org.apache.spark.sql.functions._
   * and folds Truncate events in as a per-table high-water mark: a global
   * aggregate broadcast into a cross join (its own job). The TOAST-repairing
   * [[compactFillingToast]] needs no side job: its shuffle copies each 'T'
-  * row into every partition, and one sorted scan reads the mark first.
+  * row into every partition, and one sorted scan ([[FoldRunsExec]]) reads
+  * the mark first.
   */
 object Cdc {
-
-  /** One event as [[compactFillingToast]]'s fold reads it. Images travel as
-    * key and value arrays, so their entry order survives the typed pass. */
-  private[cdc] final case class FoldEvent(op: String, lsn: Long, seq: Long,
-      k: Seq[String], ak: Seq[String], av: Seq[String], toasted: Seq[String])
-  private[cdc] final case class FoldRow(lsn: Long, seq: Long, ak: Seq[String], av: Seq[String])
 
   /** Envelope events of ONE relation → surviving latest `after` images.
     *
@@ -68,67 +63,26 @@ object Cdc {
     * after, after_toasted`. Each I/U/D row goes to partition
     * `pmod(hash(key), n)` (n = `spark.sql.shuffle.partitions`), each 'T'
     * row to all n; a partition sorts its T rows first, then by (key, lsn,
-    * seq), and [[foldRuns]] folds each key's run in one compiled pass — the
-    * relational form of Postgres's own heap-update semantics. Memory is one
-    * key's accumulated row, whatever the batch or table size.
-    */
+    * seq), and the [[FoldRuns]] node folds each key's run straight over the
+    * sorted `InternalRow`s ([[FoldRunsExec]], with no typed object round
+    * trip) — the relational form of Postgres's own heap-update semantics.
+    * Memory is one key's accumulated row, whatever the batch or table size.
+    * The fold's SQL metrics count output rows, events dropped at or below
+    * the truncate mark, and TOAST fills. */
   def compactFillingToast(events: DataFrame, keyColumns: Seq[String]): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val n = events.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val keys = keyColumns.map(k => element_at(col("key"), lit(k)))
     val isT = col("op") === "T"
     // Explicit I/U/D/T: marker ('B'/'C') and message ('M') rows have no
     // table key and must never enter key-wise folds.
-    events.filter(col("op").isin("I", "U", "D", "T"))
-      .select(col("op"), col("lsn"), col("seq"), array(keys: _*).as("k"),
-        map_keys(col("after")).as("ak"), map_values(col("after")).as("av"),
+    FoldRuns.over(events.filter(col("op").isin("I", "U", "D", "T"))
+      .select(col("op"), col("lsn"), col("seq"), array(keys: _*).as("k"), col("after"),
         col("after_toasted").as("toasted"),
         explode(when(isT, sequence(lit(0), lit(n - 1)))
           .otherwise(array(pmod(hash(keys: _*), lit(n))))).as("pid"))
       .repartitionById(n, col("pid"))
       .sortWithinPartitions(
-        (!isT +: keyColumns.indices.map(col("k")(_))) :+ col("lsn") :+ col("seq"): _*)
-      .as[FoldEvent].mapPartitions(foldRuns)
-      .select(col("lsn"), col("seq"), map_from_arrays(col("ak"), col("av")).as("after"))
-  }
-
-  /** Folds one sorted partition of [[compactFillingToast]]: T rows first,
-    * then each key's events in (lsn, seq) order. Events at or before the
-    * latest 'T' are dropped: the truncated rows no longer exist, so their
-    * images must not survive — nor fill TOAST columns of later events (a
-    * post-truncate INSERT is a fresh row; Postgres can't send 'u' referring
-    * to it). Per event:
-    *   D:             the row is cleared (a later re-insert starts fresh);
-    *   TOAST update:  the row's entries for the toasted columns, then `after`
-    *                  (`map_concat(map_filter(row, …), after)` order);
-    *   anything else: `after`.
-    * A key whose row is set when its run ends yields (last lsn, seq, row). */
-  private def foldRuns(events: Iterator[FoldEvent]): Iterator[FoldRow] = {
-    val in = events.buffered
-    var (markLsn, markSeq) = (Long.MinValue, Long.MinValue)
-    while (in.hasNext && in.head.op == "T") {
-      val t = in.next()
-      if (t.lsn > markLsn || t.lsn == markLsn && t.seq > markSeq) {
-        markLsn = t.lsn; markSeq = t.seq
-      }
-    }
-    def run(): Option[FoldRow] = {
-      val k = in.head.k
-      var row: FoldRow = null
-      while (in.hasNext && in.head.k == k) {
-        val e = in.next()
-        if (e.lsn > markLsn || e.lsn == markLsn && e.seq > markSeq)
-          row =
-            if (e.op == "D" || e.ak == null) null
-            else if (row != null && e.toasted != null && e.toasted.nonEmpty) {
-              val kept = row.ak.indices.filter(i => e.toasted.contains(row.ak(i)))
-              FoldRow(e.lsn, e.seq, kept.map(row.ak) ++ e.ak, kept.map(row.av) ++ e.av)
-            } else FoldRow(e.lsn, e.seq, e.ak, e.av)
-      }
-      Option(row)
-    }
-    Iterator.continually(in).takeWhile(_.hasNext).flatMap(_ => run())
+        (!isT +: keyColumns.indices.map(col("k")(_))) :+ col("lsn") :+ col("seq"): _*))
   }
 
   /** Per-group (±value, ±1) contributions of a change-event batch toward an

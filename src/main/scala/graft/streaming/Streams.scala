@@ -41,9 +41,23 @@ object Streams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, rel, keys, stateDir, retainSnapshots)
+        mergeBatch(staticPlan(batch), rel, keys, stateDir, retainSnapshots)
       }
       .start()
+  }
+
+  /** An upsert sink's micro-batch, planned without adaptive execution.
+    * The merge's one exchange is `repartitionById(n)`, which fixes the
+    * state layout (n files per version): AQE can neither coalesce nor split
+    * it, and would only cut the merge into a shuffle-map job plus a re-planned
+    * write job. Without it a micro-batch is one Spark job. The setting goes
+    * on `batch.sparkSession`, the stream's own clone of the caller's
+    * session, so the caller's session keeps its value; Spark's
+    * `MicroBatchExecution` turns AQE off on that clone in the same way for
+    * stateful queries (`disableAQESupportInStatelessIfUnappropriated`). */
+  private def staticPlan(batch: DataFrame): DataFrame = {
+    batch.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+    batch
   }
 
   /** R1 routing (reader.py:188-197): one envelope stream carrying several
@@ -112,8 +126,14 @@ object Streams {
   private val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "__lsn BIGINT, __seq BIGINT, __after MAP<STRING, STRING>, __key MAP<STRING, STRING>")
 
-  private def readState(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    spark.read.schema(stateSchema).parquet(dirs: _*)
+  /** The columns of every LWW state version ([[mergeLwwCompact]]'s output). */
+  private val lwwStateSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "__op STRING, __ts BIGINT, __origin STRING, __lsn BIGINT, __seq BIGINT, " +
+      "__after MAP<STRING, STRING>, __key MAP<STRING, STRING>")
+
+  private def readState(spark: SparkSession, dirs: Seq[String],
+      schema: org.apache.spark.sql.types.StructType = stateSchema): DataFrame =
+    spark.read.schema(schema).parquet(dirs: _*)
 
   /** (state rows ∪ batch events) → compacted state rows. Previous state rows
     * re-enter the merge as synthetic low-water events so deletes/updates in
@@ -169,7 +189,7 @@ object Streams {
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val spark = batch.sparkSession
     val existing = StateStore.load(stateDir).get("data")
-      .map(v => spark.read.parquet(s"$stateDir/$v"))
+      .map(v => readState(spark, Seq(s"$stateDir/$v"), lwwStateSchema))
     val won = mergeLwwCompact(batch, existing, keys)
     val next = StateStore.newVersion("data")
     won.write.mode("overwrite").parquet(s"$stateDir/$next")
@@ -274,7 +294,7 @@ object Streams {
     val existingDirs = touched.toSeq
       .flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
     val existing =
-      if (existingDirs.nonEmpty) Some(spark.read.parquet(existingDirs: _*))
+      if (existingDirs.nonEmpty) Some(readState(spark, existingDirs, lwwStateSchema))
       else None
     val won = mergeLwwCompact(batch, existing, keys)
       .withColumn("__bucket", bucketOf(col("__key"), keys, n))
@@ -414,7 +434,7 @@ object Streams {
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatchBucketed(batch, rel, keys, stateDir, nBuckets, retainSnapshots)
+        mergeBatchBucketed(staticPlan(batch), rel, keys, stateDir, nBuckets, retainSnapshots)
       }
       .start()
   }

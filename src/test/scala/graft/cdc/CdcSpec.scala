@@ -198,6 +198,39 @@ class CdcSpec extends AnyFunSuite {
       30L -> (Seq("y", "x", "w", "v", "id"), Seq("y3", "x3", "w3", "v3", "2"))))
   }
 
+  test("compactFillingToast folds in FoldRunsExec and pins its SQL metrics") {
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, SerializeFromObjectExec}
+    import spark.implicits._
+    val events = Seq(
+      ev("I", 10, 1, "1", Map("id" -> "1", "v" -> "a")),
+      ev("I", 11, 1, "2", Map("id" -> "2", "v" -> "b")),
+      ev("U", 15, 1, "3", Map("id" -> "3", "v" -> "gone")),
+      ev("T", 20, 1, null, null).copy(key = Map.empty),
+      ev("I", 30, 1, "3", Map("id" -> "3", "v" -> "c", "w" -> "w3")),
+      ev("U", 31, 1, "3", Map("id" -> "3", "v" -> "c2"), toasted = Seq("w")),
+      ev("I", 32, 1, "4", Map("id" -> "4", "v" -> "d")),
+      ev("U", 33, 1, "4", Map("id" -> "4"), toasted = Seq("v")),
+      ev("U", 34, 1, "5", Map("id" -> "5"), toasted = Seq("v")),
+      ev("D", 35, 1, "4", null))
+    val out = Cdc.compactFillingToast(Envelope.frame(spark.createDataset(events)), Seq("id"))
+    val got = out.collect().map(r => r.getLong(0) -> r.getMap[String, String](2)).toMap
+    assert(got === Map(31L -> Map("w" -> "w3", "id" -> "3", "v" -> "c2"),
+      34L -> Map("id" -> "5")))
+    object plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val plan = out.queryExecution.executedPlan
+    val folds = plans.collect(plan) { case f: FoldRunsExec => f }
+    assert(folds.size === 1, plan.toString)
+    // 3 events at or below the truncate (its 4 copies are not events), 2
+    // TOAST fills (key 5's update has no earlier row to fill from), and
+    // the 2 surviving rows
+    assert(folds.head.metrics.map { case (k, m) => k -> m.value } === Map(
+      "numOutputRows" -> 2L, "numTruncated" -> 3L, "numToastFills" -> 2L))
+    assert(plans.collect(plan) {
+      case p: DeserializeToObjectExec => p
+      case p: SerializeFromObjectExec => p
+    }.isEmpty, plan.toString)
+  }
+
   test("plain compact ignores TOAST (documented contrast with compactFillingToast)") {
     val out = compactIds(Seq(
       ev("I", 10, 1, "1", Map("id" -> "1", "v" -> "fat-value")),

@@ -2432,12 +2432,17 @@ class LivePgSpec extends AnyFunSuite with BeforeAndAfterAll {
         }
         // converged NOW (racer DML included, whenever it landed), and the
         // RESUMED query keeps tracking post-recovery DML on the same state
+        // both checks read the one snapshot the wait ended on: a second
+        // read can land on a version the resumed sink just swept
         val d2 = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (stateMap() != tableMap() && System.nanoTime() < d2)
+        var converged = stateMap()
+        while (converged != tableMap() && System.nanoTime() < d2) {
           Thread.sleep(250)
-        assert(stateMap() === tableMap(),
+          converged = stateMap()
+        }
+        assert(converged === tableMap(),
           "existing state + one-call recovery must equal the live table")
-        assert(stateMap()(100L) === "race100")
+        assert(converged(100L) === "race100")
         sql.simpleQuery("UPDATE tfs SET v = 'post' || id WHERE id % 11 = 0")
         sql.simpleQuery("DELETE FROM tfs WHERE id % 13 = 0")
         val want = tableMap()

@@ -689,6 +689,103 @@ class StreamingSpec extends AnyFunSuite {
     assert(got === Seq((3L, "d")))
   }
 
+  /** Runs `body` and counts the Spark jobs it started whose local
+    * properties satisfy `mine`. A barrier job run after `body` orders the
+    * listener bus: once its start has arrived, every earlier job is counted. */
+  private def countJobs(mine: java.util.Properties => Boolean)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val barrier = s"jobs-barrier-${System.nanoTime()}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var barrierSeen = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          if (p.getProperty("spark.jobGroup.id") == barrier) barrierSeen = true
+          else if (mine(p)) counted.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(barrier, "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!barrierSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(barrierSeen)
+    } finally sc.removeSparkListener(listener)
+    counted.get
+  }
+
+  test("one cdcUpsertSink micro-batch over existing state runs exactly 1 Spark job") {
+    val rel = Relation(6, "public", "m", 'd', Vector(
+      RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1),
+      RelationColumn(partOfKey = false, "v", TypedView.Oid.Text, -1)))
+    def t(v: String) = ColumnData('t', Some(v))
+    val dir = Files.createTempDirectory("sinkjobs")
+    val stateDir = dir.resolve("state").toString
+    def log(name: String, frames: (Long, PgOutputMessage)*): String = {
+      val p = dir.resolve(name).toString
+      FrameLog.write(p, (Iterator(0L -> (rel: PgOutputMessage)) ++ frames.iterator)
+        .map { case (lsn, m) => FrameLog.Entry(lsn, PgOutputEncoder.encode(m)) })
+      p
+    }
+    Streams.mergeBatch(spark.read.format("pgcdc").option("path", log("log1.bin",
+      10L -> Begin(13, 1000, 1),
+      11L -> Insert(6, TupleData(Vector(t("1"), t("a")))),
+      12L -> Insert(6, TupleData(Vector(t("2"), t("b")))),
+      13L -> Commit(0, 13, 13, 1000))).load(), rel, Seq("id"), stateDir)
+    // one micro-batch: an update, a delete, a truncate and an insert
+    val p2 = log("log2.bin", 20L -> Begin(25, 2000, 2),
+      21L -> Update(6, None, None, TupleData(Vector(t("1"), t("c")))),
+      22L -> Delete(6, 'K', TupleData(Vector(t("2")))),
+      23L -> Truncate(0, Vector(6)),
+      24L -> Insert(6, TupleData(Vector(t("3"), t("d")))),
+      25L -> Commit(0, 25, 25, 2000))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    var queryId = ""
+    val batchJobs = countJobs(p => p.getProperty("sql.streaming.queryId") == queryId &&
+        p.getProperty("streaming.sql.batchId") == "0") {
+      val q = Streams.cdcUpsertSink(spark.readStream.format("pgcdc").option("path", p2).load(),
+        rel, stateDir, dir.resolve("ckpt").toString)
+      queryId = q.id.toString
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(batchJobs === 1, s"the micro-batch ran $batchJobs jobs")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === aqe,
+      "the sink must not change the caller's session")
+    val got = Streams.materializedState(spark, rel, stateDir)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(got === Seq((3L, "d")))
+  }
+
+  test("mergeLwwBatch over existing state runs 2 Spark jobs (no schema inference)") {
+    import spark.implicits._
+    val rel = Relation(9, "public", "lw", 'd', Vector(
+      RelationColumn(partOfKey = true, "id", TypedView.Oid.Text, -1),
+      RelationColumn(partOfKey = false, "v", TypedView.Oid.Text, -1)))
+    val stateDir = Files.createTempDirectory("lwwjobs").resolve("state").toString
+    def ev(op: String, lsn: Long, ts: Long, origin: String, id: String, v: String) =
+      ChangeEvent(op, s"$lsn-1", lsn, 1, 1, lsn, ts, "public", "lw", 9, Map("id" -> id),
+        null, if (op == "D") null else Map("id" -> id, "v" -> v), Nil, Nil, origin)
+    def env(events: ChangeEvent*) = Envelope.frame(spark.createDataset(events))
+    Streams.mergeLwwBatch(env(ev("I", 10, 100, null, "1", "a"),
+      ev("I", 11, 200, "site_b", "2", "b")), rel, Seq("id"), stateDir)
+    val b2 = env(ev("D", 1000, 300, "site_b", "2", null), ev("I", 12, 50, null, "1", "stale"),
+      ev("I", 13, 400, null, "3", "c"))
+    val group = s"lww-jobs-${System.nanoTime()}"
+    val jobs = countJobs(_.getProperty("spark.jobGroup.id") == group) {
+      spark.sparkContext.setJobGroup(group, "one mergeLwwBatch")
+      try Streams.mergeLwwBatch(b2, rel, Seq("id"), stateDir)
+      finally spark.sparkContext.clearJobGroup()
+    }
+    // the window's shuffle-map job and the write: the state is read with
+    // its fixed schema, so no job infers it from parquet footers
+    assert(jobs === 2, s"mergeLwwBatch ran $jobs jobs")
+    val got = Streams.lwwState(spark, rel, stateDir)
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(got === Seq(("1", "a"), ("3", "c")))
+  }
+
   test("jsonEnvelope renders one parseable JSON document per event (K1 default sink)") {
     val rel = Relation(5, "public", "j", 'd', Vector(
       RelationColumn(partOfKey = true, "id", TypedView.Oid.Int8, -1)))
