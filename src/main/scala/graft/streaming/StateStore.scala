@@ -3,6 +3,9 @@ package graft.streaming
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, lit, max, struct, sum, when}
+
 /** Crash-safe commits for parquet-backed sink state.
   *
   * Every state rewrite lands in a FRESH version directory (`v-<name>-<id>`)
@@ -18,6 +21,22 @@ import java.nio.file.{Files, StandardCopyOption}
   * high-water mark), so "new data + new watermark" is ONE atomic flip — a
   * crash can no longer publish merged data with a stale watermark, which
   * under replay would double-apply a batch.
+  *
+  * Manifest keys used by the sinks in [[Streams]]; each convention has one
+  * implementation here:
+  *  - `data`: the one version of a flat state ([[dataVersion]]);
+  *    `data:<relationId>` per relation in the frontier-gated sink;
+  *  - `nbuckets`: the bucket modulus of a bucketed layout;
+  *  - `b<idx>`: one version per state bucket; the join view's families
+  *    are `a<b>` (A side), `bb<b>` (B side) and `j<b>` (joined rows)
+  *    ([[promoteBuckets]], [[bucketEntries]]);
+  *  - `seg-<n>`: append-only segments, never rewritten ([[appendSegment]],
+  *    [[segmentDirs]]); `open`: the scd2 sink's open versions;
+  *  - `hwLsn`/`hwSeq`: the `(lsn, seq)` replay high-water ([[HighWater]]);
+  *  - `hw`/`coll`/`applied`: the DBLog backfill's LSN high-water, collision
+  *    keys and applied chunk ids;
+  *  - `hw:<slot>`/`pending`: the frontier-gated sink's per-slot watermarks
+  *    and held-back events.
   *
   * Scale note: this is the same commit shape as a transactional table
   * format's metadata pointer (snapshot files + one atomic pointer swap);
@@ -74,15 +93,16 @@ object StateStore {
   /** Current manifest entries; empty map if no state was ever committed. */
   def load(root: String): Map[String, String] = {
     val f = new File(root, ManifestName)
-    if (!f.exists()) Map.empty
-    else {
-      val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines().filter(_.contains('=')).map { l =>
-        val i = l.indexOf('=')
-        l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-      finally src.close()
-    }
+    if (f.exists()) parse(f) else Map.empty
+  }
+
+  private def parse(f: File): Map[String, String] = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    try src.getLines().filter(_.contains('=')).map { l =>
+      val i = l.indexOf('=')
+      l.substring(0, i) -> l.substring(i + 1)
+    }.toMap
+    finally src.close()
   }
 
   /** Atomically publish `entries` as the new manifest, then sweep every
@@ -157,17 +177,128 @@ object StateStore {
   def loadSnapshot(root: String, seq: Long): Map[String, String] = {
     val f = new File(root, s"$SnapPrefix$seq")
     require(f.exists(), s"snapshot $seq not retained under $root")
-    val src = scala.io.Source.fromFile(f, "UTF-8")
-    try src.getLines().filter(_.contains('=')).map { l =>
-      val i = l.indexOf('=')
-      l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-    finally src.close()
+    parse(f)
   }
 
   /** Fresh (never-reused) version directory name for a logical state name. */
   def newVersion(name: String): String =
     s"$VersionPrefix$name-${java.util.UUID.randomUUID().toString.take(12)}"
+
+  /** Directory of the one `data` version of a flat state; fails when no
+    * state was committed (`what` names the state in the message). */
+  private[streaming] def dataVersion(root: String, what: String): String = {
+    val v = load(root).getOrElse("data",
+      throw new IllegalStateException(s"no committed $what state under $root"))
+    s"$root/$v"
+  }
+
+  /** The `<prefix><idx>` bucket entries of a manifest (digits only, so
+    * `b` never matches `bb<idx>` or another scalar). */
+  private[streaming] def bucketEntries(manifest: Map[String, String],
+      prefix: String = "b"): Map[String, String] = {
+    val key = s"$prefix\\d+"
+    manifest.filter { case (k, _) => k.matches(key) }
+  }
+
+  /** Directories of the `buckets` that hold committed state. */
+  private[streaming] def bucketDirs(root: String, manifest: Map[String, String],
+      buckets: Iterable[Long], prefix: String = "b"): Seq[String] =
+    buckets.toSeq.flatMap(b => manifest.get(s"$prefix$b")).map(v => s"$root/$v")
+
+  /** Stage `df` (which carries a `__bucket` column) in one partitioned
+    * write, promote each of `buckets`' produced partitions to a fresh
+    * `<prefix><b>` version directory, and return `entries` with those keys
+    * set. A bucket that produced no rows (all its keys deleted) loses its
+    * entry. Nothing is visible until the caller commits the entries. In
+    * the dedup, near-dup and phash sinks every touched bucket always
+    * produces rows, so the drop never applies there. */
+  private[streaming] def promoteBuckets(root: String, df: DataFrame,
+      buckets: Iterable[Long], entries: Map[String, String],
+      prefix: String = "b"): Map[String, String] = {
+    val stage = newVersion("stage")
+    df.write.mode("overwrite").partitionBy("__bucket").parquet(s"$root/$stage")
+    buckets.foldLeft(entries) { (m, b) =>
+      val produced = new File(s"$root/$stage/__bucket=$b")
+      if (!produced.exists()) m - s"$prefix$b"
+      else {
+        val v = newVersion(s"$prefix$b")
+        require(produced.renameTo(new File(root, v)),
+          s"failed to promote staged bucket $prefix$b")
+        m + (s"$prefix$b" -> v)
+      }
+    }
+  }
+
+  /** Directory names of the append-only `seg-<n>` segments, sorted. */
+  private[streaming] def segmentDirs(manifest: Map[String, String]): Seq[String] =
+    manifest.collect { case (k, v) if k.startsWith("seg-") => v }.toSeq.sorted
+
+  /** Write `df` as the next append-only segment and return `entries` with
+    * its `seg-<n>` entry (n = the segments `entries` already holds). */
+  private[streaming] def appendSegment(root: String, df: DataFrame,
+      entries: Map[String, String]): Map[String, String] = {
+    val n = entries.keys.count(_.startsWith("seg-"))
+    val dir = newVersion(s"seg$n")
+    df.write.mode("overwrite").parquet(s"$root/$dir")
+    entries + (s"seg-$n" -> dir)
+  }
+
+  /** The `(lsn, seq)` replay high-water of an exactly-once sink (the
+    * `hwLsn`/`hwSeq` entries; `Long.MinValue` before the first commit).
+    * A replayed event at or below it has already been applied. */
+  private[streaming] final case class HighWater(lsn: Long, seq: Long) {
+
+    /** Rows strictly above the mark: the part of a batch not yet applied. */
+    def fresh: Column = struct(col("lsn"), col("seq")) > struct(lit(lsn), lit(seq))
+
+    /** Whether the mark precedes position `(l, s)`, so an event there (a
+      * truncate, say) is newer than the state. */
+    def precedes(l: Long, s: Long): Boolean = l > lsn || (l == lsn && s > seq)
+
+    /** The `hwLsn`/`hwSeq` entries after a batch whose `(lsn, seq)`
+      * maximum is the struct `mx`: the mark never moves back. */
+    def advance(mx: org.apache.spark.sql.Row): Map[String, String] = {
+      val next =
+        if (precedes(mx.getLong(0), mx.getLong(1))) HighWater(mx.getLong(0), mx.getLong(1))
+        else this
+      Map("hwLsn" -> next.lsn.toString, "hwSeq" -> next.seq.toString)
+    }
+
+    /** One probe pass over a batch of a retracting sink: its `(lsn, seq)`
+      * maximum, its newest truncate, and the rows whose old image cannot be
+      * retracted (`bad`, by default an update without a before image).
+      * Fails loudly when any row is bad; `None` for an empty batch. */
+    def probe(batch: DataFrame, sink: String,
+        bad: Column = col("op") === "U" && col("before").isNull,
+        problem: String = "update without a before image",
+        use: String = "aggregate"): Option[HighWater.Probe] = {
+      val p = batch.agg(
+        max(struct(col("lsn"), col("seq"))).as("mx"),
+        max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
+        sum(when(bad, 1L).otherwise(0L)).as("bad")
+      ).first()
+      if (p.isNullAt(0)) None
+      else {
+        require(p.getLong(2) == 0L, s"$sink: $problem — " +
+          s"the table needs REPLICA IDENTITY FULL for $use maintenance")
+        val t = if (p.isNullAt(1)) None
+          else Some((p.getStruct(1).getLong(0), p.getStruct(1).getLong(1)))
+        Some(HighWater.Probe(advance(p.getStruct(0)),
+          t.filter { case (l, s) => precedes(l, s) }))
+      }
+    }
+  }
+
+  private[streaming] object HighWater {
+    def of(manifest: Map[String, String]): HighWater = HighWater(
+      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
+      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+
+    /** What [[HighWater.probe]] found: the advanced `hwLsn`/`hwSeq`
+      * entries, and the batch's newest truncate if it is above the mark. */
+    final case class Probe(advanced: Map[String, String],
+        truncate: Option[(Long, Long)])
+  }
 
   private[streaming] def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.cdc.Cdc
 import graft.decode.Relation
+import StateStore.HighWater
 
 /** Structured-streaming surface (SURVEY.md §2.2 Streaming): envelope
   * streams from the pgcdc source, event-time windows + watermarks,
@@ -24,6 +25,16 @@ object Streams {
     r.load()
   }
 
+  /** The one `foreachBatch` starter of every sink: update mode, the
+    * caller's checkpoint, and `merge` on each micro-batch. */
+  private def sink(df: DataFrame, checkpointDir: String)(
+      merge: DataFrame => Unit): StreamingQuery =
+    df.writeStream
+      .outputMode(OutputMode.Update())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, _: Long) => merge(batch) }
+      .start()
+
   /** CDC upsert materialization sink: per micro-batch, merge the batch's
     * events into the parquet state at `stateDir` by primary key
     * (last-LSN-wins; the foreachBatch realization of SURVEY.md §2.2 Sinks).
@@ -37,13 +48,9 @@ object Streams {
   def cdcUpsertSink(envelope: DataFrame, rel: Relation, stateDir: String,
       checkpointDir: String, retainSnapshots: Int = 1): StreamingQuery = {
     val keys = rel.keyColumnNames
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(staticPlan(batch), rel, keys, stateDir, retainSnapshots)
-      }
-      .start()
+    sink(envelope, checkpointDir) { batch =>
+      mergeBatch(staticPlan(batch), rel, keys, stateDir, retainSnapshots)
+    }
   }
 
   /** An upsert sink's micro-batch, planned without adaptive execution.
@@ -175,13 +182,9 @@ object Streams {
   def lwwUpsertSink(envelope: DataFrame, rel: Relation, stateDir: String,
       checkpointDir: String, retainSnapshots: Int = 1): StreamingQuery = {
     val keys = rel.keyColumnNames
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeLwwBatch(batch, rel, keys, stateDir, retainSnapshots)
-      }
-      .start()
+    sink(envelope, checkpointDir) { batch =>
+      mergeLwwBatch(batch, rel, keys, stateDir, retainSnapshots)
+    }
   }
 
   private[graft] def mergeLwwBatch(batch0: DataFrame, rel: Relation,
@@ -225,7 +228,7 @@ object Streams {
     * lives; every state reader resolves through it. */
   private def manifestDataDirs(manifest: Map[String, String]): Seq[String] =
     manifest.get("data").map(Seq(_)).getOrElse(
-      manifest.collect { case (k, v) if k.matches("b\\d+") => v }.toSeq.sorted)
+      StateStore.bucketEntries(manifest).values.toSeq.sorted)
 
   /** Current LIVE rows of an LWW-merged state (either layout): tombstones
     * filtered, images typed through the relation schema. */
@@ -268,13 +271,9 @@ object Streams {
       checkpointDir: String, nBuckets: Int = 64,
       retainSnapshots: Int = 1): StreamingQuery = {
     val keys = rel.keyColumnNames
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeLwwBatchBucketed(batch, rel, keys, stateDir, nBuckets, retainSnapshots)
-      }
-      .start()
+    sink(envelope, checkpointDir) { batch =>
+      mergeLwwBatchBucketed(batch, rel, keys, stateDir, nBuckets, retainSnapshots)
+    }
   }
 
   private[graft] def mergeLwwBatchBucketed(
@@ -291,26 +290,13 @@ object Streams {
       "Truncate has no cross-site LWW semantics; filter 'T' events before the sink")
     val touched: Array[Long] = probe.getSeq[Long](0).toArray
     if (touched.isEmpty) return
-    val existingDirs = touched.toSeq
-      .flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
+    val existingDirs = StateStore.bucketDirs(stateDir, manifest, touched)
     val existing =
       if (existingDirs.nonEmpty) Some(readState(spark, existingDirs, lwwStateSchema))
       else None
     val won = mergeLwwCompact(batch, existing, keys)
       .withColumn("__bucket", bucketOf(col("__key"), keys, n))
-    val stage = StateStore.newVersion("stage")
-    won.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    var entries = manifest
-    touched.foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      entries -= s"b$b"
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote staged bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    val entries = StateStore.promoteBuckets(stateDir, won, touched, manifest)
     StateStore.commit(stateDir, entries + ("nbuckets" -> n.toString), retainSnapshots)
   }
 
@@ -362,27 +348,15 @@ object Streams {
       else probe.getSeq[Long](0).toArray
     if (touched.isEmpty) return
     // Pruning: only the touched buckets' version directories are opened.
-    val existingDirs = touched.toSeq
-      .flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
+    val existingDirs = StateStore.bucketDirs(stateDir, manifest, touched)
     val existing =
       if (existingDirs.nonEmpty) Some(readState(spark, existingDirs)) else None
     val compacted = mergeCompact(batch, existing, keys)
       .withColumn("__bucket", bucketOf(col("__key"), keys, n))
     // Stage all recompacted buckets in one partitioned write, then promote
-    // each produced bucket to its own uncommitted version directory.
-    val stage = StateStore.newVersion("stage")
-    compacted.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    var entries = manifest
-    touched.foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      entries -= s"b$b" // a bucket whose keys were all deleted empties out
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote staged bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    // each produced bucket to its own uncommitted version directory (a
+    // bucket whose keys were all deleted empties out).
+    val entries = StateStore.promoteBuckets(stateDir, compacted, touched, manifest)
     // One flip commits every touched bucket; the sweep reclaims the stage
     // remnants and the replaced bucket versions (retained snapshots pin
     // theirs — time-travel, and concurrent readers never race the GC).
@@ -404,24 +378,14 @@ object Streams {
       newBuckets: Int): Unit = {
     val keys = rel.keyColumnNames
     val manifest = StateStore.load(stateDir)
-    val bucketEntries = manifest.filter { case (k, _) => k.matches("b\\d+") }
+    val bucketEntries = StateStore.bucketEntries(manifest)
     require(bucketEntries.nonEmpty, s"no bucketed state under $stateDir")
     val st = spark.read.parquet(
       bucketEntries.values.toSeq.sorted.map(v => s"$stateDir/$v"): _*)
     val rebucketed = st
       .withColumn("__bucket", bucketOf(col("__key"), keys, newBuckets))
-    val stage = StateStore.newVersion("stage")
-    rebucketed.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    var entries = manifest -- bucketEntries.keys
-    (0 until newBuckets).foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote re-bucketed bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    val entries = StateStore.promoteBuckets(stateDir, rebucketed,
+      0L until newBuckets, manifest -- bucketEntries.keys)
     StateStore.commit(stateDir, entries + ("nbuckets" -> newBuckets.toString))
   }
 
@@ -430,13 +394,9 @@ object Streams {
       checkpointDir: String, nBuckets: Int = 64,
       retainSnapshots: Int = 1): StreamingQuery = {
     val keys = rel.keyColumnNames
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatchBucketed(staticPlan(batch), rel, keys, stateDir, nBuckets, retainSnapshots)
-      }
-      .start()
+    sink(envelope, checkpointDir) { batch =>
+      mergeBatchBucketed(staticPlan(batch), rel, keys, stateDir, nBuckets, retainSnapshots)
+    }
   }
 
   /** SCD type-2 history sink: maintains the full version-history table
@@ -459,13 +419,7 @@ object Streams {
     * manifest commit. */
   def scd2Sink(envelope: DataFrame, rel: Relation, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeScd2Batch(batch, rel, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeScd2Batch(_, rel, stateDir))
 
   /** R1 routing for history sinks: one envelope stream carrying several
     * relations fans out into one SCD2 history per relation (each merge
@@ -485,16 +439,12 @@ object Streams {
     val spark = batch0.sparkSession
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
+    val hw = HighWater.of(manifest)
+    val fresh = batch.filter(hw.fresh)
     val probe = fresh.agg(
       max(struct(col("lsn"), col("seq"))).as("mx"),
       max(when(col("op") === "T", col("lsn"))).as("tLsn")).first()
     if (probe.isNullAt(0)) return // pure replay: state already reflects it
-    val mx = probe.getStruct(0)
     val truncCol = if (probe.isNullAt(1)) lit(null).cast("long")
                    else lit(probe.getLong(1))
 
@@ -535,25 +485,16 @@ object Streams {
     val cached = resolved.persist()
     val closedSeg = cached.filter(!col("is_current"))
     val openNext = cached.filter(col("is_current"))
-    val segs = manifest.filter { case (k, _) => k.startsWith("seg-") }
-    var entries = segs
-    if (closedSeg.limit(1).count() > 0) {
-      val segDir = StateStore.newVersion(s"seg${segs.size}")
-      closedSeg.write.mode("overwrite").parquet(s"$stateDir/$segDir")
-      entries += (s"seg-${segs.size}" -> segDir)
-    }
+    var entries = manifest.filter { case (k, _) => k.startsWith("seg-") }
+    if (closedSeg.limit(1).count() > 0)
+      entries = StateStore.appendSegment(stateDir, closedSeg, entries)
     if (openNext.limit(1).count() > 0) {
       val openDir = StateStore.newVersion("open")
       openNext.write.mode("overwrite").parquet(s"$stateDir/$openDir")
       entries += ("open" -> openDir)
     }
     cached.unpersist()
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, entries ++ Map(
-      "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, entries ++ hw.advance(probe.getStruct(0)))
   }
 
   /** Offline maintenance for any log-structured sink state (scd2 history,
@@ -565,7 +506,7 @@ object Streams {
     * sink's high-water, open set, and hash buckets ride along unchanged. */
   def compactSegments(spark: SparkSession, stateDir: String): Unit = {
     val m = StateStore.load(stateDir)
-    val segs = m.collect { case (k, v) if k.startsWith("seg-") => v }.toSeq.sorted
+    val segs = StateStore.segmentDirs(m)
     if (segs.length <= 1) return
     val merged = StateStore.newVersion("seg0")
     spark.read.parquet(segs.map(v => s"$stateDir/$v"): _*)
@@ -574,16 +515,11 @@ object Streams {
       m.filterNot { case (k, _) => k.startsWith("seg-") } + ("seg-0" -> merged))
   }
 
-  /** Historical name for the scd2 form of [[compactSegments]]. */
-  def compactScd2Segments(spark: SparkSession, stateDir: String): Unit =
-    compactSegments(spark, stateDir)
-
   /** Full version history maintained by [[scd2Sink]]: the union of every
     * immutable closed segment plus the live open set. */
   def scd2State(spark: SparkSession, stateDir: String): DataFrame = {
     val m = StateStore.load(stateDir)
-    val dirs = m.collect { case (k, v) if k.startsWith("seg-") => v }.toSeq.sorted ++
-      m.get("open")
+    val dirs = StateStore.segmentDirs(m) ++ m.get("open")
     require(dirs.nonEmpty, s"no committed scd2 state under $stateDir")
     spark.read.parquet(dirs.map(v => s"$stateDir/$v"): _*)
   }
@@ -627,13 +563,7 @@ object Streams {
     * buckets, and high-water flip in ONE manifest commit. */
   def onlineDedupSink(envelope: DataFrame, rel: Relation, textCol: String,
       stateDir: String, checkpointDir: String, nBuckets: Int = 64): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeDedupBatch(batch, rel, textCol, stateDir, nBuckets)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeDedupBatch(_, rel, textCol, stateDir, nBuckets))
 
   private[streaming] def mergeDedupBatch(batch0: DataFrame, rel: Relation,
       textCol: String, stateDir: String, nBuckets: Int): Unit = {
@@ -642,12 +572,8 @@ object Streams {
     val pk = rel.keyColumnNames.head
     val batch = batch0.filter(col("relation_id") === rel.relationId && col("op") === "I")
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
-    val docs = fresh.select(
+    val hw = HighWater.of(manifest)
+    val docs = batch.filter(hw.fresh).select(
         element_at(col("after"), pk).as("id"),
         md5(element_at(col("after"), textCol).cast("binary")).as("h"),
         col("lsn"), col("seq"))
@@ -656,10 +582,9 @@ object Streams {
     val probe = docs.agg(max(struct(col("lsn"), col("seq"))).as("mx"),
       collect_set(col("__bucket")).as("bs")).first()
     if (probe.isNullAt(0)) { docs.unpersist(); return } // pure replay / empty
-    val mx = probe.getStruct(0)
     val touched = probe.getSeq[Long](1)
     // Pruning: only the touched buckets' seen-hash dirs are opened.
-    val existingDirs = touched.flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
+    val existingDirs = StateStore.bucketDirs(stateDir, manifest, touched)
     val seen =
       if (existingDirs.nonEmpty) spark.read.parquet(existingDirs: _*)
       else Seq.empty[(String, String)].toDF("h", "keeper")
@@ -674,35 +599,16 @@ object Streams {
         coalesce(col("seen_keeper"), col("batch_keeper")).as("keeper_id"),
         col("lsn"), col("seq"))
       .persist()
-    val segs = manifest.filter { case (k, _) => k.startsWith("seg-") }
-    var entries = manifest
-    val segDir = StateStore.newVersion(s"seg${segs.size}")
-    decisions.write.mode("overwrite").parquet(s"$stateDir/$segDir")
-    entries += (s"seg-${segs.size}" -> segDir)
-    // touched buckets absorb this batch's new keepers (staged partitioned
-    // write, per-bucket promotion — same protocol as mergeBatchBucketed)
+    val withSeg = StateStore.appendSegment(stateDir, decisions, manifest)
+    // touched buckets absorb this batch's new keepers (same staged
+    // promotion as mergeBatchBucketed)
     val merged = seen
       .unionByName(decisions.filter(col("is_keeper"))
         .select(col("h"), col("id").as("keeper")))
       .withColumn("__bucket", pmod(xxhash64(col("h")), lit(nBuckets)))
-    val stage = StateStore.newVersion("stage")
-    merged.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    touched.foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote staged dedup bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    val entries = StateStore.promoteBuckets(stateDir, merged, touched, withSeg)
     docs.unpersist(); decisions.unpersist()
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, entries ++ Map(
-      "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, entries ++ hw.advance(probe.getStruct(0)))
   }
 
   /** Online NEAR-dup detection at CDC ingest: the MinHash/LSH analog of
@@ -724,13 +630,8 @@ object Streams {
   def onlineNearDupSink(envelope: DataFrame, rel: Relation, textCol: String,
       stateDir: String, checkpointDir: String, nBuckets: Int = 64,
       minEstSim: Option[Double] = None): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeNearDupBatch(batch, rel, textCol, stateDir, nBuckets, minEstSim)
-      }
-      .start()
+    sink(envelope, checkpointDir)(
+      mergeNearDupBatch(_, rel, textCol, stateDir, nBuckets, minEstSim))
 
   /** One micro-batch of the near-dup sink. `minEstSim = None` flags on any
     * band collision (the raw LSH candidate semantics); `Some(τ)` adds the
@@ -746,18 +647,15 @@ object Streams {
     val pk = rel.keyColumnNames.head
     val batch = batch0.filter(col("relation_id") === rel.relationId && col("op") === "I")
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+    val hw = HighWater.of(manifest)
     val docs = batch
-      .filter(struct(col("lsn"), col("seq")) > struct(lit(hwLsn), lit(hwSeq)))
+      .filter(hw.fresh)
       .select(element_at(col("after"), pk).as("id"),
         element_at(col("after"), textCol).as("text"),
         col("lsn"), col("seq"))
       .persist()
     val probe = docs.agg(max(struct(col("lsn"), col("seq")))).first()
     if (probe.isNullAt(0)) { docs.unpersist(); return } // pure replay / empty
-    val mx = probe.getStruct(0)
     // per-batch signatures + band keys (identical hashing to the corpus path)
     val bands = graft.queries.DedupQueries
       .bandKeysWithSig(graft.queries.DedupQueries.minhashSigsOf(
@@ -768,7 +666,7 @@ object Streams {
       .persist()
     val touched = bands.select(collect_set(col("__bucket"))).first()
       .getSeq[Long](0)
-    val existingDirs = touched.flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
+    val existingDirs = StateStore.bucketDirs(stateDir, manifest, touched)
     val seen = // all prior holders of the touched band keys, with signatures
       if (existingDirs.nonEmpty) spark.read.parquet(existingDirs: _*)
       else Seq.empty[(String, String, Long, Long, Seq[String])]
@@ -795,11 +693,7 @@ object Streams {
       .select(col("id"), col("p").isNotNull.as("is_neardup"),
         col("p").getField("d").as("dup_of"), col("lsn"), col("seq"))
       .persist()
-    val segs = manifest.filter { case (k, _) => k.startsWith("seg-") }
-    var entries = manifest
-    val segDir = StateStore.newVersion(s"seg${segs.size}")
-    decisions.write.mode("overwrite").parquet(s"$stateDir/$segDir")
-    entries += (s"seg-${segs.size}" -> segDir)
+    val withSeg = StateStore.appendSegment(stateDir, decisions, manifest)
     // every batch doc's bands (with signature) enter the state — a flagged
     // near-dup still anchors future candidates, exactly as in the batch
     // pair semantics. The state IS the incrementally-maintained LSH index.
@@ -808,24 +702,9 @@ object Streams {
         col("lsn").as("hlsn"), col("seq").as("hseq"), col("sig").as("hsig"))
     val mergedState = seen.unionByName(newHolders)
       .withColumn("__bucket", pmod(xxhash64(col("bucket")), lit(nBuckets)))
-    val stage = StateStore.newVersion("stage")
-    mergedState.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    touched.foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote staged near-dup bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    val entries = StateStore.promoteBuckets(stateDir, mergedState, touched, withSeg)
     docs.unpersist(); bands.unpersist(); decisions.unpersist()
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, entries ++ Map(
-      "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, entries ++ hw.advance(probe.getStruct(0)))
   }
 
   /** Online MEDIA near-dup at CDC ingest — the perceptual-hash analog of
@@ -839,13 +718,8 @@ object Streams {
   def onlinePhashSink(envelope: DataFrame, rel: Relation, payloadCol: String,
       stateDir: String, checkpointDir: String, nBuckets: Int = 64,
       maxHamming: Int = 3): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergePhashBatch(batch, rel, payloadCol, stateDir, nBuckets, maxHamming)
-      }
-      .start()
+    sink(envelope, checkpointDir)(
+      mergePhashBatch(_, rel, payloadCol, stateDir, nBuckets, maxHamming))
 
   private[streaming] def mergePhashBatch(batch0: DataFrame, rel: Relation,
       payloadCol: String, stateDir: String, nBuckets: Int,
@@ -855,18 +729,15 @@ object Streams {
     val pk = rel.keyColumnNames.head
     val batch = batch0.filter(col("relation_id") === rel.relationId && col("op") === "I")
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+    val hw = HighWater.of(manifest)
     val docs = batch
-      .filter(struct(col("lsn"), col("seq")) > struct(lit(hwLsn), lit(hwSeq)))
+      .filter(hw.fresh)
       .select(element_at(col("after"), pk).cast("long").as("id"),
         element_at(col("after"), payloadCol).cast("binary").as("payload"),
         col("lsn"), col("seq"))
       .persist()
     val probe = docs.agg(max(struct(col("lsn"), col("seq")))).first()
     if (probe.isNullAt(0)) { docs.unpersist(); return } // pure replay / empty
-    val mx = probe.getStruct(0)
     // codec-stage hash (identical bit math to the batch mm_phash path),
     // then the 4 pigeonhole block keys per doc
     val hashed = graft.operators.Multimodal
@@ -882,7 +753,7 @@ object Streams {
       .persist()
     val touched = blocks.select(collect_set(col("__bucket"))).first()
       .getSeq[Long](0)
-    val existingDirs = touched.flatMap(b => manifest.get(s"b$b")).map(v => s"$stateDir/$v")
+    val existingDirs = StateStore.bucketDirs(stateDir, manifest, touched)
     val seen = // prior holders of the touched block keys, with full hashes
       if (existingDirs.nonEmpty) spark.read.parquet(existingDirs: _*)
       else Seq.empty[(String, Long, Long, Long, Long)]
@@ -905,11 +776,7 @@ object Streams {
       .select(col("id"), col("p").isNotNull.as("is_neardup"),
         col("p").getField("d").as("dup_of"), col("lsn"), col("seq"))
       .persist()
-    val segs = manifest.filter { case (k, _) => k.startsWith("seg-") }
-    var entries = manifest
-    val segDir = StateStore.newVersion(s"seg${segs.size}")
-    decisions.write.mode("overwrite").parquet(s"$stateDir/$segDir")
-    entries += (s"seg-${segs.size}" -> segDir)
+    val withSeg = StateStore.appendSegment(stateDir, decisions, manifest)
     // flagged docs still anchor future candidates (batch pair semantics);
     // the block-keyed state IS the incrementally-maintained phash index
     val newHolders = blocks
@@ -917,44 +784,24 @@ object Streams {
         col("lsn").as("hlsn"), col("seq").as("hseq"), col("phash").as("hphash"))
     val mergedState = seen.unionByName(newHolders)
       .withColumn("__bucket", pmod(xxhash64(col("bucket")), lit(nBuckets)))
-    val stage = StateStore.newVersion("stage")
-    mergedState.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-    touched.foreach { b =>
-      val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-      if (produced.exists()) {
-        val v = StateStore.newVersion(s"b$b")
-        require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-          s"failed to promote staged phash bucket $b")
-        entries += (s"b$b" -> v)
-      }
-    }
+    val entries = StateStore.promoteBuckets(stateDir, mergedState, touched, withSeg)
     docs.unpersist(); blocks.unpersist(); decisions.unpersist()
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, entries ++ Map(
-      "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, entries ++ hw.advance(probe.getStruct(0)))
   }
 
-  /** Every near-dup decision so far (union of the append-only segments):
-    * (id, is_neardup, dup_of, lsn, seq), one row per ingested doc. */
-  def onlineNearDupDecisions(spark: SparkSession, stateDir: String): DataFrame =
-    onlineDedupDecisions(spark, stateDir)
-
-  /** Every dedup decision made so far (union of the append-only segments):
-    * (id, h, is_keeper, keeper_id, lsn, seq), one row per ingested doc. */
+  /** Every decision of the dedup, near-dup or phash sink so far (union of
+    * the append-only segments), one row per ingested doc: (id, h,
+    * is_keeper, keeper_id, lsn, seq) for dedup, (id, is_neardup, dup_of,
+    * lsn, seq) for near-dup and phash. */
   def onlineDedupDecisions(spark: SparkSession, stateDir: String): DataFrame = {
-    val m = StateStore.load(stateDir)
-    val dirs = m.collect { case (k, v) if k.startsWith("seg-") => v }.toSeq.sorted
+    val dirs = StateStore.segmentDirs(StateStore.load(stateDir))
     require(dirs.nonEmpty, s"no committed dedup decisions under $stateDir")
     spark.read.parquet(dirs.map(v => s"$stateDir/$v"): _*)
   }
 
   /** The seen-hash state (h → keeper id), union of the hash buckets. */
   def onlineDedupSeen(spark: SparkSession, stateDir: String): DataFrame = {
-    val m = StateStore.load(stateDir)
-    val dirs = m.collect { case (k, v) if k.startsWith("b") => v }.toSeq.sorted
+    val dirs = StateStore.bucketEntries(StateStore.load(stateDir)).values.toSeq.sorted
     require(dirs.nonEmpty, s"no committed dedup state under $stateDir")
     spark.read.parquet(dirs.map(v => s"$stateDir/$v"): _*).select(col("h"), col("keeper"))
   }
@@ -969,22 +816,7 @@ object Streams {
     * (REPLICA IDENTITY FULL) on updates — enforced per batch. */
   def incrementalAggSink(envelope: DataFrame, rel: Relation, groupCol: String,
       valueCols: Seq[String], stateDir: String, checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeAggBatch(batch, rel, groupCol, valueCols, stateDir)
-      }
-      .start()
-
-  /** Single-SUM form. */
-  def incrementalAggSink(envelope: DataFrame, rel: Relation, groupCol: String,
-      valueCol: String, stateDir: String, checkpointDir: String): StreamingQuery =
-    incrementalAggSink(envelope, rel, groupCol, Seq(valueCol), stateDir, checkpointDir)
-
-  private[streaming] def mergeAggBatch(batch0: DataFrame, rel: Relation,
-      groupCol: String, valueCol: String, stateDir: String): Unit =
-    mergeAggBatch(batch0, rel, groupCol, Seq(valueCol), stateDir)
+    sink(envelope, checkpointDir)(mergeAggBatch(_, rel, groupCol, valueCols, stateDir))
 
   private[streaming] def mergeAggBatch(batch0: DataFrame, rel: Relation,
       groupCol: String, valueCols: Seq[String], stateDir: String): Unit = {
@@ -995,34 +827,20 @@ object Streams {
     // never pair new data with a stale watermark (which a replay would then
     // double-apply).
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+    val hw = HighWater.of(manifest)
     // One probe pass: batch high-water, newest truncate, missing-old-image
     // guard (an update without `before` makes the retraction uncomputable —
     // fail loudly rather than drift).
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(col("op") === "U" && col("before").isNull, 1L).otherwise(0L)).as("badU")
-    ).first()
-    if (probe.isNullAt(0)) return // no events for this relation
-    require(probe.getLong(2) == 0L,
-      s"incrementalAggSink(${rel.name}): update without a before image — " +
-        "the table needs REPLICA IDENTITY FULL for aggregate maintenance")
-    val mx = probe.getStruct(0)
-    val truncOpt = if (probe.isNullAt(1)) None
-      else Some((probe.getStruct(1).getLong(0), probe.getStruct(1).getLong(1)))
+    val probe = hw.probe(batch, s"incrementalAggSink(${rel.name})") match {
+      case Some(p) => p
+      case None => return // no events for this relation
+    }
     // Replay guard: only events strictly above the stored high-water count.
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
     // A truncate NEWER than the high-water wipes prior aggregate state
     // (aggDeltas drops the batch's own pre-truncate events).
-    val truncates = truncOpt.exists { case (tl, ts) =>
-      tl > hwLsn || (tl == hwLsn && ts > hwSeq) }
-    val delta = Cdc.aggDeltas(fresh, groupCol, valueCols)
+    val delta = Cdc.aggDeltas(batch.filter(hw.fresh), groupCol, valueCols)
     val existing =
-      if (!truncates) manifest.get("data").map(v =>
+      if (probe.truncate.isEmpty) manifest.get("data").map(v =>
         spark.read.parquet(s"$stateDir/$v")
           .select(col("g") +:
             valueCols.map(c => col(s"sum_$c").as(s"dv_$c")) :+
@@ -1036,12 +854,7 @@ object Streams {
       .filter(col("c") > 0)
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Incrementally-maintained TERM-DF view over a documents envelope
@@ -1055,13 +868,7 @@ object Streams {
     * loudly (retraction needs the before text). */
   def termDfSink(envelope: DataFrame, rel: Relation, textCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeTermDfBatch(batch, rel, textCol, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeTermDfBatch(_, rel, textCol, stateDir))
 
   private[streaming] def mergeTermDfBatch(batch0: DataFrame, rel: Relation,
       textCol: String, stateDir: String): Unit =
@@ -1084,9 +891,7 @@ object Streams {
     val spark = batch0.sparkSession
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+    val hw = HighWater.of(manifest)
     // The retraction probe must catch BOTH shapes a non-FULL replica
     // identity produces: an update with no old image at all, AND a
     // delete/update whose key-only old image simply LACKS the derive
@@ -1094,27 +899,16 @@ object Streams {
     // a FULL image derives nothing on both sides and is legal).
     val badImg = col("op").isin("U", "D") &&
       (col("before").isNull || !map_contains_key(col("before"), lit(deriveCol)))
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(badImg, 1L).otherwise(0L)).as("badImg")
-    ).first()
-    if (probe.isNullAt(0)) return
-    require(probe.getLong(2) == 0L,
-      s"$sinkName(${rel.name}): delete/update whose old image lacks '$deriveCol' — " +
-        "the table needs REPLICA IDENTITY FULL for index maintenance")
-    val mx = probe.getStruct(0)
-    val truncOpt = if (probe.isNullAt(1)) None
-      else Some((probe.getStruct(1).getLong(0), probe.getStruct(1).getLong(1)))
-    val fresh0 = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
-    val truncates = truncOpt.exists { case (tl, ts) =>
-      tl > hwLsn || (tl == hwLsn && ts > hwSeq) }
+    val probe = hw.probe(batch, s"$sinkName(${rel.name})", badImg,
+      s"delete/update whose old image lacks '$deriveCol'", "index") match {
+      case Some(p) => p
+      case None => return
+    }
     // a truncate wipes the view AND the batch's own pre-truncate events
-    val fresh = truncOpt match {
-      case Some((tl, ts)) if truncates =>
-        fresh0.filter(struct(col("lsn"), col("seq")) > struct(lit(tl), lit(ts)))
-      case _ => fresh0
+    val fresh0 = batch.filter(hw.fresh)
+    val fresh = probe.truncate match {
+      case Some((tl, ts)) => fresh0.filter(HighWater(tl, ts).fresh)
+      case None => fresh0
     }
     def keysOf(img: String, ops: Seq[String], net: Long) =
       derive(fresh.filter(col("op").isin(ops: _*)), img)
@@ -1122,7 +916,7 @@ object Streams {
     val delta = keysOf("after", Seq("I", "U"), 1L)
       .unionByName(keysOf("before", Seq("U", "D"), -1L))
     val existing =
-      if (!truncates) manifest.get("data").map(v =>
+      if (probe.truncate.isEmpty) manifest.get("data").map(v =>
         spark.read.parquet(s"$stateDir/$v")
           .select(keyCols.map(col) :+ col(countCol).as("__dv"): _*))
       else None
@@ -1131,12 +925,7 @@ object Streams {
       .filter(col(countCol) > 0)
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Incrementally-maintained RAG CHUNK INDEX over a documents envelope
@@ -1147,13 +936,7 @@ object Streams {
     * from the SAME chunking engine text_rag_chunks uses. */
   def chunkIndexSink(envelope: DataFrame, rel: Relation, textCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeChunkIndexBatch(batch, rel, textCol, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeChunkIndexBatch(_, rel, textCol, stateDir))
 
   private[streaming] def mergeChunkIndexBatch(batch0: DataFrame, rel: Relation,
       textCol: String, stateDir: String): Unit =
@@ -1165,20 +948,12 @@ object Streams {
           split(element_at(col(img), textCol), " ").as("ws"))))
 
   /** Current chunk table of [[chunkIndexSink]]. */
-  def chunkIndexState(spark: SparkSession, stateDir: String): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed chunk-index state under $stateDir"))
-    spark.read.parquet(s"$stateDir/$v")
-  }
+  def chunkIndexState(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(StateStore.dataVersion(stateDir, "chunk-index"))
 
   /** Current term → df table of [[termDfSink]]. */
-  def termDfState(spark: SparkSession, stateDir: String): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed term-df state under $stateDir"))
-    spark.read.parquet(s"$stateDir/$v")
-  }
+  def termDfState(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(StateStore.dataVersion(stateDir, "term-df"))
 
   /** Incrementally-maintained mean/variance view over the envelope stream:
     * per-group state is the moment sums (sx, sx2, c) in scaled-integer
@@ -1192,13 +967,8 @@ object Streams {
   def incrementalStatsSink(envelope: DataFrame, rel: Relation, groupCol: String,
       valueCol: String, stateDir: String, checkpointDir: String,
       scale: Int = 2): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeStatsBatch(batch, rel, groupCol, valueCol, scale, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(
+      mergeStatsBatch(_, rel, groupCol, valueCol, scale, stateDir))
 
   private[streaming] def mergeStatsBatch(batch0: DataFrame, rel: Relation,
       groupCol: String, valueCol: String, scale: Int, stateDir: String): Unit = {
@@ -1206,30 +976,16 @@ object Streams {
     val big = org.apache.spark.sql.types.DecimalType(38, 0)
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(col("op") === "U" && col("before").isNull, 1L).otherwise(0L)).as("badU")
-    ).first()
-    if (probe.isNullAt(0)) return
-    require(probe.getLong(2) == 0L,
-      s"incrementalStatsSink(${rel.name}): update without a before image — " +
-        "the table needs REPLICA IDENTITY FULL for aggregate maintenance")
-    val mx = probe.getStruct(0)
-    val truncates = !probe.isNullAt(1) && {
-      val t = probe.getStruct(1)
-      t.getLong(0) > hwLsn || (t.getLong(0) == hwLsn && t.getLong(1) > hwSeq)
+    val hw = HighWater.of(manifest)
+    val probe = hw.probe(batch, s"incrementalStatsSink(${rel.name})") match {
+      case Some(p) => p
+      case None => return
     }
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
-    val delta = Cdc.statsDeltas(fresh, groupCol, valueCol, scale, None)
+    val delta = Cdc.statsDeltas(batch.filter(hw.fresh), groupCol, valueCol, scale, None)
       .select(col("g"), col("dv").cast(big).as("dv"),
         col("dv2").cast(big).as("dv2"), col("dc"))
     val existing =
-      if (!truncates) manifest.get("data").map(v =>
+      if (probe.truncate.isEmpty) manifest.get("data").map(v =>
         spark.read.parquet(s"$stateDir/$v")
           .select(col("g"), col("sx").as("dv"), col("sx2").as("dv2"),
             col("c").as("dc")))
@@ -1241,12 +997,7 @@ object Streams {
       .filter(col("c") > 0)
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Incrementally-maintained JOIN-aggregate view, streaming form (the
@@ -1263,14 +1014,8 @@ object Streams {
       joinKeyCol: String, valueCol: String, dims: DataFrame,
       dimKeyCol: String, dimGroupCol: String,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeJoinAggBatch(batch, rel, joinKeyCol, valueCol,
-          dims, dimKeyCol, dimGroupCol, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeJoinAggBatch(_, rel, joinKeyCol, valueCol,
+      dims, dimKeyCol, dimGroupCol, stateDir))
 
   private[graft] def mergeJoinAggBatch(batch0: DataFrame, rel: Relation,
       joinKeyCol: String, valueCol: String, dims: DataFrame,
@@ -1278,38 +1023,26 @@ object Streams {
     val spark = batch0.sparkSession
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(col("op") === "U" && col("before").isNull, 1L).otherwise(0L)).as("badU")
-    ).first()
-    if (probe.isNullAt(0)) return
-    require(probe.getLong(2) == 0L,
-      s"incrementalJoinAggSink(${rel.name}): update without a before image — " +
-        "the table needs REPLICA IDENTITY FULL for aggregate maintenance")
-    val mx = probe.getStruct(0)
-    val truncates = !probe.isNullAt(1) && {
-      val t = probe.getStruct(1)
-      t.getLong(0) > hwLsn || (t.getLong(0) == hwLsn && t.getLong(1) > hwSeq)
+    val hw = HighWater.of(manifest)
+    val probe = hw.probe(batch, s"incrementalJoinAggSink(${rel.name})") match {
+      case Some(p) => p
+      case None => return
     }
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
     // per-delta enrichment: group key comes from the dim, not the fact
-    val raw = Cdc.aggDeltas(fresh, joinKeyCol, Seq(valueCol))
+    val raw = Cdc.aggDeltas(batch.filter(hw.fresh), joinKeyCol, Seq(valueCol))
     val enriched = raw
       .join(broadcast(dims.select(col(dimKeyCol).cast("string").as("__dk"),
         col(dimGroupCol).as("__dg"))), col("g") === col("__dk"), "left")
     val delta = enriched
       .withColumn("__miss", col("__dg").isNull)
       .select(col("__dg").as("g"), col(s"dv_$valueCol"), col("dc"), col("__miss"))
-    val missing = delta.agg(sum(when(col("__miss"), 1L).otherwise(0L))).first().getLong(0)
+    // the sum is null when every event is a replay (no deltas at all)
+    val miss = delta.agg(sum(when(col("__miss"), 1L).otherwise(0L))).first()
+    val missing = if (miss.isNullAt(0)) 0L else miss.getLong(0)
     require(missing == 0L,
       s"incrementalJoinAggSink(${rel.name}): $missing delta rows have no dim match")
     val existing =
-      if (!truncates) manifest.get("data").map(v =>
+      if (probe.truncate.isEmpty) manifest.get("data").map(v =>
         spark.read.parquet(s"$stateDir/$v")
           .select(col("g"), col(s"sum_$valueCol").as(s"dv_$valueCol"),
             col("c").as("dc"), lit(false).as("__miss")))
@@ -1320,12 +1053,7 @@ object Streams {
       .filter(col("c") > 0)
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Incrementally-maintained two-sided JOIN view: the materialized inner
@@ -1352,13 +1080,8 @@ object Streams {
   def incrementalJoinViewSink(envelope: DataFrame, relA: Relation,
       relB: Relation, joinColA: String, joinColB: String, stateDir: String,
       checkpointDir: String, nBuckets: Int = 16): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeJoinViewBatch(batch, relA, relB, joinColA, joinColB, stateDir, nBuckets)
-      }
-      .start()
+    sink(envelope, checkpointDir)(
+      mergeJoinViewBatch(_, relA, relB, joinColA, joinColB, stateDir, nBuckets))
 
   private[graft] def mergeJoinViewBatch(batch0: DataFrame, relA: Relation,
       relB: Relation, joinColA: String, joinColB: String, stateDir: String,
@@ -1390,8 +1113,7 @@ object Streams {
     if (touched.isEmpty) return
     val manifest = StateStore.load(stateDir)
     def readFamily(prefix: String): Option[DataFrame] = {
-      val dirs = touched.toSeq.flatMap(b => manifest.get(s"$prefix$b"))
-        .map(v => s"$stateDir/$v")
+      val dirs = StateStore.bucketDirs(stateDir, manifest, touched, prefix)
       if (dirs.nonEmpty) Some(readState(spark, dirs)) else None
     }
     val existingA = readFamily("a")
@@ -1412,32 +1134,14 @@ object Streams {
       .select(col("b.__key").as("__key"),
         col("b.__after").as("b_after"), col("a.__after").as("a_after"),
         jb(col("b.__key"), joinColB).as("__bucket"))
-    def stageAndPromote(df: DataFrame, prefix: String,
-        entries0: Map[String, String]): Map[String, String] = {
-      val stage = StateStore.newVersion("stage")
-      df.write.mode("overwrite").partitionBy("__bucket").parquet(s"$stateDir/$stage")
-      var entries = entries0
-      touched.foreach { b =>
-        val produced = new java.io.File(s"$stateDir/$stage/__bucket=$b")
-        entries -= s"$prefix$b"
-        if (produced.exists()) {
-          val v = StateStore.newVersion(s"$prefix$b")
-          require(produced.renameTo(new java.io.File(s"$stateDir/$v")),
-            s"failed to promote staged bucket $prefix$b")
-          entries += (s"$prefix$b" -> v)
-        }
-      }
-      entries
-    }
+    def promote(df: DataFrame, prefix: String, entries: Map[String, String]) =
+      StateStore.promoteBuckets(stateDir, df, touched, entries, prefix)
     var entries = manifest
     if (nA > 0 || hasT)
-      entries = stageAndPromote(
-        newA.withColumn("__bucket", jb(col("__key"), joinColA)), "a", entries)
+      entries = promote(newA.withColumn("__bucket", jb(col("__key"), joinColA)), "a", entries)
     if (nB > 0 || hasT)
-      entries = stageAndPromote(
-        newB.withColumn("__bucket", jb(col("__key"), joinColB)), "bb", entries)
-    entries = stageAndPromote(viewT, "j", entries)
-    StateStore.commit(stateDir, entries)
+      entries = promote(newB.withColumn("__bucket", jb(col("__key"), joinColB)), "bb", entries)
+    StateStore.commit(stateDir, promote(viewT, "j", entries))
   }
 
   /** Streaming DBLog backfill (Cdc.dblogMerge's incremental form): the
@@ -1463,20 +1167,13 @@ object Streams {
     * are few (one or two in flight) by construction of the chunk reader. */
   def dblogBackfillSink(envelope: DataFrame, rel: Relation, chunks: DataFrame,
       stateDir: String, checkpointDir: String): StreamingQuery =
-    envelope
-      // per-batch envelope stats ride StreamingQueryProgress.observedMetrics
-      // (the sink-side analog of the source's ReportsSourceMetrics lag);
-      // chunk/collision progress — manifest state, not batch rows — is read
-      // via [[backfillProgress]]/[[recoveryStatus]].
-      .observe("graft_dblog",
-        count(lit(1)).as("events"), max(col("lsn")).as("max_lsn"))
-      .writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeDblogBatch(batch, rel, chunks, stateDir)
-      }
-      .start()
+    // per-batch envelope stats ride StreamingQueryProgress.observedMetrics
+    // (the sink-side analog of the source's ReportsSourceMetrics lag);
+    // chunk/collision progress — manifest state, not batch rows — is read
+    // via [[backfillProgress]]/[[recoveryStatus]].
+    sink(envelope.observe("graft_dblog",
+        count(lit(1)).as("events"), max(col("lsn")).as("max_lsn")),
+      checkpointDir)(mergeDblogBatch(_, rel, chunks, stateDir))
 
   /** Recovery/backfill progress an operator can poll mid-recovery:
     * chunks applied vs pending, collision evidence held, and the stream's
@@ -1916,13 +1613,7 @@ object Streams {
     val union = envelopes
       .map { case (s, e) => e.withColumn("__slot", lit(s)) }
       .reduce(_ unionByName _)
-    union.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeFrontierBatch(batch, rels, slots, stateDir)
-      }
-      .start()
+    sink(union, checkpointDir)(mergeFrontierBatch(_, rels, slots, stateDir))
   }
 
   // operator-supplied per-(root, slot) watermark bumps for idle slots —
@@ -2029,13 +1720,11 @@ object Streams {
     * map), `b_after`, `a_after` — callers project through the relations'
     * typed views. */
   def joinViewState(spark: SparkSession, stateDir: String): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val dirs = manifest.collect {
-      case (k, v) if k.startsWith("j") => s"$stateDir/$v"
-    }.toSeq
+    val dirs = StateStore.bucketEntries(StateStore.load(stateDir), "j").values.toSeq.sorted
     if (dirs.isEmpty)
       throw new IllegalStateException(s"no committed join view under $stateDir")
-    spark.read.parquet(dirs: _*).select(col("__key"), col("b_after"), col("a_after"))
+    spark.read.parquet(dirs.map(v => s"$stateDir/$v"): _*)
+      .select(col("__key"), col("b_after"), col("a_after"))
   }
 
   /** Incrementally-maintained TOP-K view, streaming form: the state is the
@@ -2049,20 +1738,15 @@ object Streams {
   def incrementalTopKSink(envelope: DataFrame, rel: Relation, groupCol: String,
       valueCol: String, stateDir: String, checkpointDir: String,
       groupType: Option[String] = None): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeTopKBatch(batch, rel, groupCol, valueCol, stateDir, groupType)
-      }
-      .start()
+    sink(envelope, checkpointDir)(
+      mergeTopKBatch(_, rel, groupCol, valueCol, stateDir, groupType))
 
-  def topKFromState(spark: SparkSession, stateDir: String, k: Int): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed top-k state under $stateDir"))
-    Cdc.rankTopK(spark.read.parquet(s"$stateDir/$v"), k)
-  }
+  def topKFromState(spark: SparkSession, stateDir: String, k: Int): DataFrame =
+    Cdc.rankTopK(netCountState(spark, stateDir), k)
+
+  /** The (g, v, net) net-count table [[incrementalTopKSink]] maintains. */
+  private def netCountState(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(StateStore.dataVersion(stateDir, "top-k"))
 
   /** COUNT DISTINCT view over the SAME net-count state the top-k sink
     * maintains — no separate sink, no second state: a group's distinct
@@ -2070,45 +1754,29 @@ object Streams {
     * serves top-k, distinct, and unbounded min/max reads (the
     * materialized-view sharing a warehouse wants: maintain once, answer
     * several aggregates). */
-  def distinctFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed top-k state under $stateDir"))
-    spark.read.parquet(s"$stateDir/$v")
+  def distinctFromState(spark: SparkSession, stateDir: String): DataFrame =
+    netCountState(spark, stateDir)
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n_distinct"), sum(col("net")).as("c"))
-  }
 
   /** Exact MEDIAN view over the SAME net-count state (see
     * [[distinctFromState]] — one maintained table answers top-k, distinct,
     * min/max and now order statistics; Cdc.medianFromNets for semantics). */
-  def medianFromState(spark: SparkSession, stateDir: String): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed top-k state under $stateDir"))
-    Cdc.medianFromNets(spark.read.parquet(s"$stateDir/$v"))
-  }
+  def medianFromState(spark: SparkSession, stateDir: String): DataFrame =
+    Cdc.medianFromNets(netCountState(spark, stateDir))
 
   /** Arbitrary lower p-quantile (p = num/den) over the SAME net-count
     * state — the generalization medianFromState is the num=1, den=2 case
     * of; nothing new is maintained to serve a p95. */
   def quantileFromState(spark: SparkSession, stateDir: String,
-      num: Int, den: Int): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed top-k state under $stateDir"))
-    Cdc.quantileFromNets(spark.read.parquet(s"$stateDir/$v"), num, den)
-  }
+      num: Int, den: Int): DataFrame =
+    Cdc.quantileFromNets(netCountState(spark, stateDir), num, den)
 
   /** Equi-width histogram over the SAME net-count state — counts are
     * additive, so this is a pure projection of the maintained table. */
   def histogramFromState(spark: SparkSession, stateDir: String,
-      widthCents: Long): DataFrame = {
-    val manifest = StateStore.load(stateDir)
-    val v = manifest.getOrElse("data",
-      throw new IllegalStateException(s"no committed top-k state under $stateDir"))
-    Cdc.histogramFromNets(spark.read.parquet(s"$stateDir/$v"), widthCents)
-  }
+      widthCents: Long): DataFrame =
+    Cdc.histogramFromNets(netCountState(spark, stateDir), widthCents)
 
   private[graft] def mergeTopKBatch(batch0: DataFrame, rel: Relation,
       groupCol: String, valueCol: String, stateDir: String,
@@ -2116,40 +1784,21 @@ object Streams {
     val spark = batch0.sparkSession
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(col("op") === "U" && col("before").isNull, 1L).otherwise(0L)).as("badU")
-    ).first()
-    if (probe.isNullAt(0)) return
-    require(probe.getLong(2) == 0L,
-      s"incrementalTopKSink(${rel.name}): update without a before image — " +
-        "the table needs REPLICA IDENTITY FULL for aggregate maintenance")
-    val mx = probe.getStruct(0)
-    val truncates = !probe.isNullAt(1) && {
-      val t = probe.getStruct(1)
-      t.getLong(0) > hwLsn || (t.getLong(0) == hwLsn && t.getLong(1) > hwSeq)
+    val hw = HighWater.of(manifest)
+    val probe = hw.probe(batch, s"incrementalTopKSink(${rel.name})") match {
+      case Some(p) => p
+      case None => return
     }
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
-    val delta = Cdc.netCounts(fresh, groupCol, valueCol, groupType)
+    val delta = Cdc.netCounts(batch.filter(hw.fresh), groupCol, valueCol, groupType)
     val existing =
-      if (!truncates) manifest.get("data").map(v => spark.read.parquet(s"$stateDir/$v"))
+      if (probe.truncate.isEmpty) manifest.get("data").map(v => spark.read.parquet(s"$stateDir/$v"))
       else None
     val merged = existing.map(_.unionByName(delta)).getOrElse(delta)
       .groupBy(col("g"), col("v")).agg(sum(col("net")).as("net"))
       .filter(col("net") > 0)
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Incrementally-maintained MIN/MAX/COUNT view with BOUNDED per-group
@@ -2165,16 +1814,12 @@ object Streams {
       valueCol: String, stateDir: String, tableStateDir: String,
       checkpointDir: String, k: Int = 16,
       groupType: Option[String] = None): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeBatch(batch, rel, rel.keyColumnNames, tableStateDir)
-        mergeMinMaxBatch(batch, rel, groupCol, valueCol, stateDir, k,
-          Some(() => materializedState(batch.sparkSession, rel, tableStateDir)),
-          groupType)
-      }
-      .start()
+    sink(envelope, checkpointDir) { batch =>
+      mergeBatch(batch, rel, rel.keyColumnNames, tableStateDir)
+      mergeMinMaxBatch(batch, rel, groupCol, valueCol, stateDir, k,
+        Some(() => materializedState(batch.sparkSession, rel, tableStateDir)),
+        groupType)
+    }
 
   private[graft] def mergeMinMaxBatch(batch0: DataFrame, rel: Relation,
       groupCol: String, valueCol: String, stateDir: String, k: Int,
@@ -2186,25 +1831,12 @@ object Streams {
     import spark.implicits._
     val batch = batch0.filter(col("relation_id") === rel.relationId)
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
-    val probe = batch.agg(
-      max(struct(col("lsn"), col("seq"))).as("mx"),
-      max(when(col("op") === "T", struct(col("lsn"), col("seq")))).as("t"),
-      sum(when(col("op") === "U" && col("before").isNull, 1L).otherwise(0L)).as("badU")
-    ).first()
-    if (probe.isNullAt(0)) return
-    require(probe.getLong(2) == 0L,
-      s"minMaxAggSink(${rel.name}): update without a before image — " +
-        "the table needs REPLICA IDENTITY FULL for aggregate maintenance")
-    val mx = probe.getStruct(0)
-    val truncates = !probe.isNullAt(1) && {
-      val t = probe.getStruct(1)
-      t.getLong(0) > hwLsn || (t.getLong(0) == hwLsn && t.getLong(1) > hwSeq)
+    val hw = HighWater.of(manifest)
+    val probe = hw.probe(batch, s"minMaxAggSink(${rel.name})") match {
+      case Some(p) => p
+      case None => return
     }
-    val fresh = batch.filter(struct(col("lsn"), col("seq")) >
-      struct(lit(hwLsn), lit(hwSeq)))
+    val fresh = batch.filter(hw.fresh)
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
     val ev = Cdc.survivingEvents(fresh)
     // same wire-text canonicalization as the batch form (Cdc.canonKey):
@@ -2221,7 +1853,7 @@ object Streams {
       .filter(col("net") =!= 0)
       .as[(String, java.math.BigDecimal, Long)]
     val prior: Dataset[GroupState] =
-      if (truncates) spark.emptyDataset[GroupState]
+      if (probe.truncate.nonEmpty) spark.emptyDataset[GroupState]
       else manifest.get("data")
         .map(v => spark.read.parquet(s"$stateDir/$v").as[GroupState])
         .getOrElse(spark.emptyDataset[GroupState])
@@ -2258,30 +1890,20 @@ object Streams {
     val next = StateStore.newVersion("data")
     kept.union(rebuilt).toDF().write.mode("overwrite").parquet(s"$stateDir/$next")
     merged.unpersist()
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, probe.advanced + ("data" -> next))
   }
 
   /** Current (g, mn, mx, c) rows of the bounded MIN/MAX view. */
   def minMaxAggState(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = StateStore.load(stateDir).getOrElse("data",
-      sys.error(s"no committed min/max state under $stateDir"))
     val dec = org.apache.spark.sql.types.DecimalType(28, 6)
-    spark.read.parquet(s"$stateDir/$v")
+    spark.read.parquet(StateStore.dataVersion(stateDir, "min/max"))
       .select(col("g"), col("bottom")(0)("v").cast(dec).as("mn"),
         col("top")(0)("v").cast(dec).as("mx"), col("cnt").as("c"))
   }
 
   /** Current state of an incrementally-maintained aggregate view. */
-  def incrementalAggState(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = StateStore.load(stateDir).getOrElse("data",
-      sys.error(s"no committed aggregate state under $stateDir"))
-    spark.read.parquet(s"$stateDir/$v")
-  }
+  def incrementalAggState(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(StateStore.dataVersion(stateDir, "aggregate"))
 
   /** Streaming replication-monitoring counters (the live twin of the
     * cdc_wire_stats batch report): per-(relation, op) event counts and LSN
@@ -2295,26 +1917,17 @@ object Streams {
     * the batch report covers it where the whole stream is in hand. */
   def wireStatsSink(envelope: DataFrame, stateDir: String,
       checkpointDir: String): StreamingQuery =
-    envelope.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        mergeWireStatsBatch(batch, stateDir)
-      }
-      .start()
+    sink(envelope, checkpointDir)(mergeWireStatsBatch(_, stateDir))
 
   private[streaming] def mergeWireStatsBatch(batch0: DataFrame, stateDir: String): Unit = {
     val spark = batch0.sparkSession
     val batch = batch0.filter(col("op").isin("I", "U", "D", "T", "M"))
     val manifest = StateStore.load(stateDir)
-    val (hwLsn, hwSeq) = (
-      manifest.get("hwLsn").map(_.toLong).getOrElse(Long.MinValue),
-      manifest.get("hwSeq").map(_.toLong).getOrElse(Long.MinValue))
+    val hw = HighWater.of(manifest)
     val probe = batch.agg(max(struct(col("lsn"), col("seq"))).as("mx")).first()
     if (probe.isNullAt(0)) return
-    val mx = probe.getStruct(0)
     val delta = batch
-      .filter(struct(col("lsn"), col("seq")) > struct(lit(hwLsn), lit(hwSeq)))
+      .filter(hw.fresh)
       .groupBy(col("relation_id"), col("op"))
       .agg(count(lit(1)).as("n_events"),
         min(col("lsn")).as("min_lsn"), max(col("lsn")).as("max_lsn"))
@@ -2325,20 +1938,12 @@ object Streams {
         min(col("min_lsn")).as("min_lsn"), max(col("max_lsn")).as("max_lsn"))
     val next = StateStore.newVersion("data")
     merged.write.mode("overwrite").parquet(s"$stateDir/$next")
-    val newLsn = math.max(hwLsn, mx.getLong(0))
-    val newSeq =
-      if (mx.getLong(0) > hwLsn || (mx.getLong(0) == hwLsn && mx.getLong(1) > hwSeq))
-        mx.getLong(1) else hwSeq
-    StateStore.commit(stateDir, Map(
-      "data" -> next, "hwLsn" -> newLsn.toString, "hwSeq" -> newSeq.toString))
+    StateStore.commit(stateDir, hw.advance(probe.getStruct(0)) + ("data" -> next))
   }
 
   /** Current per-(relation, op) monitoring counters. */
-  def wireStats(spark: SparkSession, stateDir: String): DataFrame = {
-    val v = StateStore.load(stateDir).getOrElse("data",
-      sys.error(s"no committed wire-stats state under $stateDir"))
-    spark.read.parquet(s"$stateDir/$v")
-  }
+  def wireStats(spark: SparkSession, stateDir: String): DataFrame =
+    spark.read.parquet(StateStore.dataVersion(stateDir, "wire-stats"))
 
   /** Current typed state of the materialized table (either state layout). */
   def materializedState(spark: SparkSession, rel: Relation, stateDir: String): DataFrame = {

@@ -54,7 +54,7 @@ class IncrementalIvfSpec extends AnyFunSuite {
       .withColumn("before", spliced("before", "cellB"))
       .drop("cellA", "cellB")
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.embeddingsRelation,
-      "cell", "one", dir.resolve("state").toString, dir.resolve("ckpt").toString)
+      "cell", Seq("one"), dir.resolve("state").toString, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
     val got = Streams.incrementalAggState(spark, dir.resolve("state").toString)
       .select(col("g").cast("long"), col("c")).collect()

@@ -59,7 +59,7 @@ class OnlineDedupSpec extends AnyFunSuite {
     val q = Streams.onlineNearDupSink(env, graft.cdc.CdcPipeline.documentsRelation,
       "text", stateDir, dir.resolve("ckpt").toString, nBuckets = 8)
     q.processAllAvailable(); q.stop()
-    val got = Streams.onlineNearDupDecisions(spark, stateDir)
+    val got = Streams.onlineDedupDecisions(spark, stateDir)
       .select(col("id").cast("long"), col("is_neardup"), col("dup_of").cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))
@@ -80,7 +80,7 @@ class OnlineDedupSpec extends AnyFunSuite {
       .option("path", p).load()
     Streams.mergeNearDupBatch(whole, graft.cdc.CdcPipeline.documentsRelation,
       "text", stateDir, 8)
-    val again = Streams.onlineNearDupDecisions(spark, stateDir).count()
+    val again = Streams.onlineDedupDecisions(spark, stateDir).count()
     assert(again === expected.length)
   }
 
@@ -107,7 +107,7 @@ class OnlineDedupSpec extends AnyFunSuite {
       "text", stateDir, dir.resolve("ckpt").toString, nBuckets = 8,
       minEstSim = Some(tau))
     q.processAllAvailable(); q.stop()
-    val got = Streams.onlineNearDupDecisions(spark, stateDir)
+    val got = Streams.onlineDedupDecisions(spark, stateDir)
       .filter(col("is_neardup"))
       .select(col("id").cast("long"), col("dup_of").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq

@@ -286,7 +286,7 @@ class SoakSpec extends AnyFunSuite {
     assert(changed === expectedBuckets,
       s"expected exactly ${expectedBuckets.mkString(",")} to flip, got $changed")
     // decisions: the wave's first doc anchors, every later one flags to it
-    val dec = Streams.onlineNearDupDecisions(spark, stateDir)
+    val dec = Streams.onlineDedupDecisions(spark, stateDir)
       .filter(col("id") >= 10001L)
       .select(col("id").cast("long"), col("is_neardup"), col("dup_of").cast("long"))
       .collect().map(r =>

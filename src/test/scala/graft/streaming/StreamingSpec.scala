@@ -1331,7 +1331,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
       FrameLog.Entry(11, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("1"), t("a"), t("10.0"))))))))
     val b1 = spark.read.format("pgcdc").option("path", p1).load()
-    Streams.mergeAggBatch(b1, rel, "grp", "val", stateDir)
+    Streams.mergeAggBatch(b1, rel, "grp", Seq("val"), stateDir)
     val p2 = dir.resolve("log2.bin").toString
     FrameLog.write(p2, Iterator(
       FrameLog.Entry(0, PgOutputEncoder.encode(rel)),
@@ -1339,7 +1339,7 @@ class StreamingSpec extends AnyFunSuite {
     val b2 = spark.read.format("pgcdc").option("path", p2).load()
     StateStore.failBeforeCommit = true
     try intercept[IllegalStateException] {
-      Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir)
+      Streams.mergeAggBatch(b2, rel, "grp", Seq("val"), stateDir)
     } finally StateStore.failBeforeCommit = false
     def state(): Seq[(String, String, Long)] =
       Streams.incrementalAggState(spark, stateDir).orderBy("g").collect()
@@ -1347,10 +1347,56 @@ class StreamingSpec extends AnyFunSuite {
     // crashed merge published neither data nor watermark
     assert(state() === Seq(("a", "10.000000", 1L)))
     // replay applies the batch exactly once
-    Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir)
+    Streams.mergeAggBatch(b2, rel, "grp", Seq("val"), stateDir)
     assert(state() === Seq(("a", "15.000000", 2L)))
-    Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir) // second replay: no-op
+    Streams.mergeAggBatch(b2, rel, "grp", Seq("val"), stateDir) // second replay: no-op
     assert(state() === Seq(("a", "15.000000", 2L)))
+  }
+
+  test("replaying a batch leaves state rows and hwLsn/hwSeq unchanged (term-df, chunk-index, join-agg, min/max, near-dup)") {
+    val rel = Relation(9, "public", "docs", 'd', Vector(
+      RelationColumn(partOfKey = true, "doc_id", TypedView.Oid.Int8, -1),
+      RelationColumn(partOfKey = false, "grp", TypedView.Oid.Text, -1),
+      RelationColumn(partOfKey = false, "val", TypedView.Oid.Float8, -1),
+      RelationColumn(partOfKey = false, "body", TypedView.Oid.Text, -1)))
+    def t(v: String) = ColumnData('t', Some(v))
+    val dir = Files.createTempDirectory("replayguard")
+    def batch(name: String, rows: (Long, String, String, String, String)*) = {
+      val p = dir.resolve(name).toString
+      FrameLog.write(p, Iterator(FrameLog.Entry(0, PgOutputEncoder.encode(rel))) ++
+        rows.iterator.map { case (lsn, id, g, v, body) => FrameLog.Entry(lsn,
+          PgOutputEncoder.encode(Insert(9, TupleData(Vector(t(id), t(g), t(v), t(body)))))) })
+      spark.read.format("pgcdc").option("path", p).load()
+    }
+    val b1 = batch("b1.bin", (11L, "1", "a", "10.5", "the quick brown fox jumps"),
+      (12L, "2", "b", "3.0", "lazy dogs sleep all day"))
+    val b2 = batch("b2.bin", (21L, "3", "a", "7.25", "the quick brown fox sleeps"))
+    val dims = spark.sql("SELECT * FROM VALUES ('a', 'north'), ('b', 'south') AS d(dk, dg)")
+    type Merge = (org.apache.spark.sql.DataFrame, String) => Unit
+    type Read = String => org.apache.spark.sql.DataFrame
+    val sinks: Seq[(String, Merge, Read)] = Seq(
+      ("term-df", Streams.mergeTermDfBatch(_, rel, "body", _), Streams.termDfState(spark, _)),
+      ("chunk-index", Streams.mergeChunkIndexBatch(_, rel, "body", _),
+        Streams.chunkIndexState(spark, _)),
+      ("join-agg", Streams.mergeJoinAggBatch(_, rel, "grp", "val", dims, "dk", "dg", _),
+        Streams.incrementalAggState(spark, _)),
+      ("min-max", Streams.mergeMinMaxBatch(_, rel, "grp", "val", _, 4, None),
+        Streams.minMaxAggState(spark, _)),
+      ("near-dup", Streams.mergeNearDupBatch(_, rel, "body", _, 4),
+        Streams.onlineDedupDecisions(spark, _)))
+    sinks.foreach { case (name, merge, read) =>
+      val stateDir = dir.resolve(name).toString
+      def state() = (read(stateDir).collect().map(_.toString).sorted.toSeq,
+        StateStore.load(stateDir).filter { case (k, _) => k == "hwLsn" || k == "hwSeq" })
+      merge(b1, stateDir)
+      val first = state()
+      merge(b2, stateDir)
+      val second = state()
+      assert(second._1 !== first._1, s"$name: b2 must change the state rows")
+      assert(second._2 !== first._2, s"$name: b2 must advance the high-water")
+      merge(b2, stateDir)
+      assert(state() === second, s"$name: a replayed b2 must change nothing")
+    }
   }
 
   test("incremental aggregate sink equals the batch delta aggregate across micro-batches") {
@@ -1361,7 +1407,7 @@ class StreamingSpec extends AnyFunSuite {
     writeLog(p, graft.cdc.CdcPipeline.ordersToFrames(spark, sfDir, pat))
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(4000))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.ordersRelation,
-      "o_orderpriority", "o_totalprice",
+      "o_orderpriority", Seq("o_totalprice"),
       dir.resolve("state").toString, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
     val got = Streams.incrementalAggState(spark, dir.resolve("state").toString)
@@ -1385,7 +1431,7 @@ class StreamingSpec extends AnyFunSuite {
     // cuts land between an insert and its later retraction (id % 13)
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(250))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.eventsRelation,
-      "etype_hr", "cents",
+      "etype_hr", Seq("cents"),
       dir.resolve("state").toString, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
     val got = Streams.incrementalAggState(spark, dir.resolve("state").toString)
@@ -1412,7 +1458,7 @@ class StreamingSpec extends AnyFunSuite {
     // cuts land mid-hour-bucket: partial sums must merge across batches
     val env = Streams.envelopeStream(spark, p, maxFramesPerTrigger = Some(700))
     val q = Streams.incrementalAggSink(env, graft.cdc.CdcPipeline.eventsFullRelation,
-      "etype_hr", "cents",
+      "etype_hr", Seq("cents"),
       dir.resolve("state").toString, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
     val grid = Streams.incrementalAggState(spark, dir.resolve("state").toString)
@@ -2083,7 +2129,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("before", spliced("before"))
       .drop("ck", "n_name")
     val q = Streams.incrementalAggSink(enriched, graft.cdc.CdcPipeline.ordersRelation,
-      "n_name", "o_totalprice",
+      "n_name", Seq("o_totalprice"),
       dir.resolve("state").toString, dir.resolve("ckpt").toString)
     q.processAllAvailable(); q.stop()
     val got = Streams.incrementalAggState(spark, dir.resolve("state").toString)
@@ -2117,14 +2163,14 @@ class StreamingSpec extends AnyFunSuite {
         Some(TupleData(Vector(t("2"), t("a"), t("2.0")))),
         TupleData(Vector(t("2"), t("b"), t("3.0"))))))))  // group move a→b
     val b1 = spark.read.format("pgcdc").option("path", p1).load()
-    Streams.mergeAggBatch(b1, rel, "grp", "val", stateDir)
+    Streams.mergeAggBatch(b1, rel, "grp", Seq("val"), stateDir)
     def state(): Seq[(String, String, Long)] =
       Streams.incrementalAggState(spark, stateDir).orderBy("g").collect()
         .map(r => (r.getString(0), r.getDecimal(1).toPlainString, r.getLong(2))).toSeq
     val once = state()
     assert(once === Seq(("a", "10.500000", 1L), ("b", "10.000000", 2L)))
     // replay the SAME batch (crash before checkpoint commit): no double count
-    Streams.mergeAggBatch(b1, rel, "grp", "val", stateDir)
+    Streams.mergeAggBatch(b1, rel, "grp", Seq("val"), stateDir)
     assert(state() === once)
     // batch 2: truncate + fresh insert → state = post-truncate rows only
     val p2 = dir.resolve("log2.bin").toString
@@ -2133,7 +2179,7 @@ class StreamingSpec extends AnyFunSuite {
       FrameLog.Entry(20, PgOutputEncoder.encode(Truncate(0, Vector(6)))),
       FrameLog.Entry(21, PgOutputEncoder.encode(Insert(6, TupleData(Vector(t("9"), t("c"), t("1.25"))))))))
     val b2 = spark.read.format("pgcdc").option("path", p2).load()
-    Streams.mergeAggBatch(b2, rel, "grp", "val", stateDir)
+    Streams.mergeAggBatch(b2, rel, "grp", Seq("val"), stateDir)
     assert(state() === Seq(("c", "1.250000", 1L)))
   }
 
@@ -2258,7 +2304,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(hist() === Seq(("a", 11L, 12L), ("b", 12L, 20L), ("c", 20L, -1L)))
     // offline segment compaction: layout folds to one segment, content
     // identical, open set and high-water untouched
-    Streams.compactScd2Segments(spark, stateDir)
+    Streams.compactSegments(spark, stateDir)
     val m3 = StateStore.load(stateDir)
     assert(m3.keys.count(_.startsWith("seg-")) === 1, m3.toString)
     assert(m3("open") === m2("open") && m3("hwLsn") === m2("hwLsn"))
@@ -2307,7 +2353,7 @@ class StreamingSpec extends AnyFunSuite {
         TupleData(Vector(t("1"), t("a"), t("2.0"))))))))
     val b = spark.read.format("pgcdc").option("path", p).load()
     val e = intercept[IllegalArgumentException] {
-      Streams.mergeAggBatch(b, rel, "grp", "val", dir.resolve("state").toString)
+      Streams.mergeAggBatch(b, rel, "grp", Seq("val"), dir.resolve("state").toString)
     }
     assert(e.getMessage.contains("REPLICA IDENTITY FULL"))
   }
